@@ -56,20 +56,15 @@ object Layout {
       b
     }
 
-  /** Shared memo key for the standing-index builders (ADVICE r14: the
-    * per-family keys hashed only fixture dir + bucket count, so a
-    * second session in the same JVM with a DIFFERENT warehouse was
-    * served table names that resolve in the wrong — or no — catalog).
-    * The key now discriminates on the session's warehouse dir too; the
-    * managed tables live there, so (warehouse, fixture, buckets)
-    * uniquely identifies the landed bytes. All index memos (gram,
-    * text-LSH, embedding-LSH × standing/absorbed/purged/refrozen)
-    * route through here. Remaining documented assumption: the fixture
-    * dir is IMMUTABLE for the process lifetime — an in-place
-    * regeneration at unchanged byte size would be served a stale
-    * index; regenerate into a new path (the driver's testdata
-    * discipline) or restart the process. */
-  def indexMemoKey(s: SparkSession, dir: String, buckets: Int): String =
+  /** Name suffix of the standing-index tables: a digest of the
+    * session's warehouse dir (ADVICE r14), the absolute fixture dir and
+    * the bucket count — the identity of the landed bytes. Build-once
+    * is engine.Memo's job; this only names the tables. Remaining
+    * documented assumption: the fixture dir is IMMUTABLE for the
+    * context's lifetime — an in-place regeneration at unchanged byte
+    * size would be served a stale index; regenerate into a new path
+    * (testdata dirs are never rewritten in place) or restart the context. */
+  def indexSuffix(s: SparkSession, dir: String, buckets: Int): String =
     Tables.md5hex(s.conf.get("spark.sql.warehouse.dir", "") + "|" +
       new java.io.File(dir).getAbsolutePath) + s"b$buckets"
 
@@ -566,8 +561,10 @@ object Layout {
     parts.toLong
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
+  /** Delete `f` and everything under it; throws if anything stays. */
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
+    if (f.isDirectory)
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     // Files.delete throws on failure — a silently half-deleted `.old`
     // would make the subsequent ATOMIC_MOVE onto it fail confusingly.
     if (f.exists()) java.nio.file.Files.delete(f.toPath)

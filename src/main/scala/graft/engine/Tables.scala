@@ -15,44 +15,6 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Session-memo reaper (r18, ADVICE r17 low): the engine's
-    * session-keyed memo maps (table relations here, the semantic/LSH
-    * pair memos in Retrieval, the media fixture in Multimodal) evicted
-    * stopped sessions only on the NEXT lookup — a process that stops a
-    * session and never touches a memo path again retained the dead
-    * session's DataFrames (and localCheckpoint RDD block references)
-    * indefinitely. Each memo map registers one idempotent sweep hook
-    * (`removeIf(stopped)`) at class init; each memo INSERT calls
-    * `watch(session)`, which attaches one listener per SparkContext;
-    * application end then runs every sweep. Hooks are sweeps, not
-    * per-entry closures, so duplicate registration is impossible and
-    * a sweep triggered by ANY context's end also clears other
-    * already-stopped sessions' leftovers. */
-  object MemoReaper {
-    private val hooks =
-      new java.util.concurrent.CopyOnWriteArrayList[() => Unit]()
-    private val watched = java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[
-        org.apache.spark.SparkContext, java.lang.Boolean]())
-    /** Register a sweep that drops stopped sessions' entries. Called
-      * once per memo map. */
-    def hook(sweep: () => Unit): Unit = hooks.add(sweep)
-    /** Ensure `s`'s context triggers the sweeps when it ends. Called
-      * on every memo insert (idempotent per context). */
-    def watch(s: SparkSession): Unit = {
-      val sc = s.sparkContext
-      if (!sc.isStopped && watched.add(sc))
-        sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
-              : Unit = {
-            hooks.forEach(f => f())
-            watched.remove(sc)
-          }
-        })
-    }
-  }
-
   /** Collision-resistant digest for per-fixture table/dir name suffixes.
     * String.hashCode is 32 bits — two fixture dirs colliding in one JVM
     * would silently overwrite/rm each other's landed data while the
@@ -63,28 +25,26 @@ object Tables {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  // Memoized per (session, dir, name): spark.read.parquet runs a
-  // 1-task file-listing/footer job per call, which both violates the
-  // lazy-build contract (LazyBuildSpec — building a query must run
-  // ZERO jobs) and re-pays schema inference on every plan build. The
-  // map holds analyzed base relations only (no data). Entries for
-  // STOPPED sessions are purged on the next lookup, so suites that
-  // create many sessions per JVM don't pin dead sessions and their
-  // relations forever (ADVICE r6). Caveat: a memoized relation caches
-  // its file listing — a table dir REWRITTEN in-process serves stale
-  // files until the session is stopped (testdata dirs are immutable,
-  // so no in-repo caller hits this; a rewriter must use a new session).
-  private val loaded =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-  private val rawSchemas =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), org.apache.spark.sql.types.StructType]()
-  MemoReaper.hook(() => loaded.keySet.removeIf(_._1.sparkContext.isStopped))
-  MemoReaper.hook(() => rawSchemas.keySet.removeIf(_._1.sparkContext.isStopped))
+  /** [[md5hex]] of `dir`'s absolute path: the name suffix of the trees
+    * and tables landed per fixture dir. */
+  def dirDigest(dir: String): String =
+    md5hex(new java.io.File(dir).getAbsolutePath)
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    loaded.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    MemoReaper.watch(spark)
-    loaded.computeIfAbsent((spark, dir, name), _ => {
+  // Memoized per (session, dir, name) through engine.Memo:
+  // spark.read.parquet runs a 1-task file-listing/footer job per call,
+  // which both violates the lazy-build contract (LazyBuildSpec —
+  // building a query must run ZERO jobs) and re-pays schema inference
+  // on every plan build. The entries hold analyzed base relations only
+  // (no data) and die with the SparkContext; Memo's scaladoc carries
+  // the rewritten-dir staleness caveat.
+  private def raw(spark: SparkSession, dir: String, name: String): DataFrame =
+    Memo.session(spark, "Tables.raw", dir, name) {
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      spark.read.parquet(s"$dir/$name.parquet")
+    }
+
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    Memo.session(spark, "Tables.t", dir, name) {
       // events.ts has shipped in two parquet generations: TIMESTAMP(NANOS)
       // (Spark's reader rejects it; the legacy flag surfaces it as raw
       // nanos LongType, which we truncate to micros — exactly what DuckDB
@@ -92,27 +52,19 @@ object Tables {
       // through). Adapt on the OBSERVED type, never on an assumed file
       // format — the testdata contract can move between sessions
       // (SchemaContractSpec guards the types this engine depends on).
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
-      rawSchemas.putIfAbsent((spark, dir, name), raw.schema)
-      if (name == "events" && raw.schema("ts").dataType == LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz"))
-      else raw
-    })
-  }
+      val r = raw(spark, dir, name)
+      if (name == "events" && r.schema("ts").dataType == LongType)
+        r.withColumn("ts", timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz"))
+      else r
+    }
 
   /** Footer schema of the parquet file as stored, BEFORE t()'s
-    * normalization — memoized alongside t. Lets callers (the streaming
-    * reader, the drift guard spec) adapt their conversion to the file
-    * generation actually on disk instead of hard-coding one. */
-  def rawSchema(spark: SparkSession, dir: String, name: String): org.apache.spark.sql.types.StructType = {
-    rawSchemas.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    MemoReaper.watch(spark)
-    rawSchemas.computeIfAbsent((spark, dir, name), _ => {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.read.parquet(s"$dir/$name.parquet").schema
-    })
-  }
+    * normalization — the same memoized relation t() builds on. Lets
+    * callers (the streaming reader, the drift guard spec) adapt their
+    * conversion to the file generation actually on disk instead of
+    * hard-coding one. */
+  def rawSchema(spark: SparkSession, dir: String, name: String): org.apache.spark.sql.types.StructType =
+    raw(spark, dir, name).schema
 
   /** Spread a small-file scan across the cluster before CPU-heavy
     * per-row fan-out (tokenize / explode / shingle / codec work).
@@ -136,18 +88,16 @@ object Tables {
     * 4.3 at 8 for identical output — and the .cache()d fragments
     * inherit the width through narrow chains, multiplying it into
     * every consumer stage). Partitions = clamp(optimizer-estimated
-    * bytes / bytesPerTask, 1, defaultParallelism): stats come from the
+    * bytes / 64 KiB, 1, defaultParallelism): stats come from the
     * optimized subtree (file-size-based under scans — job-free, so
     * builds stay lazy), unreliable huge estimates saturate at the old
     * full-width behavior, and at 100 TB bytes/floor >> cores so the
-    * cap never binds. bytesPerTask is prop-tunable for A/B; 64 KiB
-    * keeps the fan-out CPU per task well above the deser floor on the
-    * measured corpora (interleaved A/B in OPTIMIZATION_r18.md). */
-  private[graft] val spreadBytesPerTaskProp = "graft.spread.bytesPerTask"
+    * cap never binds. The 64 KiB floor keeps the fan-out CPU per task
+    * well above the deser floor on the measured corpora (interleaved
+    * A/B concluded in OPTIMIZATION_r18.md). */
   def spread(df: DataFrame, key: String): DataFrame = {
     val sc = df.sparkSession.sparkContext
-    val floor = BigInt(
-      java.lang.Long.getLong(spreadBytesPerTaskProp, 64L * 1024).longValue)
+    val floor = BigInt(64L * 1024)
     val bytes =
       try df.queryExecution.optimizedPlan.stats.sizeInBytes
       catch { case _: Throwable => BigInt(Long.MaxValue) }

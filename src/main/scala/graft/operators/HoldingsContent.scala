@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.engine.{QueryPack, Tables}
+import graft.engine.{Layout, Memo, QueryPack, Tables}
 import graft.sources.Holdings
 
 /** Holdings-CONTENT analytics — the reference's actual end goal
@@ -87,8 +87,6 @@ object HoldingsContent extends QueryPack {
           .cast("decimal(12,10)").as("weight"))
   }
 
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Broadcast gate for the pair-overlap self-join (VERDICT r12):
     * same file-stat idiom as Retrieval.verifyBroadcastOk — the landed
     * tree's csv bytes are an honest, job-free proxy for the ingested
@@ -103,24 +101,19 @@ object HoldingsContent extends QueryPack {
     !java.lang.Boolean.getBoolean(forceShuffleProp) &&
       Retrieval.dirBytes(new java.io.File(landedDir)) <= 64L * 1024 * 1024
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(rm)
-    if (f.exists() && !f.delete())
-      throw new java.io.IOException(s"cannot delete $f")
-  }
-
   /** Land the three holdings trees (full period + two snapshot dates)
-    * as flat `{fund}.csv` files, once per (process, sf dir); same
+    * as flat `{fund}.csv` files, once per (context, sf dir); same
     * build-at-first-execution discipline as Snapshots.snapshotBase. */
   private[graft] def holdingsBase(s: SparkSession, d: String): String = {
-    val h = Tables.md5hex(new java.io.File(d).getAbsolutePath)
-    built.computeIfAbsent(h, _ => {
+    val h = Tables.dirDigest(d)
+    Memo.context(s, "holdingsBase", h) {
       // collision-resistant dir suffix (ADVICE r12): a 32-bit hashCode
       // collision between two fixture dirs would rm+rebuild into the
       // SAME tree while the first memo entry still points there
       val dir = new java.io.File(sys.props("java.io.tmpdir"),
         "graft_holdings_" + h)
-      rm(dir) // a partial tree from a killed run must not survive
+      // a partial tree from a killed run must not survive
+      Layout.deleteRecursively(dir)
       val li = Tables.t(s, d, "lineitem")
       val split = lit(splitTs).cast("timestamp")
       Holdings.landPerKeyCsv(weights(li),
@@ -130,10 +123,8 @@ object HoldingsContent extends QueryPack {
       Holdings.landPerKeyCsv(weights(li.filter(col("l_shipdate") >= split)),
         new java.io.File(dir, "2025-03-02").getAbsolutePath, "fund")
       dir.getAbsolutePath
-    })
+    }
   }
-
-  private val snapBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Land N=4 snapshot dates of per-fund weights under the
     * Catalog.writeSnapshot partition layout (round 14, VERDICT r13 #6 —
@@ -145,11 +136,11 @@ object HoldingsContent extends QueryPack {
     * base/snapshot_date=D/provider=ishares/ parquet files, so any
     * two-date query partition-prunes to 2 of the N dates. */
   private[graft] def holdingsSnapshotTree(s: SparkSession, d: String): String = {
-    val h = Tables.md5hex(new java.io.File(d).getAbsolutePath)
-    snapBuilt.computeIfAbsent(h, _ => {
+    val h = Tables.dirDigest(d)
+    Memo.context(s, "holdingsSnapshotTree", h) {
       val dir = new java.io.File(sys.props("java.io.tmpdir"),
         "graft_holdsnap_" + h)
-      rm(dir)
+      Layout.deleteRecursively(dir)
       val li = Tables.t(s, d, "lineitem")
       def ts(x: String) = lit(x).cast("timestamp")
       val slices = Seq(
@@ -165,10 +156,8 @@ object HoldingsContent extends QueryPack {
           dir.getAbsolutePath, date)
       }
       dir.getAbsolutePath
-    })
+    }
   }
-
-  private val xbuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Land TWO provider trees with deliberately heterogeneous
     * constituent id schemes (VERDICT r12 #7 — the A15 "confront" at
@@ -182,10 +171,10 @@ object HoldingsContent extends QueryPack {
     * re-ingested through Holdings.readHoldings, so the whole
     * heterogeneous round trip is oracle-checked. */
   private[graft] def xproviderBase(s: SparkSession, d: String): String = {
-    val h = Tables.md5hex(new java.io.File(d).getAbsolutePath)
-    xbuilt.computeIfAbsent(h, _ => {
+    val h = Tables.dirDigest(d)
+    Memo.context(s, "xproviderBase", h) {
       val dir = new java.io.File(sys.props("java.io.tmpdir"), "graft_xprov_" + h)
-      rm(dir)
+      Layout.deleteRecursively(dir)
       val li = Tables.t(s, d, "lineitem")
       // NOT named `split`: that would shadow functions.split below and
       // auto-tuple its args into Column.apply (runtime literal error)
@@ -217,7 +206,7 @@ object HoldingsContent extends QueryPack {
       Holdings.landPerKeyCsv(b,
         new java.io.File(dir, "provB").getAbsolutePath, "fund")
       dir.getAbsolutePath
-    })
+    }
   }
 
   // r18 (guide §6, VERDICT r17 #5): the landed trees are WRITTEN by

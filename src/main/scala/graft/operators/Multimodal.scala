@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.engine.{QueryPack, Tables}
+import graft.engine.{Layout, Memo, QueryPack, Tables}
 import graft.plans.Deferred
 
 /** Binary media container sniffing — pure-JVM magic-byte + header
@@ -603,44 +603,31 @@ object Multimodal extends QueryPack {
   // (ENCODING) payloads inline put the GIF/PNG writers inside every
   // timed pass — and made q_frame_sample the box-sensitivity outlier
   // (r5: 14.7 s on the starved driver box vs 1.1 s controlled).
-  // Payloads are now written ONCE per (process, sf dir) as a
+  // Payloads are now written ONCE per (context, sf dir) as a
   // binary-column parquet — the layout a real media corpus has — and
   // the queries read + decode only. One column per codec family, so
   // each query's scan is column-pruned to exactly its payloads.
-  private val mediaBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rmTree) }
-    if (f.exists() && !f.delete())
-      throw new java.io.IOException(s"cannot delete $f")
-  }
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   private[graft] def mediaBase(s: SparkSession, d: String): String = {
-    // the map key IS the fixture-dir digest (ADVICE r7): keying by the
+    // the memo key IS the fixture-dir digest (ADVICE r7): keying by the
     // raw string would let two spellings of the same dataset dir bypass
-    // computeIfAbsent's mutual exclusion and build into the SAME
-    // pid-suffixed tmp dir concurrently
-    val abs = new java.io.File(d).getAbsolutePath
-    mediaBuilt.computeIfAbsent(md5hex(abs), _ => {
+    // the memo's mutual exclusion and build into the SAME pid-suffixed
+    // tmp dir concurrently
+    val h = Tables.dirDigest(d)
+    Memo.context(s, "mediaBase", h) {
       // keyed by a collision-resistant digest of the ABSOLUTE path —
       // String.hashCode can collide two sf dirs into one fixture tree
       // (ADVICE r6). Cross-process: a complete tree carries parquet's
       // _SUCCESS marker and is reused as-is; builders write into a
       // pid-suffixed temp dir and atomically rename it in, so a reader
-      // mid-scan never races a rmTree and the losing builder of a race
+      // mid-scan never races a delete and the process that loses a race
       // discards its copy.
       val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_media_" + md5hex(abs))
+        "graft_media_" + h)
       if (new java.io.File(dir, "_SUCCESS").exists()) dir.getAbsolutePath
       else {
         val tmp = new java.io.File(dir.getParentFile,
           dir.getName + ".tmp." + ProcessHandle.current().pid())
-        rmTree(tmp)
+        Layout.deleteRecursively(tmp)
         import s.implicits._
         Tables.t(s, d, "documents").select(col("doc_id"))
           // spreadFull: per-row image/audio ENCODING — CPU-heavy rows
@@ -666,36 +653,30 @@ object Multimodal extends QueryPack {
         // build — deleting it would race ITS readers mid-scan; reuse
         // it and discard our copy instead. Only a _SUCCESS-less tree
         // (a killed run's debris) is ever removed.
-        if (new java.io.File(dir, "_SUCCESS").exists()) rmTree(tmp)
+        if (new java.io.File(dir, "_SUCCESS").exists()) Layout.deleteRecursively(tmp)
         else {
-          rmTree(dir)
+          Layout.deleteRecursively(dir)
           if (!tmp.renameTo(dir)) {
             // lost a cross-process race: reuse the winner's complete tree
             if (!new java.io.File(dir, "_SUCCESS").exists())
               throw new java.io.IOException(s"cannot install media fixtures at $dir")
-            rmTree(tmp)
+            Layout.deleteRecursively(tmp)
           }
         }
         dir.getAbsolutePath
       }
-    })
+    }
   }
 
   /** Decoded 16-dim content embeddings + 16-bit sign signatures of
     * every doc's PNG payload — the shared input of q_embed_real and
-    * q_audit_embed_recall. Memoized per (session, dir) with the
-    * Tables.t idiom (stopped-session purge) and cache()d: the audit
-    * executing both its exact side and the LSH side must decode the
-    * corpus ONCE, not once per consumer. Must be called inside a
-    * plans.Deferred body (media() builds fixtures = runs jobs). */
-  private val realEmb =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  graft.engine.Tables.MemoReaper.hook(() =>
-    realEmb.keySet.removeIf(_._1.sparkContext.isStopped))
-  private[operators] def realEmbeddings(s: SparkSession, d: String): DataFrame = {
-    realEmb.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    graft.engine.Tables.MemoReaper.watch(s)
-    realEmb.computeIfAbsent((s, d), _ => {
+    * q_audit_embed_recall. Memoized per (session, dir) through
+    * engine.Memo and cache()d: the audit executing both its exact side
+    * and the LSH side must decode the corpus ONCE, not once per
+    * consumer. Must be called inside a plans.Deferred body (media()
+    * builds fixtures = runs jobs). */
+  private[operators] def realEmbeddings(s: SparkSession, d: String): DataFrame =
+    Memo.session(s, "realEmbeddings", d) {
       import s.implicits._
       media(s, d, "png")
         .mapPartitions(_.map { p =>
@@ -707,8 +688,7 @@ object Multimodal extends QueryPack {
         })
         .toDF("doc_id", "emb", "sig")
         .cache()
-    })
-  }
+    }
 
   /** One codec family's payloads, column-pruned and spread for decode
     * parallelism. Builds the fixture tree on first call per process —

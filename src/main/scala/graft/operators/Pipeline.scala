@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 
-import graft.engine.{QueryPack, Tables}
+import graft.engine.{Memo, QueryPack, Tables}
 import graft.functions.GraftFunctions
 import graft.plans.Deferred
 
@@ -53,11 +53,8 @@ object Pipeline extends QueryPack {
         "transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3)))")))
         .as("g"))
 
-  private val gramIdx =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** STANDING dedup index (VERDICT r12 #6): the corpus side of the
-    * incremental dedup persisted once per (process, fixture) as two
+    * incremental dedup persisted once per (context, fixture) as two
     * bucketed+sorted managed tables — the distinct-3-gram fingerprint
     * (corpus_id, g) bucketed on g, and per-doc gram counts bucketed on
     * corpus_id. This is what a daily 100 TB crawl actually re-runs:
@@ -72,10 +69,10 @@ object Pipeline extends QueryPack {
     // count is part of the table name so a forced-count build (the
     // across-bucket-counts plan spec) never collides with the default
     val bk = graft.engine.Layout.bucketsFor(s"$d/documents.parquet")
-    // warehouse-discriminated key (ADVICE r14) — Layout.indexMemoKey
-    val h = graft.engine.Layout.indexMemoKey(s, d, bk)
-    gramIdx.computeIfAbsent(h, _ =>
-      buildGramIndex(s, d, s"_$h", _.filter(col("doc_id") % 10 =!= 0)))
+    val h = graft.engine.Layout.indexSuffix(s, d, bk)
+    Memo.context(s, "gramIndex", h) {
+      buildGramIndex(s, d, s"_$h", _.filter(col("doc_id") % 10 =!= 0))
+    }
   }
 
   /** Land the two gram-index tables over the docs `sel` keeps (round
@@ -121,9 +118,6 @@ object Pipeline extends QueryPack {
       cT, "corpus_id", bk)
   }
 
-  private val gramIdxU =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** ABSORB maintenance for the standing index (round 13 — the other
     * half of the daily-crawl loop that gramIndex/q_dedup_index_probe
     * started): yesterday's verdicted batch (doc_id % 20 = 0, half the
@@ -138,8 +132,8 @@ object Pipeline extends QueryPack {
     * proportional to the day's crawl. */
   private[graft] def gramIndexAbsorbed(s: SparkSession, d: String): (String, String) = {
     val bk = graft.engine.Layout.bucketsFor(s"$d/documents.parquet")
-    val h = graft.engine.Layout.indexMemoKey(s, d, bk)
-    gramIdxU.computeIfAbsent(h, _ => {
+    val h = graft.engine.Layout.indexSuffix(s, d, bk)
+    Memo.context(s, "gramIndexAbsorbed", h) {
       val gT = s"graft_gram_idxu_$h"
       val cT = s"graft_gramcnt_idxu_$h"
       val grams =
@@ -167,7 +161,7 @@ object Pipeline extends QueryPack {
           .groupBy(col("corpus_id")).agg(count(lit(1)).as("nc")),
         cT, "corpus_id", bk)
       (gT, cT)
-    })
+    }
   }
 
   private val gramProbeSchema = StructType(Seq(
@@ -208,9 +202,6 @@ object Pipeline extends QueryPack {
       .orderBy(col("batch_id"), col("corpus_id"))
   }
 
-  private val gramIdxP =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** Standing index WITH A RETENTION PURGE APPLIED (VERDICT r14 #1):
     * day 0 lands the corpus exactly as gramIndex does (own table
     * suffix — the lifecycle tests mutate these tables, and sharing the
@@ -221,8 +212,8 @@ object Pipeline extends QueryPack {
     * Layout.readPurged and the next compaction folds the rewrite. */
   private[graft] def gramIndexPurged(s: SparkSession, d: String): (String, String) = {
     val bk = graft.engine.Layout.bucketsFor(s"$d/documents.parquet")
-    val h = graft.engine.Layout.indexMemoKey(s, d, bk)
-    gramIdxP.computeIfAbsent(h, _ => {
+    val h = graft.engine.Layout.indexSuffix(s, d, bk)
+    Memo.context(s, "gramIndexPurged", h) {
       val gT = s"graft_gram_idxp_$h"
       val cT = s"graft_gramcnt_idxp_$h"
       val corpus =
@@ -241,7 +232,7 @@ object Pipeline extends QueryPack {
       graft.engine.Layout.tombstone(s, gT, purge, "corpus_id")
       graft.engine.Layout.tombstone(s, cT, purge, "corpus_id")
       (gT, cT)
-    })
+    }
   }
 
   /** The q_dedup_substring span algebra over an arbitrary doc slice
@@ -440,11 +431,6 @@ object Pipeline extends QueryPack {
   // planes/width the standing rows used, so the index never holds
   // mixed-width buckets (the text index's frozen-df/stats argument).
 
-  private val embIdxMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String, String)]()
-  private val embIdxUMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String, String)]()
-
   /** Sign `e` against the FROZEN width landed in `statT`; returns
     * (vec_id, tb) with tb = tbl·2^16 + bkt — injective (bkt < 2^ab ≤
     * 2^16), and a single join column keeps the bucketed scan live,
@@ -491,30 +477,35 @@ object Pipeline extends QueryPack {
     (sigT, vecT, statT)
   }
 
+  /** Suffix of the embedding-family index tables (emb + IVF). */
+  private def embSuffix(s: SparkSession, d: String): String =
+    graft.engine.Layout.indexSuffix(s, d,
+      graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet"))
+
   /** Standing index over the corpus (vec_id % 10 ≠ 0), built once per
-    * (process, fixture, bucket count). */
+    * (context, fixture, bucket count). */
   private[graft] def embIndex(s: SparkSession,
-      d: String): (String, String, String) =
-    embIdxMemo.computeIfAbsent(
-      graft.engine.Layout.indexMemoKey(s, d,
-        graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet")),
-      h => buildEmbIndex(s, d, s"_$h", col("vec_id") % 10 =!= 0))
+      d: String): (String, String, String) = {
+    val h = embSuffix(s, d)
+    Memo.context(s, "embIndex", h) {
+      buildEmbIndex(s, d, s"_$h", col("vec_id") % 10 =!= 0)
+    }
+  }
 
   /** Standing index plus an ABSORBED day-1 batch (vec_id % 20 = 0):
     * signed with the frozen width and APPENDED into the sig/vec tables
     * — one new file per bucket, write proportional to the day's crawl,
     * the standing rows untouched. */
   private[graft] def embIndexAbsorbed(s: SparkSession,
-      d: String): (String, String, String) =
-    embIdxUMemo.computeIfAbsent(
-      graft.engine.Layout.indexMemoKey(s, d,
-        graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet")),
-      h => {
-        val bk = graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet")
-        val t = buildEmbIndex(s, d, s"u_$h", col("vec_id") % 10 =!= 0)
-        absorbEmbBatch(s, d, t, bk, col("vec_id") % 20 === 0)
-        t
-      })
+      d: String): (String, String, String) = {
+    val h = embSuffix(s, d)
+    Memo.context(s, "embIndexAbsorbed", h) {
+      val bk = graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet")
+      val t = buildEmbIndex(s, d, s"u_$h", col("vec_id") % 10 =!= 0)
+      absorbEmbBatch(s, d, t, bk, col("vec_id") % 20 === 0)
+      t
+    }
+  }
 
   /** One absorb day for an embedding index: sign the batch with the
     * FROZEN width, append signatures and vectors (one new file per
@@ -902,36 +893,28 @@ object Pipeline extends QueryPack {
 
   private val ivfProbeSchema = embProbeSchema // same probe output shape
 
-  private val ivfIdxMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String)]()
-  private val ivfIdxUMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String)]()
-
   /** Standing IVF index over the corpus (vec_id % 10 ≠ 0), built once
-    * per (process, warehouse, fixture, bucket count). */
+    * per (context, fixture, bucket count). */
   private[graft] def ivfIndex(s: SparkSession,
-      d: String): (String, String) =
-    ivfIdxMemo.computeIfAbsent(
-      graft.engine.Layout.indexMemoKey(s, d,
-        graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet")),
-      h => buildIvfIndex(s, d, s"_$h", col("vec_id") % 10 =!= 0))
+      d: String): (String, String) = {
+    val h = embSuffix(s, d)
+    Memo.context(s, "ivfIndex", h) {
+      buildIvfIndex(s, d, s"_$h", col("vec_id") % 10 =!= 0)
+    }
+  }
 
   /** Standing IVF index plus an ABSORBED day-1 batch (vec_id % 20 =
     * 0), assigned with the frozen quantizer. */
   private[graft] def ivfIndexAbsorbed(s: SparkSession,
-      d: String): (String, String) =
-    ivfIdxUMemo.computeIfAbsent(
-      graft.engine.Layout.indexMemoKey(s, d,
-        graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet")),
-      h => {
-        val bk = graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet")
-        val t = buildIvfIndex(s, d, s"u_$h", col("vec_id") % 10 =!= 0)
-        absorbIvfBatch(s, d, t, bk, col("vec_id") % 20 === 0)
-        t
-      })
-
-  private val ivfIdxRMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String)]()
+      d: String): (String, String) = {
+    val h = embSuffix(s, d)
+    Memo.context(s, "ivfIndexAbsorbed", h) {
+      val bk = graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet")
+      val t = buildIvfIndex(s, d, s"u_$h", col("vec_id") % 10 =!= 0)
+      absorbIvfBatch(s, d, t, bk, col("vec_id") % 20 === 0)
+      t
+    }
+  }
 
   /** The full capacity-repair lifecycle as one landed artifact
     * (round 17, VERDICT r16 #1 "done" clause): build the standing
@@ -946,17 +929,16 @@ object Pipeline extends QueryPack {
     * invariant), so a quantizer that failed to re-derive its capacity
     * parameter is a hash mismatch, not a slow probe. */
   private[graft] def ivfIndexReclustered(s: SparkSession,
-      d: String): (String, String) =
-    ivfIdxRMemo.computeIfAbsent(
-      graft.engine.Layout.indexMemoKey(s, d,
-        graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet")),
-      h => {
-        val bk = graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet")
-        val t = buildIvfIndexOn(s, d, s"rc_$h",
-          _.filter(col("vec_id") % 10 =!= 0), cellTarget = 16L)
-        absorbIvfBatch(s, d, t, bk, col("vec_id") % 20 === 0)
-        reclusterIvf(s, d, s"rr_$h", t)
-      })
+      d: String): (String, String) = {
+    val h = embSuffix(s, d)
+    Memo.context(s, "ivfIndexReclustered", h) {
+      val bk = graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet")
+      val t = buildIvfIndexOn(s, d, s"rc_$h",
+        _.filter(col("vec_id") % 10 =!= 0), cellTarget = 16L)
+      absorbIvfBatch(s, d, t, bk, col("vec_id") % 20 === 0)
+      reclusterIvf(s, d, s"rr_$h", t)
+    }
+  }
 
   /** doc_id + h0..h{nSig-1} minhash signature columns.
     * Each 3-word shingle is string-hashed ONCE to a 30-bit base; the

@@ -76,7 +76,6 @@ object ProfAB {
           f"$v2=${b._1}%6.3f (tasks=${b._2}) load=$l0%.1f")
         (a, b)
       }
-      val aMin = obs.map(_._1._1).min; val bMin = obs.map(_._1._1).min
       val aMed = obs.map(_._1._1).sorted.apply(obs.size / 2)
       val bMed = obs.map(_._2._1).sorted.apply(obs.size / 2)
       println(f"[ab] $name%-22s $v1 med=${aMed}%6.3f  $v2 med=${bMed}%6.3f  " +

@@ -288,25 +288,6 @@ object ProfR17 {
 
     exps("text_lsh") = () => Retrieval.queries("q_dedup_text_lsh")(spark, sfDir)
 
-    // r18 spread-floor A/B: same query built under a bytes-capped vs
-    // full-width spread (the prop is read at plan-build time, so each
-    // arm re-plans; caches key on the canonicalized plan, so the two
-    // arms keep separate cache entries and stay honest)
-    // the prop stays SET until the other arm flips it: Deferred bodies
-    // build at EXECUTION time (inside the timed noop), so a
-    // set-then-clear wrapper would leave deferred arms at the default
-    def withFloor(bytes: String, q: String): DataFrame = {
-      System.setProperty(Tables.spreadBytesPerTaskProp, bytes)
-      SparkEntry.queries(q)(spark, sfDir)
-    }
-    for (q <- Seq("q_quality_gopher", "q_decontaminate", "q_dedup_minhash",
-        "q_dedup_text_lsh", "q_dedup_cluster_star", "q_tfidf",
-        "q_dedup_winnow", "q_repetition_filter")) {
-      val short = q.stripPrefix("q_")
-      exps(s"${short}_s64k") = () => withFloor("65536", q)
-      exps(s"${short}_sfull") = () => withFloor("1", q)
-    }
-
     // q_dedup_text_lsh stage attribution (sub-cap branch shapes)
     def lshKeyed(): DataFrame = {
       val dense = Retrieval.centeredDense(spark, sfDir)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.{QueryPack, Tables}
+import graft.engine.{Memo, QueryPack, Tables}
 import graft.engine.Tables.{dec2, dec4, dsum2, dsum4}
 
 /** Relational core: scan/filter/project, the join family, aggregation,
@@ -24,21 +24,20 @@ object Relational extends QueryPack {
 
   private def ts(s: String) = lit(java.sql.Timestamp.valueOf(s))
 
-  private val bucketed =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** Land customer+orders as co-bucketed sorted managed tables, once
-    * per (process, sf dir) — the A28 write-once layout; names carry a
+    * per (context, sf dir) — the A28 write-once layout; names carry a
     * digest of the ABSOLUTE fixture path so differently-scaled (or
-    * differently-spelled) fixtures never collide in-session. */
+    * differently-spelled) fixtures never collide in-session. Memo's
+    * context scope keeps a new context (a new warehouse and catalog)
+    * from being served the tables an old one landed. */
   private[graft] def bucketedBase(s: SparkSession, d: String): (String, String) = {
     // ONE derived count for both tables (Layout.bucketsFor, from the
     // larger side): co-bucketed joins elide BOTH Exchanges only when
     // the counts match — deriving per-table would silently reintroduce
     // one side's shuffle the first time the sizes diverge
     val bk = graft.engine.Layout.bucketsFor(s"$d/orders.parquet")
-    val h = Tables.md5hex(new java.io.File(d).getAbsolutePath) + s"b$bk"
-    bucketed.computeIfAbsent(h, _ => {
+    val h = Tables.dirDigest(d) + s"b$bk"
+    Memo.context(s, "bucketedBase", h) {
       val oT = s"graft_orders_bkt_$h"
       val cT = s"graft_customer_bkt_$h"
       graft.engine.Layout.writeBucketed(
@@ -48,7 +47,7 @@ object Relational extends QueryPack {
       graft.engine.Layout.writeBucketed(
         Tables.t(s, d, "customer"), cT, "c_custkey", bk)
       (oT, cT)
-    })
+    }
   }
 
   override def queries: Map[String, Q] = Map(

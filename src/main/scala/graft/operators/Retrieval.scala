@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.engine.{QueryPack, Tables}
+import graft.engine.{Memo, QueryPack, Tables}
 import graft.functions.GraftFunctions
 import graft.plans.Deferred
 
@@ -47,12 +47,6 @@ object Retrieval extends QueryPack {
   private val b = 0.75
   private val bm25Terms = Seq("table", "spark", "merge")
 
-  // q_dedup_semantic's session-scoped memo (see the entry's comment)
-  private val semanticMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  Tables.MemoReaper.hook(() =>
-    semanticMemo.keySet.removeIf(_._1.sparkContext.isStopped))
-
   /** System property that bypasses the semantic memo so every call
     * re-fits the cluster hierarchy from scratch — the fresh-fit mode
     * ScaleStress uses to measure honest pass-1 cost (VERDICT r9 #5). */
@@ -63,28 +57,23 @@ object Retrieval extends QueryPack {
   private def docs(s: SparkSession, d: String): DataFrame =
     Tables.t(s, d, "documents")
 
-  // Session-scoped memo of the q_dedup_text_lsh PAIR SET for its audit
-  // consumer (r17; the q_dedup_semantic/q_audit_semantic memo idiom
-  // applied to the text-LSH family): q_audit_text_recall re-derived
-  // the ENTIRE banded pipeline — band join, verification, integer
-  // gates — on every run just to label which exhaustive pairs the LSH
-  // surfaced, ~2.5 s of the audit's 4 s warm wall at sf0.1.
-  // q_dedup_text_lsh itself NEVER reads this memo — its own bench
-  // entry keeps timing the full recompute; only the audit's
-  // second-consumer re-derivation is shared. localCheckpoint runs
-  // jobs, so the audit body moved inside plans.Deferred (the
-  // q_audit_semantic posture) to keep query BUILDS job-free.
-  private val lshPairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  Tables.MemoReaper.hook(() =>
-    lshPairsMemo.keySet.removeIf(_._1.sparkContext.isStopped))
-  private[operators] def lshPairsShared(s: SparkSession, d: String): DataFrame = {
-    lshPairsMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    Tables.MemoReaper.watch(s)
-    lshPairsMemo.computeIfAbsent((s, d), _ =>
+  // The q_dedup_text_lsh PAIR SET for its audit consumer, memoized
+  // per (session, dir) through engine.Memo (r17; the
+  // q_dedup_semantic/q_audit_semantic idiom applied to the text-LSH
+  // family): q_audit_text_recall re-derived the ENTIRE banded pipeline
+  // — band join, verification, integer gates — on every run just to
+  // label which exhaustive pairs the LSH surfaced, ~2.5 s of the
+  // audit's 4 s warm wall at sf0.1. q_dedup_text_lsh itself NEVER
+  // reads this memo — its own bench entry keeps timing the full
+  // recompute; only the audit's second-consumer re-derivation is
+  // shared. localCheckpoint runs jobs, so the audit body sits inside
+  // plans.Deferred (the q_audit_semantic posture) to keep query BUILDS
+  // job-free.
+  private[operators] def lshPairsShared(s: SparkSession, d: String): DataFrame =
+    Memo.session(s, "lshPairsShared", d) {
       queries("q_dedup_text_lsh")(s, d)
-        .select(col("da"), col("db")).localCheckpoint())
-  }
+        .select(col("da"), col("db")).localCheckpoint()
+    }
 
   private def tokens(s: SparkSession, d: String): DataFrame =
     // spread (r17): the token explode is the CPU stage; without it the
@@ -264,11 +253,6 @@ object Retrieval extends QueryPack {
   // unlike the self-join's occ²; the star discipline stays a
   // recompute-form concern.
 
-  private val lshIdxMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String, String, String)]()
-  private val lshIdxUMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String, String, String)]()
-
   /** Data-derived bucket count for the LSH index tables (VERDICT r13
     * #4 — Layout.bucketsFor scaladoc): all four tables share one count
     * so the co-keyed joins stay aligned. */
@@ -411,13 +395,14 @@ object Retrieval extends QueryPack {
   }
 
   /** Standing index over the corpus (doc_id % 10 ≠ 0), built once per
-    * (process, fixture). */
+    * (context, fixture). */
   private[graft] def lshIndex(s: SparkSession,
-      d: String): (String, String, String, String) =
-    lshIdxMemo.computeIfAbsent(
-      graft.engine.Layout.indexMemoKey(s, d, lshBuckets(d)),
-      h => buildLshIndex(s, d, s"_$h",
-        _.filter(col("doc_id") % 10 =!= 0)))
+      d: String): (String, String, String, String) = {
+    val h = graft.engine.Layout.indexSuffix(s, d, lshBuckets(d))
+    Memo.context(s, "lshIndex", h) {
+      buildLshIndex(s, d, s"_$h", _.filter(col("doc_id") % 10 =!= 0))
+    }
+  }
 
   /** Standing index plus an ABSORBED day-1 batch (doc_id % 20 = 0):
     * the batch is signed with the frozen stats and APPENDED into the
@@ -427,16 +412,16 @@ object Retrieval extends QueryPack {
     * docs' own signatures used them, so the index stays
     * self-consistent). */
   private[graft] def lshIndexAbsorbed(s: SparkSession,
-      d: String): (String, String, String, String) =
-    lshIdxUMemo.computeIfAbsent(
-      graft.engine.Layout.indexMemoKey(s, d, lshBuckets(d)),
-      h => {
-        val t = buildLshIndex(s, d, s"u_$h",
-          _.filter(col("doc_id") % 10 =!= 0))
-        absorbLshBatch(s, d, t, lshBuckets(d),
-          _.filter(col("doc_id") % 20 === 0))
-        t
-      })
+      d: String): (String, String, String, String) = {
+    val h = graft.engine.Layout.indexSuffix(s, d, lshBuckets(d))
+    Memo.context(s, "lshIndexAbsorbed", h) {
+      val t = buildLshIndex(s, d, s"u_$h",
+        _.filter(col("doc_id") % 10 =!= 0))
+      absorbLshBatch(s, d, t, lshBuckets(d),
+        _.filter(col("doc_id") % 20 === 0))
+      t
+    }
+  }
 
   /** One absorb day for a text-LSH index: sign the batch with the
     * FROZEN stats, append signatures, vectors, and the membership
@@ -481,9 +466,6 @@ object Retrieval extends QueryPack {
       ids.select(col("doc_id")), "doc_id")
   }
 
-  private val lshIdxRMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String, String, String)]()
-
   /** Re-freeze an ARBITRARY landed index (the memoized
     * lshIndexRefrozen below wires it to the shared absorbed index):
     * membership comes from the PURGE-AWARE manifest read, so a
@@ -515,10 +497,12 @@ object Retrieval extends QueryPack {
     * from-scratch build over the same membership is spec-pinned
     * (RetrievalSpec). */
   private[graft] def lshIndexRefrozen(s: SparkSession,
-      d: String): (String, String, String, String) =
-    lshIdxRMemo.computeIfAbsent(
-      graft.engine.Layout.indexMemoKey(s, d, lshBuckets(d)),
-      h => refreezeLsh(s, d, s"r_$h", lshIndexAbsorbed(s, d)))
+      d: String): (String, String, String, String) = {
+    val h = graft.engine.Layout.indexSuffix(s, d, lshBuckets(d))
+    Memo.context(s, "lshIndexRefrozen", h) {
+      refreezeLsh(s, d, s"r_$h", lshIndexAbsorbed(s, d))
+    }
+  }
 
   /** FROZEN-STATS DRIFT GAUGE for a text-LSH index (the
     * q_dedup_text_index_drift body, factored round 16 so the
@@ -1036,17 +1020,15 @@ object Retrieval extends QueryPack {
     // counts to zero. "Min-id wins locally": the lower-id doc of a
     // dup pair survives unless itself shadowed — one pass, no
     // iteration (contrast q_dedup_apply's transitive closure).
-    // Memoized per (session, dir) — the Tables.t idiom: q_dedup_semantic
-    // AND q_audit_semantic consume the SAME Deferred instance, so within
-    // one session the clustering body builds once and a second consumer
-    // re-executes a warm inner plan (internal caches + localCheckpoints
-    // intact) instead of re-fitting the whole hierarchy from scratch
-    // (measured at sf0.1: the audit's private re-derivation cost ~6 s).
-    // Same staleness caveat as Tables.t (testdata dirs are immutable
-    // in-process).
+    // Memoized per (session, dir) through engine.Memo, like Tables.t:
+    // q_dedup_semantic AND q_audit_semantic consume the SAME Deferred
+    // instance, so within one session the clustering body builds once
+    // and a second consumer re-executes a warm inner plan (internal
+    // caches + localCheckpoints intact) instead of re-fitting the whole
+    // hierarchy from scratch (measured at sf0.1: the audit's private
+    // re-derivation cost ~6 s). Same staleness caveat as every Memo
+    // entry (testdata dirs are immutable in-process).
     "q_dedup_semantic" -> ((s, d) => {
-      semanticMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-      Tables.MemoReaper.watch(s)
       def buildSemantic: DataFrame = {
       GraftFunctions.register(s)
       val idT = Tables.t(s, d, "documents").schema("doc_id").dataType
@@ -1190,7 +1172,7 @@ object Retrieval extends QueryPack {
       // over the memoized frame measures a warm re-execute instead
       // (VERDICT r9 #5). Production consumers never set it.
       if (sys.props.get(freshFitProp).contains("true")) buildSemantic
-      else semanticMemo.computeIfAbsent((s, d), _ => buildSemantic)
+      else Memo.session(s, "q_dedup_semantic", d)(buildSemantic)
     }),
 
     // TF-IDF: tf(doc,term) × ln(N/df(term)), top 100 scored pairs.

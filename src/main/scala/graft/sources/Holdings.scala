@@ -35,16 +35,19 @@ object Holdings {
     * locally, a per-execution re-scan for every holdings query (the
     * r17 memo only amortized it in-session). The engine WRITES these
     * trees (landPerKeyCsv), so the content schema is known at the call
-    * site; binding is positional against the header row (enforceSchema
-    * default), and the value parse (UnivocityParser) is the same one
-    * inference would have picked for these types, so ingested values
-    * are bit-identical to the inferred path — oracle-checked on all
-    * four holdings queries. */
+    * site. The header row is checked against the declared names
+    * (enforceSchema=false), so a tree whose header drifted — columns
+    * renamed or reordered — fails loudly instead of binding values to
+    * the wrong fields by position (HoldingsSpec). The value parse
+    * (UnivocityParser) is the same one inference would have picked for
+    * these types, so ingested values are bit-identical to the inferred
+    * path — oracle-checked on all four holdings queries. */
   def readHoldingsAs(spark: SparkSession, dir: String,
       content: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read
       .option("header", "true")
       .option("mode", "PERMISSIVE")
+      .option("enforceSchema", "false")
       .schema(content)
       .csv(s"$dir/*.csv")
       .withColumn("isin",
@@ -86,11 +89,7 @@ object Holdings {
           new java.io.File(dest, v + ".csv").toPath,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(staging))
+    graft.engine.Layout.deleteRecursively(new java.io.File(staging))
   }
 
   /** Latest file per key by modification time — the reference's

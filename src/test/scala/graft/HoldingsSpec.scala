@@ -139,4 +139,25 @@ class HoldingsSpec extends SparkTestBase {
       }
     }
   }
+
+  test("header drift fails loudly: swapped csv columns throw instead of binding by position") {
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    val content = StructType(Seq(
+      StructField("constituent", LongType), StructField("weight", DoubleType)))
+    val dir = java.nio.file.Files.createTempDirectory("graft-holdings-drift")
+    def land(name: String, csv: String): Unit =
+      java.nio.file.Files.writeString(dir.resolve(name), csv)
+    land("F0.csv", "constituent,weight\n3,7\n")
+    // the control: a conforming header reads back by name
+    val ok = Holdings.readHoldingsAs(spark, dir.toString, content).collect()
+    assert(ok.map(r => (r.getLong(0), r.getDouble(1))).toSeq == Seq((3L, 7.0)))
+    // both values parse as either type, so positional binding would
+    // silently yield constituent 7 / weight 3.0 for this fund
+    land("F1.csv", "weight,constituent\n7,3\n")
+    val e = intercept[Exception](
+      Holdings.readHoldingsAs(spark, dir.toString, content).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    assert(msgs.contains("header"), msgs)
+  }
 }

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Deliberately NOT the SPARK_GRAFT_CPUS knob Bench/Verify honor:
   * the driver exports that for perf runs, and tests must keep their
   * fixed default unless the sweep is requested explicitly. */
-trait SparkTestBase extends AnyFunSuite {
+object SparkTestBase {
   private val cpus: Int = {
     val raw = sys.env.getOrElse("SPARK_GRAFT_TEST_CPUS", "4")
     try raw.toInt
@@ -18,7 +18,11 @@ trait SparkTestBase extends AnyFunSuite {
       throw new IllegalArgumentException(
         s"SPARK_GRAFT_TEST_CPUS must be an integer, got '$raw'") }
   }
-  lazy val spark: SparkSession = SparkSession.builder()
+
+  /** The shared session, or — once a suite has stopped its context
+    * (MemoSpec) — a new one with the same config on a fresh warehouse
+    * dir. */
+  def session(): SparkSession = SparkSession.builder()
     .master(s"local[$cpus]")
     .config("spark.sql.extensions", "graft.engine.GraftExtensions")
     .config("spark.sql.warehouse.dir",
@@ -28,6 +32,10 @@ trait SparkTestBase extends AnyFunSuite {
     .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+}
+
+trait SparkTestBase extends AnyFunSuite {
+  lazy val spark: SparkSession = SparkTestBase.session()
 
   val sf = "/root/testdata/sf0.001"
 
