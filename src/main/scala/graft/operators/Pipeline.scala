@@ -171,36 +171,50 @@ object Pipeline extends QueryPack {
     StructField("union_n", org.apache.spark.sql.types.LongType),
     StructField("jac", org.apache.spark.sql.types.DoubleType)))
 
-  /** The one gram-index probe body (shared by q_dedup_index_probe /
-    * _absorb / _purge and the streaming runner): sign only the batch,
-    * merge-join the index's g-bucket layout (the hints pin the
-    * non-broadcast paths — the INDEX side rides its bucket layout and
-    * stats must never re-pick a broadcast that pins the corpus
-    * fingerprint in every executor), pick up corpus counts from the
-    * bucketed count table. The batch-count side rides the probeSide
-    * gate (VERDICT r14): broadcast under 128 MB of source, sort-merge
-    * above. Zero Exchange on the index side — tree-walk-pinned in
-    * PlanSpec. */
-  private[graft] def gramIndexProbeOn(s: SparkSession, d: String,
-      idx: DataFrame, nc: DataFrame, batchPred: Column): DataFrame = {
-    val src = s"$d/documents.parquet"
-    val batch =
-      wordGrams3(Tables.spread(Tables.t(s, d, "documents"), "doc_id"))
-        .filter(batchPred)
-        .select(col("doc_id").as("batch_id"), col("g"))
+  /** The exact 3-gram Jaccard ≥ 0.5 verdict over candidate pairs
+    * carrying (batch_id, corpus_id, inter_n, nb, nc). The threshold is
+    * INTEGER arithmetic (3·inter ≥ nb + nc ⇔ inter/union ≥ 0.5), so no
+    * borderline pair can flip vs the oracle; `jac` is rounded to 6
+    * places. Output: gramProbeSchema. */
+  private[graft] def jaccardVerdicts(pairs: DataFrame): DataFrame = {
+    val union = col("nb") + col("nc") - col("inter_n")
+    pairs.filter(col("inter_n") * 3 >= col("nb") + col("nc"))
+      .select(col("batch_id"), col("corpus_id"), col("inter_n"),
+        union.as("union_n"),
+        round(col("inter_n").cast("double") / union, 6).as("jac"))
+  }
+
+  /** The one indexed gram-probe body, unordered (q_dedup_index_probe /
+    * _absorb / _purge and both streaming index probes): merge-join the
+    * batch grams (batch_id, g) onto the index view `idx` (corpus_id, g)
+    * and pick up corpus counts from `nc` (corpus_id, nc). The hints pin
+    * the non-broadcast paths — the INDEX side rides its g-bucket layout
+    * and stats must never re-pick a broadcast that pins the corpus
+    * fingerprint in every executor. The batch-count side rides the
+    * probeSide gate on `src` (VERDICT r14): broadcast under 128 MB of
+    * source, sort-merge above. Zero Exchange on the index side —
+    * tree-walk-pinned in PlanSpec. Callers pass their own index views:
+    * plain, purged, or purged and self-excluded. */
+  private[graft] def gramVerdicts(idx: DataFrame, nc: DataFrame,
+      batch: DataFrame, src: String): DataFrame = {
     val nb = batch.groupBy(col("batch_id")).agg(count(lit(1)).as("nb"))
-    idx.hint("merge").join(batch, Seq("g"))
+    jaccardVerdicts(idx.hint("merge").join(batch, Seq("g"))
       .groupBy(col("batch_id"), col("corpus_id"))
       .agg(count(lit(1)).as("inter_n"))
       .join(graft.engine.Layout.probeSide(nb, src), Seq("batch_id"))
-      .join(nc.hint("merge"), Seq("corpus_id"))
-      .filter(col("inter_n") * 3 >= col("nb") + col("nc"))
-      .select(col("batch_id"), col("corpus_id"), col("inter_n"),
-        (col("nb") + col("nc") - col("inter_n")).as("union_n"),
-        round(col("inter_n").cast("double") /
-          (col("nb") + col("nc") - col("inter_n")), 6).as("jac"))
-      .orderBy(col("batch_id"), col("corpus_id"))
+      .join(nc.hint("merge"), Seq("corpus_id")))
   }
+
+  /** [[gramVerdicts]] for the fixture's own documents matching
+    * `batchPred`, ordered by (batch_id, corpus_id). */
+  private[graft] def gramIndexProbeOn(s: SparkSession, d: String,
+      idx: DataFrame, nc: DataFrame, batchPred: Column): DataFrame =
+    gramVerdicts(idx, nc,
+      wordGrams3(Tables.spread(Tables.t(s, d, "documents"), "doc_id"))
+        .filter(batchPred)
+        .select(col("doc_id").as("batch_id"), col("g")),
+      s"$d/documents.parquet")
+      .orderBy(col("batch_id"), col("corpus_id"))
 
   /** Standing index WITH A RETENTION PURGE APPLIED (VERDICT r14 #1):
     * day 0 lands the corpus exactly as gramIndex does (own table
@@ -1436,20 +1450,17 @@ object Pipeline extends QueryPack {
         // exact-dedup window subtree executing in identical stage
         // PAIRS (6.2 s + 6.2 s run over 10-task twins). ex is one slim
         // row per doc, so a checkpoint barrier is docs-sized and cuts
-        // the window re-runs; prop-gated for the interleaved A/B
-        // (default on — measured −15% and tasks 111→77 at 32 cores).
-        val barrier = !"off".equals(
-          System.getProperty("graft.cascade.barriers"))
-        def cut(df: DataFrame): DataFrame =
-          if (barrier) df.localCheckpoint() else df
+        // the window re-runs (interleaved A/B at sf0.1, 4 cores: median
+        // 4.48 s with the barriers vs 6.45 s without, 6 of 6 pairs).
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("h")).orderBy(desc("n_chars"), col("doc_id"))
-        val ex = cut(docs
+        val ex = docs
           .withColumn("h", md5(lower(trim(col("text")))))
           .select(col("doc_id"), col("h"), col("n_chars"))
           .withColumn("rn", row_number().over(w))
           .withColumn("ex_winner", first(col("doc_id")).over(w))
-          .select(col("doc_id"), col("rn"), col("ex_winner")))
+          .select(col("doc_id"), col("rn"), col("ex_winner"))
+          .localCheckpoint()
         val surv = ex.filter(col("rn") === 1).select(col("doc_id"))
         // both-endpoint survivor restriction of the shared pair set
         // (CacheManager reuses the verified prefix-join fragment);
@@ -1475,7 +1486,7 @@ object Pipeline extends QueryPack {
         // dup-cluster-sized (broadcast at any realistic dup rate).
         // lin is read twice (survDocs' semi-join and the final attach)
         // — same barrier argument as ex above, one slim row per doc
-        val lin = cut(ex
+        val lin = ex
           .join(cc, col("doc_id") === col("node"), "left")
           .join(cc.select(col("node").as("ex_winner"),
             col("cluster_id").as("wcc")), Seq("ex_winner"), "left")
@@ -1485,7 +1496,8 @@ object Pipeline extends QueryPack {
               .otherwise(lit("kept")).as("stage0"),
             when(col("rn") > 1, coalesce(col("wcc"), col("ex_winner")))
               .when(nearDropped, col("cluster_id"))
-              .otherwise(col("doc_id")).as("winner_id")))
+              .otherwise(col("doc_id")).as("winner_id"))
+          .localCheckpoint()
         // stage 3 (VERDICT r14 #6): the SUBSTRING pass over the
         // post-dedup survivors — a doc that cleared both whole-doc
         // stages can still carry cross-doc verbatim spans the span
@@ -1623,17 +1635,12 @@ object Pipeline extends QueryPack {
       // gram frame is EXPLODED (~6-8× its source slice, SCALING §4),
       // so its gate carries the gramExpansion factor (ADVICE r15);
       // the row-per-doc nb side keeps the plain 128 MB source bound.
-      corpus.join(graft.engine.Layout.probeSide(batch, src,
+      jaccardVerdicts(corpus.join(graft.engine.Layout.probeSide(batch, src,
           graft.engine.Layout.gramExpansion), Seq("g"))
         .groupBy(col("batch_id"), col("corpus_id"))
         .agg(count(lit(1)).as("inter_n"))
         .join(graft.engine.Layout.probeSide(nb, src), Seq("batch_id"))
-        .join(nc, Seq("corpus_id"))
-        .filter(col("inter_n") * 3 >= col("nb") + col("nc"))
-        .select(col("batch_id"), col("corpus_id"), col("inter_n"),
-          (col("nb") + col("nc") - col("inter_n")).as("union_n"),
-          round(col("inter_n").cast("double") /
-            (col("nb") + col("nc") - col("inter_n")), 6).as("jac"))
+        .join(nc, Seq("corpus_id")))
         .orderBy(col("batch_id"), col("corpus_id"))
     }),
 

@@ -269,6 +269,19 @@ class MaintenanceSpec extends SparkTestBase {
     assert(nB >= dayPreds.size, s"expected ${dayPreds.size} triggers, got $nB")
     assert(nRecl >= 1, "the policy never tripped mid-stream")
     assert(tEnd != tS, "the loop did not swap to the repaired index")
+    // a second run on the drained checkpoint processes no batch and
+    // leaves the verdict sink and the index tables unchanged
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    def state() = (rows(spark.read.parquet(s"$work/out")),
+      rows(spark.table(tEnd._1)), rows(Layout.readTable(spark, tEnd._2)))
+    val before = state()
+    val (tAgain, nAgain, reclAgain) = StreamRunner.runIvfProbeAbsorbLoop(
+      spark, sf, crawl.getAbsolutePath, tEnd, bk, s"$work/out",
+      s"$work/ckpt", "_ivfloopS")
+    assert((tAgain, nAgain, reclAgain) == ((tEnd, 0, 0)),
+      s"drained checkpoint re-ran: $nAgain batches, $reclAgain reclusters")
+    assert(state() == before, "re-run on a drained checkpoint changed the sink or index")
     // the sequential chain: same primitives, same policy, same order
     var tC = operators.Pipeline.buildIvfIndexOn(spark, sf, "_ivfloopC",
       _.filter(col("vec_id") % 16 === 1))

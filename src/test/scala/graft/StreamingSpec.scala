@@ -12,7 +12,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming tumbling window == batch q_stream_tumbling") {
     val stream = StreamRunner.runAvailableNow(spark,
       StreamRunner.tumblingHourly(StreamRunner.eventsStream(spark, sf)),
-      "t_tumbling")
+      "t_tumbling", "complete")
       .withColumn("win_start", col("win_start").cast("timestamp_ntz"))
     val batch = q("q_stream_tumbling")
     assert(stream.count() == batch.count())
@@ -25,7 +25,7 @@ class StreamingSpec extends SparkTestBase {
       .agg(min(to_date(col("ts"))).as("cohort_day"))
     val stream = StreamRunner.runAvailableNow(spark,
       StreamRunner.cohortEnriched(StreamRunner.eventsStream(spark, sf), userDim),
-      "t_cohort_enriched")
+      "t_cohort_enriched", "complete")
     val batch = batchEvents.join(userDim, Seq("user_id"))
       .groupBy(col("cohort_day"), col("event_type"))
       .agg(count(lit(1)).as("n"))
@@ -36,7 +36,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming session windows == batch q_stream_session (keys+counts)") {
     val stream = StreamRunner.runAvailableNow(spark,
       StreamRunner.sessions(StreamRunner.eventsStream(spark, sf)),
-      "t_sessions")
+      "t_sessions", "complete")
       .withColumn("session_start", col("session_start").cast("timestamp_ntz"))
     val batch = q("q_stream_session")
       .select(col("user_id"), col("session_start"), col("n_events"))
@@ -89,9 +89,9 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("stream-stream interval join == batch join (clicks within 1h before purchase)") {
-    val stream = StreamRunner.runAvailableNowAppend(spark,
+    val stream = StreamRunner.runAvailableNow(spark,
       StreamRunner.purchaseClickJoin(StreamRunner.eventsStream(spark, sf)),
-      "t_ssjoin")
+      "t_ssjoin", "append")
     val ev = graft.engine.Tables.t(spark, sf, "events")
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id"), col("ts").as("p_ts"))
@@ -200,7 +200,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("foreachBatch parquet sink lands the stream incrementally") {
     val tmp = java.nio.file.Files.createTempDirectory("sink").toString
-    StreamRunner.runForeachBatchParquet(spark,
+    StreamRunner.runForeachBatchParquet(
       StreamRunner.eventsStream(spark, sf)
         .withWatermark("ts", "1 hour")
         .select(col("event_id"), col("ts"), col("user_id")),
@@ -246,15 +246,6 @@ class StreamingSpec extends SparkTestBase {
     StreamRunner.snapshotScd2Ingest(spark, base, work)
     assert(new java.io.File(s"$work/state").listFiles()
       .count(_.getName.matches("v\\d+")) == versions, "no-op run must not add a version")
-  }
-
-  test("streaming incremental dedup == batch q_dedup_incremental") {
-    val work = java.nio.file.Files.createTempDirectory("graft-incdedup").toString
-    StreamRunner.runIncrementalDedup(spark, sf, s"$work/out", s"$work/ckpt")
-    val stream = spark.read.parquet(s"$work/out")
-    val batch = q("q_dedup_incremental")
-    assert(stream.count() == batch.count() && stream.count() > 0)
-    assert(stream.exceptAll(batch).isEmpty && batch.exceptAll(stream).isEmpty)
   }
 
   test("streaming incremental dedup probing the STANDING INDEX == batch q_dedup_incremental") {
@@ -448,6 +439,19 @@ class StreamingSpec extends SparkTestBase {
       tbl(cB).exceptAll(tbl(cS)).isEmpty, "count tables diverged")
     // absorb is live: day-1 keepers are IN the stream's index
     assert(tbl(cS).filter(col("corpus_id") % 20 === 0).count() > 0)
+
+    // a second run on the drained checkpoint processes no batch and
+    // leaves the verdict sink and both index tables unchanged
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val sinkBefore = rows(spark.read.parquet(s"$work/out"))
+    val idxBefore = (rows(tbl(gS)), rows(tbl(cS)))
+    assert(StreamRunner.runProbeAbsorbLoop(spark, sf, crawl, gS, cS, bk,
+      s"$work/out", s"$work/ckpt") == 0, "drained checkpoint re-ran a batch")
+    assert(rows(spark.read.parquet(s"$work/out")) == sinkBefore,
+      "re-run on a drained checkpoint changed the verdict sink")
+    assert((rows(tbl(gS)), rows(tbl(cS))) == idxBefore,
+      "re-run on a drained checkpoint changed the index")
 
     // replay of a completed batch is a no-op (verdict partition
     // overwritten identically, index untouched)
@@ -782,5 +786,40 @@ class StreamingSpec extends SparkTestBase {
     // and the fold really compacted: one file per bucket at the end
     assert(spark.table(gM).inputFiles.length.toLong <= bk,
       "the between-batch folds left the fan-in unfolded")
+  }
+
+  test("one micro-batch sink and one Jaccard threshold in src/main") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    val root = Path.of("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root (cwd ${Path.of("").toAbsolutePath})")
+    def sources(dir: Path): List[Path] = {
+      val it = Files.walk(dir)
+      try it.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally it.close()
+    }
+    // every .writeStream sits in StreamRunner.drain or the memory-sink
+    // runner (StreamStress's processAllAvailable join lives outside
+    // these packages: it needs explicit per-tranche batch boundaries,
+    // which AvailableNow cannot give)
+    val owners = Set("drain", "runAvailableNow")
+    val defName = """def\s+(\w+)""".r
+    val offenders = for {
+      pkg <- List("streaming", "operators", "engine")
+      p <- sources(root.resolve("graft").resolve(pkg))
+      src = Files.readString(p)
+      at <- """\.writeStream\b""".r.findAllMatchIn(src).map(_.start).toList
+      owner = defName.findAllMatchIn(src.substring(0, at)).toList
+        .lastOption.map(_.group(1))
+      if !(p.endsWith(Path.of("streaming", "StreamRunner.scala")) &&
+        owner.exists(owners))
+    } yield s"$p: .writeStream in ${owner.getOrElse("<no def>")}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    val threshold = java.util.regex.Pattern.quote("""col("inter_n") * 3""").r
+    val copies = sources(root).flatMap { p =>
+      Seq.fill(threshold.findAllMatchIn(Files.readString(p)).size)(p)
+    }
+    assert(copies.size <= 1, s"Jaccard threshold written out ${copies.size}×: " +
+      copies.mkString(", "))
   }
 }
