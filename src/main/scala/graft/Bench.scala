@@ -441,7 +441,7 @@ object Bench {
     }
     // ---- one-time build warm (ADVICE r12) ----
     // Several queries carry build-at-first-EXECUTION work — landed CSV
-    // trees (holdingsBase), bucketed managed tables (bucketedBase),
+    // trees (holdingsTree), bucketed managed tables (bucketedBase),
     // snapshot trees + stream state (snapshotBase/scd2), the media
     // fixture + real-embedding decode, the semantic fit memo. That
     // cost is one-time layout construction, not query cost, yet it

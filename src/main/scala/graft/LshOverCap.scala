@@ -47,6 +47,10 @@ object LshOverCap {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     require(System.getProperty(operators.Retrieval.forceShardsProp) == null,
       "organic run: no force-prop may be set at launch")
+    // both runs rebuild the session-memoized text-vector basis, so
+    // their walls and shuffle bytes compare the same work; run() drops
+    // the previous run's basis and LSH leaves
+    System.setProperty(operators.Retrieval.freshFitProp, "true")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -84,6 +88,7 @@ object LshOverCap {
 
     def run(label: String): (Double, Long, String, String) = {
       spark.catalog.clearCache()
+      operators.Retrieval.releaseFreshLeaves(spark)
       settle(); val b0 = shuffleBytes.get()
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(qname)(spark, dir)

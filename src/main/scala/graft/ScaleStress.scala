@@ -184,6 +184,8 @@ object ScaleStress {
           var mb = 0.0
           var mbCold = 0.0
           val wall = (1 to 2).map { p =>
+            // fresh-fit text leaves of the last pass outlive clearCache()
+            graft.operators.Retrieval.releaseFreshLeaves(spark)
             settle(); val b0 = shuffleBytes.get()
             val t0 = System.nanoTime()
             fn(spark, dir).write.format("noop").mode("overwrite").save()

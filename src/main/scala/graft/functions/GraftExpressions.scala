@@ -57,8 +57,7 @@ object ExprHelpers {
     * interval, whose width (≲1e-13·|d|) is far below 10^-scale, so
     * setScale(scale, HALF_UP) of the shortest repr lands on exactly c:
     * the compact Decimal(c) IS the cast's result. Values with more
-    * decimals take the cast's own BigDecimal path; NaN/Inf → null
-    * (cast parity).
+    * decimals take the cast's own BigDecimal path.
     *
     * OVERFLOW THROWS (r18, ADVICE r17 medium): the non-ANSI cast
     * returns null past 10^(prec−scale), and every caller sits under
@@ -70,9 +69,16 @@ object ExprHelpers {
     * instead of corrupting sums. Bound check is two-sided (not
     * Math.abs) because Math.round saturates at Long.MinValue, whose
     * abs is negative — the saturated c could otherwise slip through
-    * as garbage (ADVICE r17 low). */
+    * as garbage (ADVICE r17 low).
+    *
+    * NaN and ±Inf throw too (ADVICE r18 low): the cast nulls them, and
+    * every caller reads a stored column, never a computed ratio. Null
+    * input stays null (the expression is null-safe). */
   def fastDec(d: Double, prec: Int, scale: Int): org.apache.spark.sql.types.Decimal = {
-    if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) return null
+    if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d))
+      throw new ArithmeticException(
+        s"fast_dec: $d has no decimal($prec,$scale) value — callers sum " +
+          "these exactly, so a nulled row would silently vanish from the sum")
     val mult = pow10(scale)
     val c = Math.round(d * mult)
     val lim = pow10(prec).toLong
@@ -143,11 +149,8 @@ case class FastDecimal(child: Expression, precision: Int, scale: Int)
   override def nullSafeEval(d: Any): Any =
     ExprHelpers.fastDec(d.asInstanceOf[Double], precision, scale)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      org.apache.spark.sql.types.Decimal r =
-        graft.functions.ExprHelpers.fastDec($c, $precision, $scale);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r; }
-    """)
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.ExprHelpers.fastDec($c, $precision, $scale);")
   override def prettyName: String = "fast_dec"
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

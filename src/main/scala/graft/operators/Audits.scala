@@ -252,7 +252,10 @@ object Audits extends QueryPack {
       val verdicts = Retrieval.queries("q_dedup_semantic")(s, d)
         .select(col("doc_id"), col("cid"), col("is_kept"))
         .localCheckpoint()
-      val cvf = Retrieval.packedVecsF(s, d)
+      val cvf = Retrieval.textBasis(s, d).vecs
+      // the audit's OWN in-cell pass, written apart from the one in
+      // q_dedup_semantic so the two can disagree; only the integer gate
+      // is shared, and q_audit_text_recall's oracle recomputes that
       val sides = verdicts.join(cvf, Seq("doc_id")).cache()
       val aa = sides.select(col("cid"), col("doc_id").as("da"),
         col("vf").as("vfa"), col("n2f").as("n2a"))
@@ -269,15 +272,8 @@ object Audits extends QueryPack {
         .select(col("da"), col("db")).distinct()
       val va = sides.select(col("doc_id").as("da"), col("cv").as("cva"))
       val vb = sides.select(col("doc_id").as("db"), col("cv").as("cvb"))
-      val shadowed = cand.join(va, Seq("da")).join(vb, Seq("db"))
-        .select(col("da"), col("db"), expr(
-          "aggregate(zip_with(cva, cvb, (x, y) -> x * y), " +
-            "cast(0 as bigint), (acc, x) -> acc + x)").as("dot"),
-          expr("aggregate(cva, cast(0 as bigint), (acc, x) -> acc + x * x)").as("na"),
-          expr("aggregate(cvb, cast(0 as bigint), (acc, x) -> acc + x * x)").as("nb"))
-        .filter(col("dot") > 0 &&
-          col("dot").cast("decimal(38,0)") * col("dot") * 100 >=
-            col("na").cast("decimal(38,0)") * col("nb") * 81)
+      val shadowed = Retrieval.exactCosGate(
+          cand.join(va, Seq("da")).join(vb, Seq("db")))
         .select(col("db").as("doc_id")).distinct()
         .withColumn("shadowed", lit(true))
       verdicts.join(shadowed, Seq("doc_id"), "left")
@@ -295,8 +291,8 @@ object Audits extends QueryPack {
     // Exhaustive-slice recall audit of the adaptive-width text LSH
     // (q_dedup_text_lsh): the TRUE cosine ≥ 0.9 pair set over the
     // doc_id < 2000 slice by brute force (codegen'd float prefilter,
-    // integer-exact gate — packedVecsF's margin argument), each pair
-    // flagged with whether the banded pipeline surfaced it. The
+    // integer-exact gate — the margin argument at Retrieval.TextBasis),
+    // each pair flagged with whether the banded pipeline surfaced it. The
     // oracle recomputes BOTH sides — the exhaustive slice AND the
     // full banded pipeline — so CORRECTNESS itself witnesses the
     // recall, found-flags included. Not a pigeonhole: per-pair band
@@ -312,8 +308,8 @@ object Audits extends QueryPack {
       // pair-set memo (Retrieval.lshPairsShared — the semantic-audit
       // idiom), whose localCheckpoint runs jobs; Deferred keeps the
       // query BUILD job-free (LazyBuildSpec) exactly like
-      // q_audit_semantic. q_dedup_text_lsh itself still recomputes its
-      // full pipeline every run — only the audit's re-derivation of
+      // q_audit_semantic. q_dedup_text_lsh itself still re-derives its
+      // bands and pairs every run — only the audit's re-derivation of
       // the same pair set is shared.
       val idT = graft.engine.Tables.t(s, d, "documents")
         .schema("doc_id").dataType
@@ -322,7 +318,7 @@ object Audits extends QueryPack {
         StructField("cos", org.apache.spark.sql.types.DoubleType),
         StructField("found", org.apache.spark.sql.types.BooleanType,
           nullable = false)))) { () =>
-      val cvf = Retrieval.packedVecsF(s, d).filter(col("doc_id") < 2000)
+      val cvf = Retrieval.textBasis(s, d).vecs.filter(col("doc_id") < 2000)
       // r17 optimization (guide §4/§2.3, measured): the brute-force
       // join carries ONLY the float mirror + id — the integer cv
       // arrays used to ride the BNLJ output, and without a barrier
@@ -332,7 +328,7 @@ object Audits extends QueryPack {
       // The float prefilter is also the single-dot form — one codegen
       // dot per pair instead of three (fdot ≥ 0.88·√(n2a·n2b) admits
       // the same superset: float error ~1e-6 relative against the
-      // 0.88-vs-0.90 margin, packedVecsF scaladoc); the integer gate
+      // 0.88-vs-0.90 margin, TextBasis scaladoc); the integer gate
       // below stays the AUTHORITATIVE filter, so output is unchanged.
       val a = cvf.select(col("doc_id").as("da"),
         col("vf").as("vfa"), col("n2f").as("n2a"))
@@ -347,23 +343,11 @@ object Audits extends QueryPack {
       val cand = a.join(broadcast(b), col("da") < col("db") &&
           fdot >= lit(0.88) * sqrt(col("n2a") * col("n2b")))
         .select(col("da"), col("db")).distinct()
-      val exh = cand
+      val exh = Retrieval.exactCosGate(cand
         .join(broadcast(cvf.select(col("doc_id").as("da"),
           col("cv").as("cva"))), Seq("da"))
         .join(broadcast(cvf.select(col("doc_id").as("db"),
-          col("cv").as("cvb"))), Seq("db"))
-        .select(col("da"), col("db"), expr(
-          "aggregate(zip_with(cva, cvb, (x, y) -> x * y), " +
-            "cast(0 as bigint), (acc, x) -> acc + x)").as("dot"),
-          expr("aggregate(cva, cast(0 as bigint), (acc, x) -> acc + x * x)").as("na"),
-          expr("aggregate(cvb, cast(0 as bigint), (acc, x) -> acc + x * x)").as("nb"))
-        .filter(col("dot") > 0 &&
-          col("dot").cast("decimal(38,0)") * col("dot") * 100 >=
-            col("na").cast("decimal(38,0)") * col("nb") * 81)
-        .select(col("da"), col("db"),
-          round(col("dot").cast("double") /
-            sqrt(col("na").cast("double") * col("nb").cast("double")), 6)
-            .as("cos"))
+          col("cv").as("cvb"))), Seq("db")))
       val lsh = Retrieval.lshPairsShared(s, d).withColumn("hit", lit(true))
       exh.join(lsh, Seq("da", "db"), "left")
         .select(col("da"), col("db"), col("cos"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -101,30 +101,37 @@ object HoldingsContent extends QueryPack {
     !java.lang.Boolean.getBoolean(forceShuffleProp) &&
       Retrieval.dirBytes(new java.io.File(landedDir)) <= 64L * 1024 * 1024
 
-  /** Land the three holdings trees (full period + two snapshot dates)
-    * as flat `{fund}.csv` files, once per (context, sf dir); same
+  /** Parent dir of `d`'s landed holdings trees. Collision-resistant
+    * suffix (ADVICE r12): a 32-bit hashCode collision between two
+    * fixture dirs would rm+rebuild into the SAME tree while the first
+    * memo entry still points there. */
+  private[graft] def holdingsDir(d: String): java.io.File =
+    new java.io.File(sys.props("java.io.tmpdir"),
+      "graft_holdings_" + Tables.dirDigest(d))
+
+  /** A landed holdings tree: its dir name and the lineitem rows it
+    * weighs. */
+  private[graft] final case class Tree(name: String, rows: Column)
+  /** The whole period. */
+  private[graft] val fullTree = Tree("full", lit(true))
+  /** Two snapshot dates, either side of [[splitTs]]. */
+  private[graft] val dateTrees = Seq(
+    Tree("2025-03-01", col("l_shipdate") < lit(splitTs).cast("timestamp")),
+    Tree("2025-03-02", col("l_shipdate") >= lit(splitTs).cast("timestamp")))
+
+  /** Land `tree` as flat `{fund}.csv` files, once per (context, sf dir,
+    * tree), so a query lands only the trees it reads; same
     * build-at-first-execution discipline as Snapshots.snapshotBase. */
-  private[graft] def holdingsBase(s: SparkSession, d: String): String = {
-    val h = Tables.dirDigest(d)
-    Memo.context(s, "holdingsBase", h) {
-      // collision-resistant dir suffix (ADVICE r12): a 32-bit hashCode
-      // collision between two fixture dirs would rm+rebuild into the
-      // SAME tree while the first memo entry still points there
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_holdings_" + h)
+  private[graft] def holdingsTree(s: SparkSession, d: String,
+      tree: Tree): String =
+    Memo.context(s, "holdingsTree", Tables.dirDigest(d), tree.name) {
+      val dir = new java.io.File(holdingsDir(d), tree.name)
       // a partial tree from a killed run must not survive
       Layout.deleteRecursively(dir)
-      val li = Tables.t(s, d, "lineitem")
-      val split = lit(splitTs).cast("timestamp")
-      Holdings.landPerKeyCsv(weights(li),
-        new java.io.File(dir, "full").getAbsolutePath, "fund")
-      Holdings.landPerKeyCsv(weights(li.filter(col("l_shipdate") < split)),
-        new java.io.File(dir, "2025-03-01").getAbsolutePath, "fund")
-      Holdings.landPerKeyCsv(weights(li.filter(col("l_shipdate") >= split)),
-        new java.io.File(dir, "2025-03-02").getAbsolutePath, "fund")
+      val rows = Tables.t(s, d, "lineitem").filter(tree.rows)
+      Holdings.landPerKeyCsv(weights(rows), dir.getAbsolutePath, "fund")
       dir.getAbsolutePath
     }
-  }
 
   /** Land N=4 snapshot dates of per-fund weights under the
     * Catalog.writeSnapshot partition layout (round 14, VERDICT r13 #6 —
@@ -250,7 +257,7 @@ object HoldingsContent extends QueryPack {
         StructField("n_common", LongType),
         StructField("overlap_wt", DoubleType)))
       graft.plans.Deferred.df(s, "holdings_overlap", schema) { () =>
-        val landed = holdingsBase(s, d) + "/full"
+        val landed = holdingsTree(s, d, fullTree)
         val w = holdings(s, landed)
         val a = w.select(col("isin").as("fund_a"), col("constituent"),
           col("w").as("wa"))
@@ -350,12 +357,11 @@ object HoldingsContent extends QueryPack {
         StructField("drift", DoubleType),
         StructField("drift_rank", IntegerType)))
       graft.plans.Deferred.df(s, "holdings_drift", schema) { () =>
-        val base = holdingsBase(s, d)
         val zero = lit(0).cast("decimal(12,10)")
-        val wa = holdings(s, base + "/2025-03-01")
-          .select(col("isin"), col("constituent"), col("w").as("w_a"))
-        val wb = holdings(s, base + "/2025-03-02")
-          .select(col("isin"), col("constituent"), col("w").as("w_b"))
+        val Seq(wa, wb) = dateTrees.zip(Seq("w_a", "w_b")).map {
+          case (t, w) => holdings(s, holdingsTree(s, d, t))
+            .select(col("isin"), col("constituent"), col("w").as(w))
+        }
         val win = org.apache.spark.sql.expressions.Window
           .partitionBy(col("isin"))
           .orderBy(abs(col("drift_d")).desc, col("constituent"))

@@ -18,7 +18,7 @@ import graft.functions.ExprHelpers
   */
 class FastDecimalSpec extends SparkTestBase {
 
-  private def viaDf2(d: Double): Option[java.math.BigDecimal] = {
+  private def viaDf2(d: java.lang.Double): Option[java.math.BigDecimal] = {
     import scala.jdk.CollectionConverters._
     val df = spark.createDataFrame(
       Seq(org.apache.spark.sql.Row(d)).asJava,
@@ -56,10 +56,20 @@ class FastDecimalSpec extends SparkTestBase {
     }
   }
 
-  test("NaN and infinity stay null (cast parity), null input stays null") {
-    assert(ExprHelpers.fastDec(Double.NaN, 8, 2) == null)
-    assert(ExprHelpers.fastDec(Double.PositiveInfinity, 8, 2) == null)
-    assert(ExprHelpers.fastDec(Double.NegativeInfinity, 8, 2) == null)
+  private def causes(t: Throwable): Seq[Throwable] =
+    if (t == null) Nil else t +: causes(t.getCause)
+
+  test("NaN and infinity THROW like overflow, null input stays null") {
+    // the cast would null them, and a nulled row vanishes from an exact
+    // sum just as an overflowed one would (ADVICE r18 low): the
+    // direct-eval path and the codegen'd DataFrame path both fail loudly
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).foreach { d =>
+      intercept[ArithmeticException] { ExprHelpers.fastDec(d, 8, 2) }
+      val e = intercept[Exception] { viaDf2(d) }
+      assert(causes(e).exists(_.isInstanceOf[ArithmeticException]),
+        s"$d: expected ArithmeticException in cause chain, got $e")
+    }
+    assert(viaDf2(null).isEmpty)
   }
 
   test("per-row overflow THROWS instead of silently nulling the row") {
@@ -71,9 +81,7 @@ class FastDecimalSpec extends SparkTestBase {
     intercept[ArithmeticException] { ExprHelpers.fastDec(-1.23e7, 8, 2) }
     intercept[ArithmeticException] { ExprHelpers.fastDec(1.0e4, 8, 4) }
     val e = intercept[Exception] { viaDf2(1.0e6) }
-    def chain(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: chain(t.getCause)
-    assert(chain(e).exists(_.isInstanceOf[ArithmeticException]),
+    assert(causes(e).exists(_.isInstanceOf[ArithmeticException]),
       s"expected ArithmeticException in cause chain, got $e")
     // just-inside values survive the same code path
     assert(viaDf2(999999.99).get == new java.math.BigDecimal("999999.99"))

@@ -12,18 +12,18 @@ import graft.sources.Holdings
 class HoldingsSpec extends SparkTestBase {
 
   test("landing shape: one flat {fund}.csv per fund — the reference's download layout") {
-    val base = HoldingsContent.holdingsBase(spark, sf)
-    for (sub <- Seq("full", "2025-03-01", "2025-03-02")) {
-      val files = new java.io.File(base, sub).listFiles()
+    for (tree <- HoldingsContent.fullTree +: HoldingsContent.dateTrees) {
+      val files = new java.io.File(HoldingsContent.holdingsTree(spark, sf, tree))
+        .listFiles()
         .filter(_.getName.endsWith(".csv")).map(_.getName).sorted
       assert(files.toSeq == (0 to 5).map(i => s"F$i.csv"),
-        s"$sub landed ${files.mkString(",")}")
+        s"${tree.name} landed ${files.mkString(",")}")
     }
   }
 
   test("csv round trip is lossless: ingested weights equal a direct recompute") {
-    val base = HoldingsContent.holdingsBase(spark, sf)
-    val ingested = Holdings.readHoldings(spark, s"$base/full")
+    val ingested = Holdings.readHoldings(spark,
+      HoldingsContent.holdingsTree(spark, sf, HoldingsContent.fullTree))
       .select(col("isin"), col("constituent").cast("long").as("constituent"),
         col("weight").cast("decimal(12,10)").as("w"))
     // recompute the weights straight from lineitem (never touching csv)
@@ -43,8 +43,8 @@ class HoldingsSpec extends SparkTestBase {
   }
 
   test("per-fund ingested weights sum to 1 (up to 1e-10-per-row rounding)") {
-    val base = HoldingsContent.holdingsBase(spark, sf)
-    val sums = Holdings.readHoldings(spark, s"$base/full")
+    val sums = Holdings.readHoldings(spark,
+      HoldingsContent.holdingsTree(spark, sf, HoldingsContent.fullTree))
       .groupBy(col("isin"))
       .agg(sum(col("weight").cast("decimal(12,10)")).as("s"),
         count(lit(1)).as("n"))
@@ -159,5 +159,25 @@ class HoldingsSpec extends SparkTestBase {
     val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .map(t => String.valueOf(t.getMessage)).mkString(" | ")
     assert(msgs.contains("header"), msgs)
+  }
+
+  test("q_holdings_overlap lands only the full tree, never the two date trees") {
+    // a fixture dir no other case touches — a fresh copy of lineitem —
+    // so neither this context's memo nor an earlier run landed its trees
+    val d = java.nio.file.Files.createTempDirectory("graft-holdings-full-only")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/lineitem.parquet"),
+      d.resolve("lineitem.parquet"))
+    val landed = HoldingsContent.holdingsDir(d.toString)
+    try {
+      val rows = SparkEntry.queries("q_holdings_overlap")(spark, d.toString)
+        .collect()
+      assert(rows.length == 15, s"${rows.length} fund pairs")
+      val trees = Option(landed.list()).map(_.toSeq.sorted).getOrElse(Nil)
+      assert(trees == Seq(HoldingsContent.fullTree.name),
+        s"landed trees: ${trees.mkString(",")}")
+    } finally {
+      graft.engine.Layout.deleteRecursively(landed)
+      graft.engine.Layout.deleteRecursively(d.toFile)
+    }
   }
 }

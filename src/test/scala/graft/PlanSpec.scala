@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.execution.{ReusedSubqueryExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+
 /** Physical-plan assertions for the 100 TB design point (SURVEY.md §4):
   * filters/columns reach the parquet scan, small dims broadcast,
   * aggregation is map-side partial, hot paths stay in whole-stage
@@ -9,6 +14,27 @@ class PlanSpec extends SparkTestBase {
 
   private def plan(name: String): String =
     q(name).queryExecution.executedPlan.toString
+
+  /** q_dedup_text_lsh runs its body inside Deferred: the plan cases
+    * assert on the body's own frame. */
+  private def textLshPlan: String =
+    graft.operators.Retrieval.textLsh(spark, sf).queryExecution.optimizedPlan.toString
+
+  /** Every node reachable from an executed plan: children, subqueries,
+    * AQE stages, reused exchanges, cached plans and built Deferred
+    * inner plans. */
+  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val next: Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case st: QueryStageExec => Seq(st.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case r: ReusedSubqueryExec => Seq(r.child)
+      case i: InMemoryTableScanExec => Seq(i.relation.cachedPlan)
+      case d: graft.plans.DeferredExec => d.body.maybeInner.toSeq
+      case _ => p.children ++ p.subqueries
+    }
+    p +: next.flatMap(allNodes)
+  }
 
   /** Plan after execution — AQE finalizes stages (codegen visible). */
   private def finalPlan(name: String): String = {
@@ -421,10 +447,10 @@ class PlanSpec extends SparkTestBase {
     // with those two hints gone (co-partitioned shuffle joins) and no
     // nested-loop fallback anywhere
     def hints(p: String): Int = "strategy=broadcast".r.findAllIn(p).length
-    val deflt = q("q_dedup_text_lsh").queryExecution.optimizedPlan.toString
+    val deflt = textLshPlan
     System.setProperty(graft.operators.Retrieval.forceBucketedProp, "true")
     val forced =
-      try q("q_dedup_text_lsh").queryExecution.optimizedPlan.toString
+      try textLshPlan
       finally System.clearProperty(graft.operators.Retrieval.forceBucketedProp)
     // four verification attaches since the round-11 survivor barrier:
     // two float-prefilter sides + two integer re-attach sides
@@ -447,10 +473,10 @@ class PlanSpec extends SparkTestBase {
     // gains (sa=ta, tb=sb), the hamming prefilter stays INSIDE the
     // join, and no nested-loop fallback appears. The default sub-cap
     // plan must carry none of the shard machinery.
-    val deflt = q("q_dedup_text_lsh").queryExecution.optimizedPlan.toString
+    val deflt = textLshPlan
     System.setProperty(graft.operators.Retrieval.forceShardsProp, "3")
     val forced =
-      try q("q_dedup_text_lsh").queryExecution.optimizedPlan.toString
+      try textLshPlan
       finally System.clearProperty(graft.operators.Retrieval.forceShardsProp)
     assert(!deflt.contains("xxhash64"), deflt) // sub-cap: no shard cols
     assert(forced.contains("Generate explode"), forced)
@@ -458,6 +484,62 @@ class PlanSpec extends SparkTestBase {
     assert("tb#\\d+ = sb#\\d+".r.findFirstIn(forced).isDefined, forced)
     assert(forced.contains("bit_count"), forced)
     assert(!forced.contains("CartesianProduct"), forced)
+  }
+
+  test("q_dedup_text_lsh adds no entry to the shared CacheManager") {
+    // the text-vector basis and the proj/keyed stages are checkpointed
+    // leaves: a cache() anywhere in the pipeline registers here. A fresh
+    // session builds the session-memoized basis anew.
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    SparkEntry.queries("q_dedup_text_lsh")(spark.newSession(), sf).collect()
+    assert(cm.isEmpty, "q_dedup_text_lsh cached a frame")
+  }
+
+  test("q_dedup_text_lsh and q_dedup_semantic read no cache nested in a cache") {
+    // a cache over a cache re-renders, re-plans and pins the whole
+    // inner tree in every consumer; the basis is leaves instead
+    for (n <- Seq("q_dedup_text_lsh", "q_dedup_semantic")) {
+      val df = q(n)
+      df.collect()
+      val nested = allNodes(df.queryExecution.executedPlan).collect {
+        case i: InMemoryTableScanExec
+            if allNodes(i.relation.cachedPlan).exists(_.isInstanceOf[InMemoryTableScanExec]) =>
+          i.relation.cachedPlan
+      }
+      assert(nested.isEmpty, s"$n: ${nested.size} cached plan(s) read a cache, " +
+        s"first:\n${nested.headOption.map(_.treeString.take(4000)).getOrElse("")}")
+    }
+  }
+
+  test("fresh-fit text leaves outlive clearCache() until releaseFreshLeaves drops them") {
+    // ScaleStress and LshOverCap rebuild the basis and LSH leaves on
+    // every run under freshFitProp; releasing them between runs must
+    // free their storage and leave the next run's result unchanged
+    import graft.operators.Retrieval
+    val sc = spark.sparkContext
+    def leafBytes: Long = sc.getRDDStorageInfo
+      .filter(_.name == Retrieval.freshLeafName)
+      .map(i => i.memSize + i.diskSize).sum
+    def pairs = q("q_dedup_text_lsh").collect().map(_.toString).sorted
+    val memoized = pairs // builds the session-memoized basis first
+    System.setProperty(Retrieval.freshFitProp, "true")
+    try {
+      val first = pairs
+      assert(first.sameElements(memoized), "fresh basis diverged")
+      spark.catalog.clearCache()
+      assert(leafBytes > 0, "no fresh leaf in block storage")
+      Retrieval.releaseFreshLeaves(spark)
+      assert(leafBytes == 0 && !sc.getPersistentRDDs.values
+        .exists(_.name == Retrieval.freshLeafName), "a fresh leaf survived")
+      assert(pairs.sameElements(first), "rebuild after release diverged")
+    } finally {
+      Retrieval.releaseFreshLeaves(spark)
+      System.clearProperty(Retrieval.freshFitProp)
+    }
+    // the memoized basis is no fresh leaf: its blocks are still there
+    assert(pairs.sameElements(memoized), "memoized basis lost")
   }
 
   test("q_recursive_reach: executes via the recursive-CTE loop over real edges") {

@@ -111,7 +111,7 @@ class SchemaContractSpec extends SparkTestBase {
     // |c_j| < 2^28; pin the corpus to that bound on the same dirs.
     import org.apache.spark.sql.functions._
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
-      val mx = graft.operators.Retrieval.centeredDense(spark, dir)
+      val mx = graft.operators.Retrieval.textBasis(spark, dir).dense
         .agg(max(abs(col("c")))).collect()(0).getLong(0)
       assert(mx < (1L << 28),
         s"TESTDATA DRIFT in $dir: max |centered component| = $mx >= 2^28 — " +
