@@ -202,20 +202,16 @@ object Bench {
     * scheduler hiccups in the baseline, which would INFLATE eff). */
   private def effectiveParallelism(threads: Int): Double = {
     val units = 20000000L // ~20 ms on one unloaded core
-    val t1 = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      calSink.addAndGet(spin(units))
-      (System.nanoTime() - t0) / 1e9
-    }.min
+    val t1 = (1 to 3).map(_ => Harness.secs(calSink.addAndGet(spin(units)))).min
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    val w0 = System.nanoTime()
-    val futs = (1 to threads).map { _ =>
-      pool.submit(new Runnable {
-        override def run(): Unit = calSink.addAndGet(spin(units))
-      })
+    val tN = Harness.secs {
+      val futs = (1 to threads).map { _ =>
+        pool.submit(new Runnable {
+          override def run(): Unit = calSink.addAndGet(spin(units))
+        })
+      }
+      futs.foreach(_.get())
     }
-    futs.foreach(_.get())
-    val tN = (System.nanoTime() - w0) / 1e9
     pool.shutdown()
     math.min(threads.toDouble, threads * t1 / tN)
   }
@@ -264,11 +260,8 @@ object Bench {
     * (JIT warm-up inflates them 2-3x), min of the rest — the min keeps
     * one clean rep sufficient under transient contention. */
   private def spinT1(): Double =
-    (1 to 6).map { _ =>
-      val t0 = System.nanoTime()
-      calSink.addAndGet(spin(20000000L))
-      (System.nanoTime() - t0) / 1e9
-    }.drop(2).min
+    (1 to 6).map(_ => Harness.secs(calSink.addAndGet(spin(20000000L))))
+      .drop(2).min
 
   /** Raw cgroup v2 CPU quota ("max 100000" = unthrottled, or
     * "<quota_us> <period_us>"), plus the implied core count. */
@@ -285,42 +278,25 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus
     // shuffle partitions default to the core count; overridable because
-    // under N-stream concurrency each query needs only ~cores/N
-    val shuffleParts =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    // SPARK_GRAFT_MASTER=local-cluster[2,8,4096] benches with real
-    // separate executor JVMs (serialized broadcast/shuffle/closures) —
-    // the multi-JVM perf axis (VERDICT r10 #5), same contract as
-    // graft.Verify; SPARK_GRAFT_JAR ships the app classes.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      // r18 negative result (VERDICT r17 #1 hypothesis): enabling
-      // spark.sql.optimizer.canChangeCachedPlanOutputPartitioning was
-      // A/B'd as the suspected cause of the 8-vs-32-core inversion on
-      // the cache-heavy LSH family. A PAIRED in-session A/B
-      // (graft.operators.ProfAB — both confs alternated inside one
-      // process, cache cleared+rewarmed per arm, so window drift hits
-      // both arms) measured it a WASH: identical task counts (225) and
-      // medians within noise on q_dedup_text_lsh/pagerank/cluster_star
-      // — the cached fragments end in projections, not exchanges, so
-      // the final-stage partitioning the conf governs never applies.
-      // Split-session A/Bs had shown ±30% "wins" at equal 1-min
-      // loadavg; treat any future conf claim here with the same
-      // paired-methodology bar. Spark default (false) kept.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      // managed tables (the bucketed-layout queries) land in a fresh
-      // tmp warehouse, never a cwd-relative spark-warehouse/
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JAR").foreach(j => builder.config("spark.jars", j))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // under N-stream concurrency each query needs only ~cores/N.
+    // r18 negative result (VERDICT r17 #1 hypothesis): enabling
+    // spark.sql.optimizer.canChangeCachedPlanOutputPartitioning was
+    // A/B'd as the suspected cause of the 8-vs-32-core inversion on
+    // the cache-heavy LSH family. A PAIRED in-session A/B
+    // (graft.operators.ProfAB — both confs alternated inside one
+    // process, cache cleared+rewarmed per arm, so window drift hits
+    // both arms) measured it a WASH: identical task counts (225) and
+    // medians within noise on q_dedup_text_lsh/pagerank/cluster_star
+    // — the cached fragments end in projections, not exchanges, so
+    // the final-stage partitioning the conf governs never applies.
+    // Split-session A/Bs had shown ±30% "wins" at equal 1-min
+    // loadavg; treat any future conf claim here with the same
+    // paired-methodology bar. Spark default (false) kept.
+    val spark = Harness.session(Map("spark.scheduler.mode" -> "FAIR") ++
+      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS")
+        .map("spark.sql.shuffle.partitions" -> _))
     spark.read.parquet(s"$sfDir/nation.parquet").count()
 
     // ---- opt-in shuffle accounting (round-8, VERDICT r7 #7) ----
@@ -330,21 +306,9 @@ object Bench {
     // AFTER the timed region — that wait is excluded from the reported
     // secs but still serializes queries, so it stays env-gated and off
     // for driver runs.
-    val trackShuffle = sys.env.get("SPARK_GRAFT_BENCH_SHUFFLE").contains("1")
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong()
-    if (trackShuffle)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-            shuffleWrite.addAndGet(
-              e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        })
-    def settleShuffle(): Long = {
-      var prev = -1L; var cur = shuffleWrite.get()
-      while (cur != prev) { Thread.sleep(200); prev = cur; cur = shuffleWrite.get() }
-      cur
-    }
+    val stages = sys.env.get("SPARK_GRAFT_BENCH_SHUFFLE").filter(_ == "1")
+      .map(_ => graft.engine.Metrics.countStages(spark))
+    val trackShuffle = stages.isDefined
     // per-query MAX across passes: memoized/cached subtrees make warm
     // passes shuffle less, and the cold (first-touch) bytes are the
     // number that scales with the data
@@ -358,22 +322,18 @@ object Bench {
 
     def runOne(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val track = trackShuffle && inSeqPhase
-      val b0 = if (track) settleShuffle() else 0L
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
-      val secs = (System.nanoTime() - t0) / 1e9
-      if (track) {
-        val bytes = settleShuffle() - b0
+      val b0 = stages.filter(_ => inSeqPhase).map(_.settle())
+      val secs =
+        try Harness.secs(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+        catch { case _: Throwable => return -1.0 }
+      for (c <- stages; b <- b0) {
+        val bytes = (c.settle() - b).shuffleWriteBytes
         qShuffle(name) = math.max(qShuffle.getOrElse(name, 0L), bytes)
       }
       secs
     }
 
-    def loadavg: Double = math.rint(java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage * 10) / 10
-    val load0 = loadavg
+    val load0 = Harness.loadavg
 
     // Per-query time = MIN across passes (round-4 fix: a single last-
     // pass sample recorded 4-6.5x co-tenant spikes as if they were code
@@ -396,7 +356,7 @@ object Bench {
     // retries counts from 1 at the first retry
     def retryBackoffMs(retries: Int): Long =
       retryBackoff(retrySleepMs, retries)
-    def halfCores = cpus.toInt / 2.0
+    def halfCores = cpus / 2.0
     // Degraded-aware SEQ phase (round 11, VERDICT r10 #4 + ADVICE r10):
     // BENCH_r10's per-query map shipped from a loadavg-10 window with
     // nothing marking it. Each seq pass is now BRACKETED by two
@@ -411,7 +371,7 @@ object Bench {
     val seqCalDegraded = scala.collection.mutable.ArrayBuffer[Boolean]()
     // the pinned refs are only meaningful on the surface they were
     // measured on: full query set, sf0.1, 32 advertised cores
-    val ctlActive = args.isEmpty && cpus.toInt == 32 &&
+    val ctlActive = args.isEmpty && cpus == 32 &&
       sfDir.stripSuffix("/").endsWith("sf0.1")
     // per-host spin-calibrated ref scale (ADVICE r12; scaladoc at
     // controlRefT1). ADVICE r13: a single launch-time sample can catch
@@ -481,13 +441,13 @@ object Bench {
     // region), catching the co-tenant that arrives after the leading
     // bracket and leaves before the trailing one (BENCH_r11's blind spot)
     val calEvery = math.max(8, selected.size / 10)
-    var calLead = effectiveParallelism(cpus.toInt)
+    var calLead = effectiveParallelism(cpus)
     while (needAnotherPass(seqMaps.length, passes, seqDegradedFlags,
         seqRetries, maxRetries)) {
       if (seqMaps.length >= passes) {
         seqRetries += 1
         Thread.sleep(retryBackoffMs(seqRetries))
-        calLead = effectiveParallelism(cpus.toInt) // post-sleep re-bracket
+        calLead = effectiveParallelism(cpus) // post-sleep re-bracket
       }
       // ADVICE r13: per-pass t1 re-sample, min-so-far is the scale basis
       ctlT1 = math.min(ctlT1, spinT1())
@@ -495,11 +455,11 @@ object Bench {
       var calInMin = Double.MaxValue
       seqMaps += selected.map { case (n, f) =>
         if (qi > 0 && qi % calEvery == 0)
-          calInMin = math.min(calInMin, effectiveParallelism(cpus.toInt))
+          calInMin = math.min(calInMin, effectiveParallelism(cpus))
         qi += 1
         n -> runOne(n, f)
       }.toMap
-      val calTrail = effectiveParallelism(cpus.toInt)
+      val calTrail = effectiveParallelism(cpus)
       val calIn = if (calInMin == Double.MaxValue) calTrail else calInMin
       seqCals += ((calLead, calIn, calTrail))
       seqCalDegraded +=
@@ -553,7 +513,7 @@ object Bench {
     spark.conf.set("spark.sql.shuffle.partitions",
       sys.env.getOrElse("SPARK_GRAFT_CONC_SHUFFLE_PARTS",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS",
-          math.max(4, cpus.toInt * 4 / streams).toString)))
+          math.max(4, cpus * 4 / streams).toString)))
     val calConc = scala.collection.mutable.ArrayBuffer[(Double, Double)]()
     // Degraded-window retry (round 10, VERDICT r9 #3): BENCH_r09
     // shipped a degraded:true wall while the true number lived only in
@@ -580,29 +540,29 @@ object Bench {
       // catches starvation that begins mid-pass (a mid-pass probe
       // would read low from our own 16 streams, so brackets are the
       // finest honest granularity the concurrent phase allows)
-      val calL = effectiveParallelism(cpus.toInt)
-      val w0 = System.nanoTime()
-      val futs = byCost.map { case (n, f) =>
-        scala.concurrent.Future {
-          // per-thread pool: with scheduler.mode=FAIR, pools are fair-
-          // shared against each other (jobs within one stream stay
-          // FIFO, which is what a stream means). Without this every
-          // job lands in the single default pool, which is FIFO.
-          spark.sparkContext.setLocalProperty("spark.scheduler.pool",
-            Thread.currentThread().getName)
-          n -> runOne(n, f)
+      val calL = effectiveParallelism(cpus)
+      val (results, w) = Harness.timed {
+        val futs = byCost.map { case (n, f) =>
+          scala.concurrent.Future {
+            // per-thread pool: with scheduler.mode=FAIR, pools are fair-
+            // shared against each other (jobs within one stream stay
+            // FIFO, which is what a stream means). Without this every
+            // job lands in the single default pool, which is FIFO.
+            spark.sparkContext.setLocalProperty("spark.scheduler.pool",
+              Thread.currentThread().getName)
+            n -> runOne(n, f)
+          }
         }
+        scala.concurrent.Await.result(scala.concurrent.Future.sequence(futs),
+          scala.concurrent.duration.Duration.Inf)
       }
-      val results = scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futs),
-        scala.concurrent.duration.Duration.Inf)
+      walls += w
       // concurrency-only failures (OOM under load, etc.) must surface:
       // a silently-skipped query would deflate the wall it exists to measure
       concFailed.synchronized {
         concFailed ++= results.collect { case (n, v) if v < 0 => n }
       }
-      walls += (System.nanoTime() - w0) / 1e9
-      val calT = effectiveParallelism(cpus.toInt)
+      val calT = effectiveParallelism(cpus)
       calConc += ((calL, calT))
       passDegraded += (calL < halfCores || calT < halfCores)
     }
@@ -625,8 +585,8 @@ object Bench {
     // spec-length-pinned headline LAST.
     // Stop Spark BEFORE printing so no executor/stop-time log line can
     // land after the machine-readable lines in the bounded capture.
-    val load1 = loadavg
-    val calPost = effectiveParallelism(cpus.toInt)
+    val load1 = Harness.loadavg
+    val calPost = effectiveParallelism(cpus)
     val (cpuMaxRaw, cpuQuotaCores) = cpuMax
     // degraded now means "the REPORTED NUMBERS are starved": the wall
     // only when zero non-degraded conc passes existed after retries,
@@ -687,6 +647,6 @@ object Bench {
     // tail window when it shared the headline's line
     println(s"""{"bench_diag":{"queries_slowest":$slowest12,"loadavg":[$load0,$load1],$effJson,"note":"noop-sink; value=min over NON-degraded ${streams}-stream conc walls ($concPasses cfg + ${walls.length - concPasses} retries, ${retrySleepMs / 1000}s-base exponential backoff), each [lead,trail]-bracketed by a calibrated CPU-spin (effpar ~ cpus = healthy); per-query mins over CLEAN seq passes only (${seqMaps.length} passes, $seqRetries retries; full map on the bench_per_query line); a seq pass is degraded if ANY of: bracket or in-phase calibration (seq_cals=[lead,inMin,trail]) under cpus/2, >=2 pinned control queries >6x their clean-window refs (ctl={name:[ref,run]}, seq_ctl_hit; refs host-scaled by ctl_scale = min per-pass spin t1 / ctl_ref_t1), or any query >6x+5s its cross-pass standing min (seq_outlier); degraded:true = retries never found a healthy window, the number is an environment artifact"}}""")
     println(headlineJson(streams, wall, sfDir, seqTotal, seq.size, failed,
-      cpus, passes, degraded, slowest))
+      cpus.toString, passes, degraded, slowest))
   }
 }

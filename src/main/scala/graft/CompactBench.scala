@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness.round2
 
 /** Timed evidence for Layout.compactBucketed (VERDICT r13 #5 — the
   * lifecycle's last unmeasured step): build the ABSORBED gram index
@@ -12,30 +12,17 @@ import org.apache.spark.sql.SparkSession
   * Usage: SPARK_GRAFT_SF_DIR=<fixture> runMain graft.CompactBench
   */
 object CompactBench {
-  private def round2(v: Double): Double = math.rint(v * 100) / 100
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val bk = graft.engine.Layout.bucketsFor(s"$sfDir/documents.parquet")
     val probe = SparkEntry.queries("q_dedup_index_absorb")
     // first execution builds the absorbed index (write + append)
     val before = probe(spark, sfDir).collect().toSeq
     val (gT, cT) = graft.operators.Pipeline.gramIndexAbsorbed(spark, sfDir)
-    val t0 = System.nanoTime()
-    val (gb, ga) = graft.engine.Layout.compactBucketed(spark, gT, "g", bk)
-    val (cb, ca) = graft.engine.Layout.compactBucketed(
-      spark, cT, "corpus_id", bk)
-    val wall = (System.nanoTime() - t0) / 1e9
+    val (((gb, ga), (cb, ca)), wall) = Harness.timed((
+      graft.engine.Layout.compactBucketed(spark, gT, "g", bk),
+      graft.engine.Layout.compactBucketed(spark, cT, "corpus_id", bk)))
     val after = probe(spark, sfDir).collect().toSeq
     require(before.nonEmpty && before == after,
       s"post-compact probe diverged: ${before.size} vs ${after.size} rows")

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import graft.Harness.round2
 
 /** Over-cap LSH evidence (VERDICT r11 #4, extended to the embedding
   * family in round 13): run the banded dedup against an over-cap
@@ -34,8 +31,6 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.LshOverCap [fixtureDir] [text|embedding]
   */
 object LshOverCap {
-  private def round2(v: Double): Double = math.rint(v * 100) / 100
-
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_sf35")
     val mode = if (args.length > 1) args(1) else "text"
@@ -44,38 +39,20 @@ object LshOverCap {
       case "embedding" => ("q_dedup_embedding_lsh", "embeddings")
       case other => sys.error(s"unknown mode $other (text|embedding)")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     require(System.getProperty(operators.Retrieval.forceShardsProp) == null,
       "organic run: no force-prop may be set at launch")
     // both runs rebuild the session-memoized text-vector basis, so
     // their walls and shuffle bytes compare the same work; run() drops
     // the previous run's basis and LSH leaves
     System.setProperty(operators.Retrieval.freshFitProp, "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // 1.75 M-doc caches + wide sorts on one JVM: a full-GC pause can
-      // exceed the 120 s default executor-liveness window in local
-      // mode, which kills the run spuriously (observed round 12) —
-      // this is a single-box evidence harness, not the cluster shape
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "900s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val shuffleBytes = new AtomicLong()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(
-          e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
-    def settle(): Long = {
-      var prev = -1L; var cur = shuffleBytes.get()
-      while (cur != prev) { Thread.sleep(300); prev = cur; cur = shuffleBytes.get() }
-      cur
-    }
+    // 1.75 M-doc caches + wide sorts on one JVM: a full-GC pause can
+    // exceed the 120 s default executor-liveness window in local
+    // mode, which kills the run spuriously (observed round 12) —
+    // this is a single-box evidence harness, not the cluster shape
+    val spark = Harness.session(Map(
+      "spark.executor.heartbeatInterval" -> "60s",
+      "spark.network.timeout" -> "900s"))
+    val stages = graft.engine.Metrics.countStages(spark)
 
     val n = spark.read.parquet(s"$dir/$table.parquet").count()
     // the same integer derivations the plan applies (Retrieval.scala
@@ -89,12 +66,12 @@ object LshOverCap {
     def run(label: String): (Double, Long, String, String) = {
       spark.catalog.clearCache()
       operators.Retrieval.releaseFreshLeaves(spark)
-      settle(); val b0 = shuffleBytes.get()
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(qname)(spark, dir)
-      val rows = df.collect()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val bytes = settle() - b0
+      val b0 = stages.settle()
+      val ((df, rows), wall) = Harness.timed {
+        val df = SparkEntry.queries(qname)(spark, dir)
+        (df, df.collect())
+      }
+      val bytes = (stages.settle() - b0).shuffleWriteBytes
       val md = java.security.MessageDigest.getInstance("MD5")
       // \\u0001-separated fields (ADVICE r12): an empty separator aliases
       // across column boundaries — ("a","bc") vs ("ab","c") would hash
@@ -128,7 +105,7 @@ object LshOverCap {
     println(s"""{"overcap_lsh":{"mode":"$mode","dir":"$dir","n_docs":$n,"w":$w,"S":$s2,""" +
       s""""wall_organic":${round2(wOrg)},"wall_s1":${round2(wS1)},""" +
       s""""shuffle_mb_organic":${bOrg / 1048576},"shuffle_mb_s1":${bS1 / 1048576},""" +
-      s""""hash_match":${hOrg == hS1},"cpus":$cpus}}""")
+      s""""hash_match":${hOrg == hS1},"cpus":${Harness.cpus}}}""")
     spark.stop()
   }
 }

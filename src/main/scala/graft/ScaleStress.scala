@@ -1,10 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Harness.round2
 
 /** Scale-stress harness for the iterative/LSH tail (VERDICT r4 #5):
   * does the workload grow ~linearly when the corpus grows ~10×?
@@ -19,14 +17,12 @@ import org.apache.spark.sql.functions._
   * data's.
   *
   * For each query × {1×, N×}: two passes (min wall — co-tenant box) and
-  * the shuffle-write bytes of the LAST pass from a stage listener
-  * (spill-free proxy for data moved; listener counters are polled to
-  * quiescence since the bus is async). One JSON line each, then a
-  * ratio summary line per query — these feed the PERF.md scaling table.
+  * the shuffle-write bytes of the LAST pass from the stage counter
+  * (engine.Metrics; spill-free proxy for data moved). One JSON line
+  * each, then a ratio summary line per query — these feed the PERF.md
+  * scaling table.
   */
 object ScaleStress {
-  private def round2(v: Double): Double = math.rint(v * 100) / 100
-
   def main(args: Array[String]): Unit = {
     // let a stress run force the non-broadcast LSH verification path
     // (the size switch won't trip on synthetic ×10 data sizes)
@@ -53,22 +49,11 @@ object ScaleStress {
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     val scaledDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       s"/tmp/graft_scale_x$factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus
     val queries = if (args.nonEmpty) args.toSeq
       else Seq("q_graph_pagerank", "q_dedup_cluster", "q_dedup_simhash_lsh")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // managed tables (standing-index queries) land in a fresh tmp
-      // warehouse — a cwd-relative spark-warehouse/ left over from a
-      // previous run makes the index build die on LOCATION_ALREADY_EXISTS
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft-stress-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // GRAFT_SCALE_TABLES (csv) restricts which fact families generate:
     // the ×100 flagship run needs only `documents` (500k docs), and
@@ -87,7 +72,7 @@ object ScaleStress {
           .select((col("doc_id") + lit(r * maxId)).as("doc_id"),
             col("text"), col("lang"), col("source"), col("n_chars"))
       }
-      reps.reduce(_ unionByName _).repartition(cpus.toInt)
+      reps.reduce(_ unionByName _).repartition(cpus)
         .write.mode("overwrite").parquet(s"$scaledDir/documents.parquet")
     }
 
@@ -106,7 +91,7 @@ object ScaleStress {
           col("ts"), (col("user_id") + lit(r * maxU)).as("user_id"),
           col("event_type"), col("value"), col("props"))
       }
-      reps.reduce(_ unionByName _).repartition(cpus.toInt)
+      reps.reduce(_ unionByName _).repartition(cpus)
         .write.mode("overwrite").parquet(s"$scaledDir/events.parquet")
     }
 
@@ -124,11 +109,11 @@ object ScaleStress {
         ord.agg(max(col("o_orderkey"))).head().getAs[Number](0).longValue + 1
       (0 until factor)
         .map(r => ord.withColumn("o_orderkey", col("o_orderkey") + lit(r * maxOk)))
-        .reduce(_ unionByName _).repartition(cpus.toInt)
+        .reduce(_ unionByName _).repartition(cpus)
         .write.mode("overwrite").parquet(s"$scaledDir/orders.parquet")
       (0 until factor)
         .map(r => li.withColumn("l_orderkey", col("l_orderkey") + lit(r * maxOk)))
-        .reduce(_ unionByName _).repartition(cpus.toInt)
+        .reduce(_ unionByName _).repartition(cpus)
         .write.mode("overwrite").parquet(s"$scaledDir/lineitem.parquet")
     }
     // embeddings ×N (round-11, for q_mine_contrastive's scale row):
@@ -146,7 +131,7 @@ object ScaleStress {
         val maxId = em.agg(max(col("vec_id"))).head().getLong(0) + 1
         (0 until factor)
           .map(r => em.withColumn("vec_id", col("vec_id") + lit(r * maxId)))
-          .reduce(_ unionByName _).repartition(cpus.toInt)
+          .reduce(_ unionByName _).repartition(cpus)
           .write.mode("overwrite").parquet(s"$scaledDir/embeddings.parquet")
       }
     }
@@ -159,17 +144,7 @@ object ScaleStress {
             java.nio.file.Paths.get(baseDir, s"$t.parquet"))
       }
 
-    val shuffleBytes = new AtomicLong()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
-    // the listener bus is async: poll until the counter stops moving
-    def settle(): Long = {
-      var prev = -1L; var cur = shuffleBytes.get()
-      while (cur != prev) { Thread.sleep(300); prev = cur; cur = shuffleBytes.get() }
-      cur
-    }
+    val stages = graft.engine.Metrics.countStages(spark)
 
     queries.foreach { name =>
       val fn = SparkEntry.queries(name)
@@ -186,11 +161,10 @@ object ScaleStress {
           val wall = (1 to 2).map { p =>
             // fresh-fit text leaves of the last pass outlive clearCache()
             graft.operators.Retrieval.releaseFreshLeaves(spark)
-            settle(); val b0 = shuffleBytes.get()
-            val t0 = System.nanoTime()
-            fn(spark, dir).write.format("noop").mode("overwrite").save()
-            val w = (System.nanoTime() - t0) / 1e9
-            mb = (settle() - b0) / 1e6
+            val b0 = stages.settle()
+            val w = Harness.secs(
+              fn(spark, dir).write.format("noop").mode("overwrite").save())
+            mb = (stages.settle() - b0).shuffleWriteBytes / 1e6
             if (p == 1) mbCold = mb
             w
           }.min

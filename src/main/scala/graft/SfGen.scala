@@ -39,16 +39,9 @@ object SfGen {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_BASE", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SF_OUT", "/tmp/graft_sf1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // base tables are timestamp[us]; keep the scaled files identical
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // base tables are timestamp[us]; the session's TIMESTAMP_MICROS
+    // output keeps the scaled files identical
+    val spark = Harness.session()
 
     // SPARK_GRAFT_SF_TABLES (csv, default all): restrict which tables
     // replicate — the round-12 over-cap LSH fixture needs ONLY a
@@ -83,7 +76,7 @@ object SfGen {
     // and Tables.t adapts on the observed type — a raw read would
     // crash on the nanos generation, exactly when the drift guard
     // fires. The written file is normalized micros either way
-    // (outputTimestampType above).
+    // (the session's outputTimestampType).
     def base(t: String): DataFrame =
       if (t == "events") graft.engine.Tables.t(spark, baseDir, t)
       else spark.read.parquet(s"$baseDir/$t.parquet")

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Harness.{round2, timed}
 
 /** Multi-day absorb→purge→compact soak for the text-LSH and
   * embedding-LSH standing indexes (VERDICT r14 #7 — the gram family
@@ -35,32 +36,12 @@ import org.apache.spark.sql.functions._
   * Usage: SPARK_GRAFT_SF_DIR=<fixture> runMain graft.SoakBench
   */
 object SoakBench {
-  private def round2(v: Double): Double = math.rint(v * 100) / 100
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val embDir = sys.env.getOrElse("SPARK_GRAFT_SOAK_EMB_DIR", sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    // SPARK_GRAFT_MASTER=local-cluster[2,8,4096] runs the soak with
-    // real separate executor JVMs (the Verify/Bench idiom); app
-    // classes must then travel as a jar via SPARK_GRAFT_JAR.
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JAR").foreach(j => builder.config("spark.jars", j))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val days = Seq(0, 10, 20)
 
-    def timed[T](body: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = body
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     def files(t: String): Long = spark.table(t).inputFiles.length.toLong
 
     // ---- text-LSH family -------------------------------------------

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Harness.{round2, secs, timed}
+import graft.engine.Layout.dirBytes
 import graft.streaming.StreamRunner
 
 /** Streaming-at-scale harness (VERDICT r9 #7): all streaming evidence
@@ -27,23 +28,9 @@ import graft.streaming.StreamRunner
   * history). Usage: SPARK_GRAFT_SF_DIR=/tmp/graft_sf1
   * `sbt "runMain graft.StreamStress"`. */
 object StreamStress {
-  private def round2(v: Double): Double = math.rint(v * 100) / 100
-
-  private def dirBytes(f: java.io.File): Long =
-    if (f.isFile) f.length()
-    else Option(f.listFiles()).getOrElse(Array.empty).map(dirBytes).sum
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val work = java.nio.file.Files.createTempDirectory("graft_streamstress")
       .toString
 
@@ -54,10 +41,8 @@ object StreamStress {
       docs.filter(col("doc_id") % nFiles === i).coalesce(1)
         .write.mode("append").parquet(s"$work/crawl")
     }
-    val t0 = System.nanoTime()
-    val nBatches = StreamRunner.runIncrementalDedupChunked(spark, sfDir,
-      s"$work/crawl", s"$work/dedup_out", s"$work/dedup_ckpt")
-    val dedupWall = (System.nanoTime() - t0) / 1e9
+    val (nBatches, dedupWall) = timed(StreamRunner.runIncrementalDedupChunked(
+      spark, sfDir, s"$work/crawl", s"$work/dedup_out", s"$work/dedup_ckpt"))
     val streamed = spark.read.parquet(s"$work/dedup_out")
       .drop("micro_batch_id")
     val batch = SparkEntry.queries("q_dedup_incremental")(spark, sfDir)
@@ -82,13 +67,9 @@ object StreamStress {
     // then probes it per micro-batch with zero index-side Exchange.
     // The honest comparison against scenario 1's wall: that one
     // re-tokenizes the whole corpus inside every micro-batch.
-    val tIdx = System.nanoTime()
-    graft.operators.Pipeline.gramIndex(spark, sfDir)
-    val idxBuildWall = (System.nanoTime() - tIdx) / 1e9
-    val tIdxStream = System.nanoTime()
-    StreamRunner.runIncrementalDedupIndexed(spark, sfDir,
-      s"$work/dedupidx_out", s"$work/dedupidx_ckpt")
-    val dedupIdxWall = (System.nanoTime() - tIdxStream) / 1e9
+    val idxBuildWall = secs(graft.operators.Pipeline.gramIndex(spark, sfDir))
+    val dedupIdxWall = secs(StreamRunner.runIncrementalDedupIndexed(spark,
+      sfDir, s"$work/dedupidx_out", s"$work/dedupidx_ckpt"))
     val streamedIdx = spark.read.parquet(s"$work/dedupidx_out")
       .drop("micro_batch_id")
     val batchIdx = SparkEntry.queries("q_dedup_index_probe")(spark, sfDir)
@@ -118,13 +99,9 @@ object StreamStress {
       em.filter(col("vec_id") % nEmbFiles === i).coalesce(1)
         .write.mode("append").parquet(s"$work/embshard")
     }
-    val tEmbIdx = System.nanoTime()
-    graft.operators.Pipeline.embIndex(spark, sfDir)
-    val embIdxBuildWall = (System.nanoTime() - tEmbIdx) / 1e9
-    val tEmbStream = System.nanoTime()
-    val nEmbBatches = StreamRunner.runEmbProbeIndexed(spark, sfDir,
-      s"$work/embshard", s"$work/embprobe_out", s"$work/embprobe_ckpt")
-    val embWall = (System.nanoTime() - tEmbStream) / 1e9
+    val embIdxBuildWall = secs(graft.operators.Pipeline.embIndex(spark, sfDir))
+    val (nEmbBatches, embWall) = timed(StreamRunner.runEmbProbeIndexed(spark,
+      sfDir, s"$work/embshard", s"$work/embprobe_out", s"$work/embprobe_ckpt"))
     val unionTop = spark.read.parquet(s"$work/embprobe_out")
       .drop("micro_batch_id")
       .orderBy(desc("cos_sim"), col("batch_id"), col("corpus_id")).limit(50)
@@ -175,31 +152,25 @@ object StreamStress {
         java.nio.file.Files.move(f.toPath, dst.toPath)
         dst.setLastModified(tNow)
       }
-    val tLoopIdx = System.nanoTime()
-    val (gS, cS) = buildLoopIdx("s")
-    val loopIdxWall = (System.nanoTime() - tLoopIdx) / 1e9
-    val tLoop = System.nanoTime()
-    val nLoop = StreamRunner.runProbeAbsorbLoop(spark, sfDir, loopCrawl,
-      gS, cS, bkLoop, s"$work/loop_out", s"$work/loop_ckpt")
-    val loopWall = (System.nanoTime() - tLoop) / 1e9
+    val ((gS, cS), loopIdxWall) = timed(buildLoopIdx("s"))
+    val (nLoop, loopWall) = timed(StreamRunner.runProbeAbsorbLoop(spark,
+      sfDir, loopCrawl, gS, cS, bkLoop, s"$work/loop_out", s"$work/loop_ckpt"))
     require(nLoop >= 2, s"expected 2 one-file triggers, got $nLoop")
     val (gB, cB) = buildLoopIdx("b")
-    val tChain = System.nanoTime()
-    val chainV = Seq(col("doc_id") % 20 === 0, col("doc_id") % 20 === 10)
-      .flatMap { pred =>
-        val v = graft.operators.Pipeline.gramIndexProbeOn(spark, sfDir,
-          Layout.readTable(spark, gB), Layout.readTable(spark, cB), pred)
-          .localCheckpoint()
-        val keep = graft.operators.Pipeline.wordGrams3(docs.filter(pred))
-          .select(col("doc_id").as("corpus_id"), col("g"))
-          .join(v.select(col("batch_id").as("corpus_id")).distinct(),
-            Seq("corpus_id"), "left_anti").localCheckpoint()
-        Layout.appendBucketed(keep, gB, "g", bkLoop)
-        Layout.appendBucketed(keep.groupBy(col("corpus_id"))
-          .agg(count(lit(1)).as("nc")), cB, "corpus_id", bkLoop)
-        v.collect().map(_.toString).toSeq
-      }
-    val chainWall = (System.nanoTime() - tChain) / 1e9
+    val loopPreds = Seq(col("doc_id") % 20 === 0, col("doc_id") % 20 === 10)
+    val (chainV, chainWall) = timed(loopPreds.flatMap { pred =>
+      val v = graft.operators.Pipeline.gramIndexProbeOn(spark, sfDir,
+        Layout.readTable(spark, gB), Layout.readTable(spark, cB), pred)
+        .localCheckpoint()
+      val keep = graft.operators.Pipeline.wordGrams3(docs.filter(pred))
+        .select(col("doc_id").as("corpus_id"), col("g"))
+        .join(v.select(col("batch_id").as("corpus_id")).distinct(),
+          Seq("corpus_id"), "left_anti").localCheckpoint()
+      Layout.appendBucketed(keep, gB, "g", bkLoop)
+      Layout.appendBucketed(keep.groupBy(col("corpus_id"))
+        .agg(count(lit(1)).as("nc")), cB, "corpus_id", bkLoop)
+      v.collect().map(_.toString).toSeq
+    })
     val loopV = spark.read.parquet(s"$work/loop_out").drop("micro_batch_id")
       .collect().map(_.toString).toSeq
     require(chainV.nonEmpty && loopV.sorted == chainV.sorted,
@@ -246,36 +217,32 @@ object StreamStress {
         java.nio.file.Files.move(part.toPath, dst.toPath)
         dst.setLastModified(t0m - 120000L * (dayPreds.size - i))
       }
-      val tIvfIdx = System.nanoTime()
-      val tS = graft.operators.Pipeline.buildIvfIndexOn(spark, sfDir,
-        "_ivfstressS", _.filter(col("vec_id") % 16 === 1))
-      val ivfIdxWall = (System.nanoTime() - tIvfIdx) / 1e9
-      val tIvfLoop = System.nanoTime()
-      val (tEnd, nIvfB, nRecl) = StreamRunner.runIvfProbeAbsorbLoop(spark,
-        sfDir, crawl.getAbsolutePath, tS, bkIvf, s"$work/ivf_out",
-        s"$work/ivf_ckpt", "_ivfstressS")
-      val ivfLoopWall = (System.nanoTime() - tIvfLoop) / 1e9
+      val (tS, ivfIdxWall) = timed(graft.operators.Pipeline.buildIvfIndexOn(
+        spark, sfDir, "_ivfstressS", _.filter(col("vec_id") % 16 === 1)))
+      val ((tEnd, nIvfB, nRecl), ivfLoopWall) = timed(
+        StreamRunner.runIvfProbeAbsorbLoop(spark, sfDir,
+          crawl.getAbsolutePath, tS, bkIvf, s"$work/ivf_out",
+          s"$work/ivf_ckpt", "_ivfstressS"))
       require(nIvfB >= dayPreds.size && nRecl >= 1 && tEnd != tS,
         s"ivf loop: $nIvfB batches, $nRecl reclusters — the policy " +
           "never fired mid-stream")
       var tC = graft.operators.Pipeline.buildIvfIndexOn(spark, sfDir,
         "_ivfstressC", _.filter(col("vec_id") % 16 === 1))
-      val tChainIvf = System.nanoTime()
-      val chainV = dayPreds.zipWithIndex.map { case (p, i) =>
-        val day = em.filter(p)
-        val v = graft.operators.Pipeline.ivfIndexProbeOn(spark, tC, day,
-          s"$sfDir/embeddings.parquet",
-          excludeIds = Some(day.select(col("vec_id"))))
-          .collect().map(_.toString).toSeq
-        graft.operators.Pipeline.absorbIvfFrame(spark, tC, bkIvf,
-          day.join(Layout.readTable(spark, tC._2)
-              .select(col("corpus_id").as("vec_id")),
-            Seq("vec_id"), "left_anti"))
-        graft.operators.Pipeline.maybeReclusterIvf(spark, sfDir, tC,
-          s"_ivfstressC_m$i").foreach(nt => tC = nt)
-        v
-      }
-      val ivfChainWall = (System.nanoTime() - tChainIvf) / 1e9
+      val (chainV, ivfChainWall) = timed(dayPreds.zipWithIndex.map {
+        case (p, i) =>
+          val day = em.filter(p)
+          val v = graft.operators.Pipeline.ivfIndexProbeOn(spark, tC, day,
+            s"$sfDir/embeddings.parquet",
+            excludeIds = Some(day.select(col("vec_id"))))
+            .collect().map(_.toString).toSeq
+          graft.operators.Pipeline.absorbIvfFrame(spark, tC, bkIvf,
+            day.join(Layout.readTable(spark, tC._2)
+                .select(col("corpus_id").as("vec_id")),
+              Seq("vec_id"), "left_anti"))
+          graft.operators.Pipeline.maybeReclusterIvf(spark, sfDir, tC,
+            s"_ivfstressC_m$i").foreach(nt => tC = nt)
+          v
+      })
       chainV.zipWithIndex.foreach { case (v, i) =>
         val got = spark.read.parquet(s"$work/ivf_out/micro_batch_id=$i")
           .collect().map(_.toString).toSeq
@@ -299,12 +266,8 @@ object StreamStress {
 
     // ---- 2. SCD2 snapshot ingest, one file per trigger vs drain-all ----
     val base = graft.operators.Snapshots.snapshotBase(spark, sfDir)
-    def ingest(tag: String, fpt: Option[Int]): (String, Double) = {
-      val dir = s"$work/scd2_$tag"
-      val t = System.nanoTime()
-      val state = StreamRunner.snapshotScd2Ingest(spark, base, dir, fpt)
-      (state, (System.nanoTime() - t) / 1e9)
-    }
+    def ingest(tag: String, fpt: Option[Int]): (String, Double) =
+      timed(StreamRunner.snapshotScd2Ingest(spark, base, s"$work/scd2_$tag", fpt))
     val (stateMulti, wallMulti) = ingest("multi", Some(1))
     val (stateOnce, wallOnce) = ingest("once", None)
     val like = spark.read.parquet(base)
@@ -353,21 +316,22 @@ object StreamStress {
         new java.io.File(s"$ssDir/$name").toPath)
     }
     val src = spark.readStream.schema(ev.schema).parquet(ssDir)
-    val tJoin = System.nanoTime()
-    val q = StreamRunner.purchaseClickJoin(src).writeStream
-      .outputMode("append").format("memory").queryName("ss_join_stress")
-      .option("checkpointLocation", s"$work/ssjoin_ckpt")
-      .start()
-    (0 until 5).foreach { i =>
-      land(s"b$i.parquet",
-        ev.filter(tranche === i && !lateSel))
-      q.processAllAvailable() // explicit batch boundary per tranche
+    val (joinBatches, ssWall) = timed {
+      val q = StreamRunner.purchaseClickJoin(src).writeStream
+        .outputMode("append").format("memory").queryName("ss_join_stress")
+        .option("checkpointLocation", s"$work/ssjoin_ckpt")
+        .start()
+      (0 until 5).foreach { i =>
+        land(s"b$i.parquet",
+          ev.filter(tranche === i && !lateSel))
+        q.processAllAvailable() // explicit batch boundary per tranche
+      }
+      land("b5_late.parquet", ev.filter(lateSel)) // ~month-late clicks
+      q.processAllAvailable()
+      val n = q.lastProgress.batchId + 1
+      q.stop()
+      n
     }
-    land("b5_late.parquet", ev.filter(lateSel)) // ~month-late clicks
-    q.processAllAvailable()
-    val joinBatches = q.lastProgress.batchId + 1
-    q.stop()
-    val ssWall = (System.nanoTime() - tJoin) / 1e9
     val out = spark.table("ss_join_stress")
     def batchJoin(clicks: org.apache.spark.sql.DataFrame) = {
       val p = ev.filter(col("event_type") === "purchase")

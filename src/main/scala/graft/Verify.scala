@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,25 +9,7 @@ object Verify {
     val only = args.drop(2).toSet // optional query-name filter (local iteration)
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER=local-cluster[2,8,4096] runs the sweep with real
-    // separate executor JVMs (real broadcast/shuffle/closure serialization)
-    // — the axis plain local[N] can't exercise. Application classes must
-    // then travel as a jar: SPARK_GRAFT_JAR names the `sbt package` output.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // managed tables (the bucketed-layout queries) land in a fresh
-      // tmp warehouse, never a cwd-relative spark-warehouse/
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JAR").foreach(j => builder.config("spark.jars", j))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     val selected =
       if (only.isEmpty) SparkEntry.queries

@@ -1,19 +1,11 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end demo of the reference's product flow (crocus §3):
   * bronze provider records → normalize → confront → keyed products.json
   * → snapshot-partitioned store. Run: `sbt "runMain graft.catalog.CatalogDemo"`. */
 object CatalogDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     import spark.implicits._
 
     val ishares = Catalog.normalizeIShares(Seq(

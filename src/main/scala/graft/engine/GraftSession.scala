@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 import graft.functions._
 
@@ -20,32 +20,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     e.injectPlannerStrategy(_ => graft.plans.DeferredStrategy)
     e.injectOptimizerRule(_ => graft.plans.RankFilterToAggregate)
-    def info(name: String) =
-      new ExpressionInfo("graft.functions", name)
-    e.injectFunction((FunctionIdentifier("dot_d"), info("dot_d"),
-      (es: Seq[Expression]) => DotProductD(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("parse_locale_pct"), info("parse_locale_pct"),
-      (es: Seq[Expression]) => ParseLocalePct(es.head)))
-    e.injectFunction((FunctionIdentifier("parse_locale_money"), info("parse_locale_money"),
-      (es: Seq[Expression]) => ParseLocaleMoney(es.head)))
-    e.injectFunction((FunctionIdentifier("parse_date_it"), info("parse_date_it"),
-      (es: Seq[Expression]) => ParseDateIt(es.head)))
-    e.injectFunction((FunctionIdentifier("nfc_normalize"), info("nfc_normalize"),
-      (es: Seq[Expression]) => NfcNormalize(es.head)))
-    e.injectFunction((FunctionIdentifier("cms_estimate"), info("cms_estimate"),
-      (es: Seq[Expression]) => CmsEstimate(es(0), es(1))))
-    // Spark's runtime-filter bloom machinery, surfaced as SQL functions
-    // (upstream keeps them internal-only): bloom_agg(xxhash64(x), est_n,
-    // n_bits) builds the sketch, bloom_might_contain(bloom, xxhash64(x))
-    // probes it. Bits OR together, so the sketch is insertion-order- and
-    // partitioning-invariant — deterministic output by construction.
-    e.injectFunction((FunctionIdentifier("bloom_agg"), info("bloom_agg"),
-      (es: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(es(0), es(1), es(2)).toAggregateExpression()))
-    e.injectFunction((FunctionIdentifier("bloom_might_contain"), info("bloom_might_contain"),
-      (es: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1))))
+    GraftFunctions.table.foreach { case (name, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft.functions", name), build))
+    }
   }
 }
 

@@ -19,7 +19,8 @@ object Layout {
     * forceShardsProp idiom applied to the layout knob). */
   val forceBucketsProp = "graft.layout.buckets.force"
 
-  private def dirBytes(f: java.io.File): Long =
+  /** On-disk bytes under a file or directory — a driver-side stat. */
+  private[graft] def dirBytes(f: java.io.File): Long =
     if (f.isDirectory)
       Option(f.listFiles()).map(_.map(dirBytes).sum).getOrElse(0L)
     else f.length()

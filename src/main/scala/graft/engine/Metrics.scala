@@ -1,7 +1,10 @@
 package graft.engine
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -48,5 +51,39 @@ object Metrics {
     val l = new RecordingListener
     spark.listenerManager.register(l)
     l
+  }
+
+  final case class StageCounts(tasks: Long, shuffleWriteBytes: Long) {
+    def -(o: StageCounts): StageCounts =
+      StageCounts(tasks - o.tasks, shuffleWriteBytes - o.shuffleWriteBytes)
+  }
+
+  /** The one stage counter of the harness mains: completed tasks and
+    * shuffle-write bytes of completed stages, context-wide. */
+  final class StageCounter extends SparkListener {
+    private val tasks = new AtomicLong()
+    private val shuffleWrite = new AtomicLong()
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      tasks.incrementAndGet()
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      shuffleWrite.addAndGet(
+        e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+
+    private def now = StageCounts(tasks.get(), shuffleWrite.get())
+
+    /** The listener bus is async: poll until both counts stop moving. */
+    def settle(): StageCounts = {
+      var prev = StageCounts(-1, -1); var cur = now
+      while (cur != prev) { Thread.sleep(200); prev = cur; cur = now }
+      cur
+    }
+  }
+
+  def countStages(spark: SparkSession): StageCounter = {
+    val c = new StageCounter
+    spark.sparkContext.addSparkListener(c)
+    c
   }
 }

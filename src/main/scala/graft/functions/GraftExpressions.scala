@@ -265,31 +265,33 @@ case class ParseDateIt(child: Expression)
 
 /** Session registration + Column-level API for the custom expressions. */
 object GraftFunctions {
+  /** The engine's SQL functions, name → builder: the one table both
+    * `register` and `engine.GraftExtensions` install. */
+  val table: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "dot_d" -> (es => DotProductD(es(0), es(1))),
+    "parse_locale_pct" -> (es => ParseLocalePct(es.head)),
+    "parse_locale_money" -> (es => ParseLocaleMoney(es.head)),
+    "parse_date_it" -> (es => ParseDateIt(es.head)),
+    "top_k_by" -> (es => TopKByLong.fromExprs(es).toAggregateExpression()),
+    "minhash_sig" -> (es => MinHashSig.fromExprs(es).toAggregateExpression()),
+    "nfc_normalize" -> (es => NfcNormalize(es.head)),
+    "cms_estimate" -> (es => CmsEstimate(es(0), es(1))),
+    // Spark's runtime-filter bloom machinery, surfaced as SQL functions
+    // (upstream keeps them internal-only): bloom_agg(xxhash64(x), est_n,
+    // n_bits) builds the sketch, bloom_might_contain(bloom, xxhash64(x))
+    // probes it. Bits OR together, so the sketch is insertion-order- and
+    // partitioning-invariant — deterministic output by construction.
+    "bloom_agg" -> (es => new org.apache.spark.sql.catalyst.expressions
+      .aggregate.BloomFilterAggregate(es(0), es(1), es(2))
+      .toAggregateExpression()),
+    "bloom_might_contain" -> (es => org.apache.spark.sql.catalyst
+      .expressions.BloomFilterMightContain(es(0), es(1))))
+
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("dot_d",
-      es => DotProductD(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("parse_locale_pct",
-      es => ParseLocalePct(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("parse_locale_money",
-      es => ParseLocaleMoney(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("parse_date_it",
-      es => ParseDateIt(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("top_k_by",
-      es => TopKByLong.fromExprs(es).toAggregateExpression(), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      es => MinHashSig.fromExprs(es).toAggregateExpression(), "scala_udf")
-    reg.createOrReplaceTempFunction("bloom_agg",
-      es => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(es(0), es(1), es(2)).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("nfc_normalize",
-      es => NfcNormalize(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("cms_estimate",
-      es => CmsEstimate(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("bloom_might_contain",
-      es => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(es(0), es(1)), "scala_udf")
+    table.foreach { case (name, build) =>
+      reg.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
     // optimizer rules are session state too: imperative twin of
     // GraftExtensions.injectOptimizerRule for sessions built without
     // the static spark.sql.extensions conf. Synchronized: the

@@ -99,7 +99,7 @@ object HoldingsContent extends QueryPack {
   private[graft] val forceShuffleProp = "graft.holdings.forceShuffle"
   private def overlapBroadcastOk(landedDir: String): Boolean =
     !java.lang.Boolean.getBoolean(forceShuffleProp) &&
-      Retrieval.dirBytes(new java.io.File(landedDir)) <= 64L * 1024 * 1024
+      Layout.dirBytes(new java.io.File(landedDir)) <= 64L * 1024 * 1024
 
   /** Parent dir of `d`'s landed holdings trees. Collision-resistant
     * suffix (ADVICE r12): a 32-bit hashCode collision between two

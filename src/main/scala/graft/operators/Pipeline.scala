@@ -1837,7 +1837,7 @@ object Pipeline extends QueryPack {
       // candidates (and the oracle) are value-identical; the sub-cap
       // plan is untouched. Forced on small data by the shared sys prop.
       val cand = (if (Retrieval.forcedShards.isEmpty &&
-          Retrieval.dirBytes(new java.io.File(s"$d/embeddings.parquet"))
+          graft.engine.Layout.dirBytes(new java.io.File(s"$d/embeddings.parquet"))
             <= 250L * 1024 * 1024)
           xa.join(yb, equi)
         else {

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-import graft.SparkEntry
+import graft.{Harness, SparkEntry}
+import graft.Harness.loadavg
 import graft.functions.GraftFunctions
 
 /** Paired in-session A/B for a RUNTIME conf (r18): the box swings
@@ -15,37 +16,15 @@ import graft.functions.GraftFunctions
   * Usage: runMain graft.operators.ProfAB [sfDir] <conf> <v1> <v2> <q1> [q2 ...]
   * Measurement tool only — outside the declared surface. */
 object ProfAB {
-  private def t[A](f: => A): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val key = args(1); val v1 = args(2); val v2 = args(3)
     val names = args.drop(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft-ab-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(logLevel = "ERROR")
     GraftFunctions.register(spark)
-
-    val taskCount = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          taskCount.incrementAndGet()
-      })
+    val stages = graft.engine.Metrics.countStages(spark)
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-    def loadavg: Double = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
     val gate = sys.env.getOrElse("PROF_LOAD_GATE", "2.5").toDouble
     def awaitQuiet(): Unit = {
       var waited = 0
@@ -62,10 +41,9 @@ object ProfAB {
         spark.conf.set(key, v)
         spark.catalog.clearCache()
         noop(mk())
-        val t0 = taskCount.get()
-        val secs = t(noop(mk()))
-        Thread.sleep(150)
-        (secs, taskCount.get() - t0)
+        val t0 = stages.settle()
+        val secs = Harness.secs(noop(mk()))
+        (secs, (stages.settle() - t0).tasks)
       }
       val obs = (1 to pairs).map { i =>
         awaitQuiet()

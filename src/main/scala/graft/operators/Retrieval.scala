@@ -215,13 +215,9 @@ object Retrieval extends QueryPack {
     * meet in co-partitioned shuffle joins instead. The sys prop forces
     * the bucketed path on small data for tests and stress runs. */
   private[graft] val forceBucketedProp = "graft.lsh.verify.forceBucketed"
-  private[operators] def dirBytes(f: java.io.File): Long =
-    if (f.isDirectory)
-      Option(f.listFiles()).map(_.map(dirBytes).sum).getOrElse(0L)
-    else f.length()
   private[operators] def verifyBroadcastOk(d: String): Boolean =
     !java.lang.Boolean.getBoolean(forceBucketedProp) &&
-      dirBytes(new java.io.File(s"$d/documents.parquet")) <= 128L * 1024 * 1024
+      graft.engine.Layout.dirBytes(new java.io.File(s"$d/documents.parquet")) <= 128L * 1024 * 1024
 
   /** W-CAP OVERFLOW SHARD PATH (VERDICT r10 #1; SCALING.md §1).
     * The static 128×64 plane pool caps the adaptive band width at
@@ -264,7 +260,7 @@ object Retrieval extends QueryPack {
   // < 40 compressed bytes/doc, below any real text corpus.)
   private[operators] def shardingNeeded(d: String): Boolean =
     forcedShards.isDefined ||
-      dirBytes(new java.io.File(s"$d/documents.parquet")) > 64L * 1024 * 1024
+      graft.engine.Layout.dirBytes(new java.io.File(s"$d/documents.parquet")) > 64L * 1024 * 1024
 
   /** The shard-pair self-join described at [[forceShardsProp]],
     * shared by the text-LSH band join and the embedding sign-LSH

@@ -265,6 +265,13 @@ class SourcesSpec extends SparkTestBase {
       assert(s2 ne spark, "must be a fresh session for the test to mean anything")
       val r = s2.sql("SELECT parse_locale_pct('0,07') p").collect()(0)
       assert(r.getDouble(0) == 0.07 / 100)
+      // the aggregates come from the same function table
+      val top = s2.sql("SELECT top_k_by(a, o, 2) FROM VALUES " +
+        "(1L, 10L), (2L, 30L), (3L, 20L) AS v(a, o)").collect()(0)
+      assert(top.getSeq[Long](0) == Seq(2L, 3L))
+      val sig = s2.sql("SELECT minhash_sig(h, 4) FROM VALUES (1L), (2L) AS v(h)")
+        .collect()(0)
+      assert(sig.getSeq[Long](0).size == 4)
     } finally {
       SparkSession.setDefaultSession(spark)
       SparkSession.setActiveSession(spark)
