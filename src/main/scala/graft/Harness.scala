@@ -14,15 +14,12 @@ import org.apache.spark.sql.SparkSession
   *    `SPARK_GRAFT_JAR` shipping the application classes as a jar;
   *
   * and, fixed: UTC session time zone, TIMESTAMP_MICROS parquet output,
-  * no UI and a fresh temp warehouse (managed tables never land in a
-  * cwd-relative spark-warehouse/). Callers pass only the confs that
-  * really differ.
-  *
-  * Not set: `spark.sql.extensions`. Query builders install the engine
-  * per session (GraftFunctions.register, Deferred/AsOfJoin), which runs
-  * RankFilterToAggregate in the optimizer's last batch; the extension
-  * runs it inside operator optimization as well, and that re-plans
-  * q_curation_funnel, q_dedup_keep_best and q_union_dedup. */
+  * no UI, a fresh temp warehouse (managed tables never land in a
+  * cwd-relative spark-warehouse/) and the engine installed through
+  * `spark.sql.extensions=graft.engine.GraftExtensions`, as the test
+  * suite installs it — so RankFilterToAggregate also runs inside
+  * operator optimization, and the mains run the plans PlanSpec checks.
+  * Callers pass only the confs that really differ. */
 object Harness {
 
   lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
@@ -33,6 +30,7 @@ object Harness {
     val b = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]"))
       .config("spark.sql.shuffle.partitions", cores.toLong)
+      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.warehouse.dir",

@@ -21,6 +21,22 @@ import org.apache.spark.sql.SparkSession
   * a different warehouse — rebuilds instead of being served table
   * names its catalog never saw.
   *
+  * What an entry holds: a landed leaf (a localCheckpoint scan, a
+  * managed table) or a name — never an executed plan or a cache. An
+  * entry lives as long as its context, so everything it reaches stays
+  * on the heap past `clearCache()`: a memoized cache() keeps its whole
+  * cached query, and a memoized Deferred frame keeps the executed
+  * inner plan its body returned, with every broadcast table and
+  * nested cache that plan reaches. A Deferred body therefore lands its
+  * result and releases its own intermediates before returning
+  * (q_dedup_semantic's verdicts, the text basis, the decoded media
+  * embeddings). Entries must be small, not merely unreachable with
+  * their session: Spark's `shuffle-exchange-*` and
+  * `broadcast-exchange-*` pool threads inherit the active session
+  * through an InheritableThreadLocal and keep a dead session — and
+  * anything keyed on it — reachable until the idle thread retires,
+  * up to 60 s later.
+  *
   * Keys: `kind` names the call site; [[context]] entries are shared by
   * every session of the context (landed artifacts), [[session]]
   * entries also key on the session (analyzed frames are bound to

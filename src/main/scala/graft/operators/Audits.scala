@@ -86,7 +86,7 @@ object Audits extends QueryPack {
         StructField("n_missed", LongType, nullable = true),
         StructField("exact_nonempty", org.apache.spark.sql.types.BooleanType,
           nullable = false)))) { () =>
-        val emb = Multimodal.realEmbeddings(s, d) // cached; shared with LSH side
+        val emb = Multimodal.realEmbeddings(s, d) // a leaf; shared with LSH side
         val a = emb.select(col("doc_id").as("da"), col("emb").as("ea"))
         val b = emb.select(col("doc_id").as("db"), col("emb").as("eb"))
         val exact = a.join(b,
@@ -236,22 +236,15 @@ object Audits extends QueryPack {
     // recheck into CORRECTNESS itself.
     "q_audit_semantic" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
-      // The audit runs inside its OWN Deferred so the verdicts frame
-      // can be localCheckpointed at execution: without the lineage
-      // cut, every join branch below embeds the clustering pipeline's
-      // whole inner plan — measured at sf0.1 as 109 fragmented stages,
-      // ~25 s of serialized sub-second jobs and GB-scale plan strings
-      // (the event log alone was 1.2 GB), all planning overhead, no
-      // compute. Checkpointed, the verdicts are a 3-column RDD leaf,
-      // the downstream joins plan in milliseconds, and the clustering
-      // executes exactly once (shared with q_dedup_semantic through
-      // Retrieval's session memo).
+      // Deferred: the basis leaves below are built by jobs. The
+      // verdicts need no lineage cut of their own: q_dedup_semantic
+      // lands them as a leaf and shares it through Retrieval's session
+      // memo, so every join branch below scans n_docs landed rows and
+      // the clustering executes once.
       Deferred.df(s, s"audit_semantic:$d", StructType(Seq(
         StructField("n_bad_drops", LongType),
         StructField("n_bad_keeps", LongType)))) { () =>
       val verdicts = Retrieval.queries("q_dedup_semantic")(s, d)
-        .select(col("doc_id"), col("cid"), col("is_kept"))
-        .localCheckpoint()
       val cvf = Retrieval.textBasis(s, d).vecs
       // the audit's OWN in-cell pass, written apart from the one in
       // q_dedup_semantic so the two can disagree; only the integer gate

@@ -671,10 +671,11 @@ object Multimodal extends QueryPack {
   /** Decoded 16-dim content embeddings + 16-bit sign signatures of
     * every doc's PNG payload — the shared input of q_embed_real and
     * q_audit_embed_recall. Memoized per (session, dir) through
-    * engine.Memo and cache()d: the audit executing both its exact side
-    * and the LSH side must decode the corpus ONCE, not once per
-    * consumer. Must be called inside a plans.Deferred body (media()
-    * builds fixtures = runs jobs). */
+    * engine.Memo as a localCheckpoint leaf (the rule at engine.Memo):
+    * the audit executing both its exact side and the LSH side must
+    * decode the corpus ONCE, not once per consumer. Must be called
+    * inside a plans.Deferred body (media() builds fixtures and the
+    * checkpoint decodes = both run jobs). */
   private[operators] def realEmbeddings(s: SparkSession, d: String): DataFrame =
     Memo.session(s, "realEmbeddings", d) {
       import s.implicits._
@@ -687,7 +688,7 @@ object Multimodal extends QueryPack {
           (p.doc_id, e, sig)
         })
         .toDF("doc_id", "emb", "sig")
-        .cache()
+        .localCheckpoint()
     }
 
   /** One codec family's payloads, column-pruned and spread for decode

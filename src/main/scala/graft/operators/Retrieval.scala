@@ -105,27 +105,31 @@ object Retrieval extends QueryPack {
     hashEmbed(tf, tf.groupBy(col("tok")).agg(count(lit(1)).as("df")))
   }
 
-  /** The shared text-vector basis, as two checkpointed leaves:
-    *  - `dense` (doc_id, j, c): mean-centered components, c_j =
+  /** The shared text-vector basis: one checkpointed leaf and a view.
+    *  - `vecs` (doc_id, cv, vf, n2f), the leaf: one row per doc, the
+    *    integer vector cv in j order, its float mirror vf and the float
+    *    norm n2f. cv holds the mean-centered components c_j =
     *    (v_j·N − S_j) >> 12 — cosine-invariant centering kept in exact
-    *    integer range. Docs with < 4 nonzero dims are excluded;
-    *  - `vecs` (doc_id, cv, vf, n2f): one row per doc, the integer
-    *    vector cv in j order, its float mirror vf and the float norm
-    *    n2f. Pairwise PREFILTERS run on the codegen'd dot_d over vf —
-    *    float error is ~1e-6 relative, three orders below the
+    *    integer range — for all 64 dims. Docs with < 4 nonzero dims are
+    *    excluded. Pairwise PREFILTERS run on the codegen'd dot_d over
+    *    vf — float error is ~1e-6 relative, three orders below the
     *    0.88-vs-0.90 margin every caller uses, so no true pair can be
-    *    lost; cv stays authoritative for the exact gate. */
-  private[graft] final case class TextBasis(dense: DataFrame, vecs: DataFrame)
+    *    lost; cv stays authoritative for the exact gate;
+    *  - `dense` (doc_id, j, c), the view: cv exploded back to one row
+    *    per component. Landing it too would keep 64 rows per doc that
+    *    duplicate the leaf. */
+  private[graft] final case class TextBasis(vecs: DataFrame) {
+    lazy val dense: DataFrame =
+      vecs.select(col("doc_id"), posexplode(col("cv")).as(Seq("j", "c")))
+  }
 
   /** [[TextBasis]] of `d`, built once per (session, dir) and read by
     * q_dedup_text_lsh, q_dedup_semantic, q_audit_semantic and
-    * q_audit_text_recall. Leaves, not caches: a `.cache()` chain keeps
-    * every layer's query in each consumer's plan — planned eagerly at
-    * build, rendered and shipped again per execution and per AQE stage,
-    * and pinned (with the broadcast tables its exchanges hold) by any
-    * memo of an executed plan past `clearCache()`. A localCheckpoint
-    * leaf is a scan of landed blocks. The checkpoints run jobs, so call
-    * this only from a Deferred body. */
+    * q_audit_text_recall. The memo holds one localCheckpoint leaf — a
+    * scan of landed blocks, per the rule at [[graft.engine.Memo]] —
+    * not a cache, whose query every consumer would re-plan and whose
+    * executed plan the memo would pin. The checkpoint runs jobs, so
+    * call this only from a Deferred body. */
   private[graft] def textBasis(s: SparkSession, d: String): TextBasis =
     sessionMemo(s, "textBasis", d) {
       GraftFunctions.register(s)
@@ -136,20 +140,20 @@ object Retrieval extends QueryPack {
       val nD = docsE.agg(count(lit(1)).as("nd"))
       val sj = emb.groupBy(col("j")).agg(sum(col("v")).as("sj")) // ≤64 rows
       val dims = s.range(0, 64).select(col("id").cast("int").as("j"))
-      val dense = textLeaf(docsE.crossJoin(broadcast(dims))
+      val dense = docsE.crossJoin(broadcast(dims))
         .join(emb, Seq("doc_id", "j"), "left")
         .join(broadcast(sj), Seq("j"), "left")
         .crossJoin(broadcast(nD))
         .select(col("doc_id"), col("j"),
           shiftright(coalesce(col("v"), lit(0L)) * col("nd") -
-            coalesce(col("sj"), lit(0L)), 12).as("c")))
+            coalesce(col("sj"), lit(0L)), 12).as("c"))
       val vecs = dense.groupBy(col("doc_id"))
         .agg(expr("transform(sort_array(collect_list(struct(j, c))), x -> x.c)")
           .as("cv"))
         .select(col("doc_id"), col("cv"),
           expr("transform(cv, x -> cast(x as float))").as("vf"))
         .withColumn("n2f", GraftFunctions.dot_d(col("vf"), col("vf")))
-      TextBasis(dense, textLeaf(vecs))
+      TextBasis(textLeaf(vecs))
     }
 
   /** The integer-exact cosine ≥ 0.9 gate over candidate pairs
@@ -174,8 +178,8 @@ object Retrieval extends QueryPack {
 
   private def freshFit: Boolean = sys.props.get(freshFitProp).contains("true")
 
-  /** RDD name of the [[textBasis]] and [[textLsh]] leaves built under
-    * [[freshFitProp]]; no memo holds those. */
+  /** RDD name of the [[textBasis]], [[textLsh]] and q_dedup_semantic
+    * verdict leaves built under [[freshFitProp]]; no memo holds those. */
   private[graft] val freshLeafName = "graft.freshTextLeaf"
 
   /** `df.localCheckpoint()`, named [[freshLeafName]] under [[freshFitProp]]. */
@@ -709,7 +713,7 @@ object Retrieval extends QueryPack {
     // oracle derives the identical w from the same count. The plane
     // pool is a static 128×64 table (w ≤ 16); beyond n ≈ 1.5M docs
     // per partition-of-corpus, shard or raise the cap.
-    val nD = dense.agg(countDistinct(col("doc_id")).as("nd"))
+    val nD = basis.vecs.agg(count(lit(1)).as("nd")) // one row per doc
     val wSel = s.range(8, 17).select(col("id").cast("int").as("w"))
       .crossJoin(nD)
       .agg(coalesce(min(when(
@@ -882,6 +886,152 @@ object Retrieval extends QueryPack {
       else
         pre.join(sideAc, Seq("da")).join(sideBc, Seq("db")))
       .orderBy(col("da"), col("db"))
+  }
+
+  /** The body of q_dedup_semantic (design notes at its entry in
+    * [[queries]]): its sorted verdicts (doc_id, cid, is_kept), lent to
+    * `use` while the fit's intermediate leaves are alive; their blocks
+    * are dropped when `use` returns or anything throws. The query lands
+    * the verdicts as a leaf; PlanSpec asserts on the plan of this
+    * frame. Fitting runs jobs, so call this only from a Deferred body.
+    *
+    * The intermediates are leaves, not caches: dropping a cache inside
+    * a Deferred body goes through the CacheManager, which waits on
+    * every cache being built — and a consumer's cache over this very
+    * Deferred (q_audit_semantic's) is built while holding its builder
+    * and waiting on the body: a deadlock. Dropping a leaf's blocks
+    * takes no lock of the CacheManager. */
+  private[graft] def semanticVerdicts[T](s: SparkSession, d: String)(
+      use: DataFrame => T): T = {
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def leaf(df: DataFrame): DataFrame = { val l = df.localCheckpoint(); held += l; l }
+    try {
+      // all CLUSTERING geometry and the pairwise PREFILTER run on
+      // codegen'd dot_d over the float mirror (the interpreted
+      // zip_with form measured 8.0 s at sf0.1; this form 2 s)
+      val cvf = textBasis(s, d).vecs
+      val nDocs = cvf.count()
+      val targetCell = 160L
+      val kCoarse = math.max(1, math.round(
+        math.sqrt(nDocs.toDouble / targetCell)).toInt)
+      val rounds = 2
+      // PORTABLE GEOMETRY (round 10 — upgrades this query from
+      // rows-only to DuckDB-oracled, the q_similarity_ivf recipe):
+      //  - ranks are md5-derived (hv60) instead of xxhash64, which has
+      //    no DuckDB twin;
+      //  - the per-doc |vf|² term is dropped from the assignment
+      //    distance (constant under argmin — order and ties preserved)
+      //    so the expression is exactly mirrorable;
+      //  - centroid components are floor(sum/count) of the float
+      //    mirror's exact-integer values (sums < 2^53 stay exact;
+      //    count bounds keep the double division away from the floor
+      //    boundary), then one float rounding — every step engine-
+      //    identical, unlike the decimal avg it replaces (DuckDB's
+      //    avg(DECIMAL) returns DOUBLE, the one true portability
+      //    wall of the old form).
+      // dot_d's left-to-right double accumulation ≡ DuckDB's
+      // list_inner_product, so even the rounding of large float dots
+      // is identical in both engines.
+      val hRank =
+        conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
+          .cast("bigint")
+      def sqDist = GraftFunctions.dot_d(col("cvec"), col("cvec")) -
+        lit(2.0) * GraftFunctions.dot_d(col("vf"), col("cvec"))
+      def assignOf(docsV: DataFrame, cents: DataFrame): DataFrame =
+        docsV.crossJoin(broadcast(cents))
+          .groupBy(col("doc_id"))
+          .agg(min(struct(sqDist.as("dist"), col("cid"))).as("m"))
+          .select(col("doc_id"), col("m.cid").as("cid"))
+      // quantizer FIT on a bounded hash-sample (16 Ki docs): Lloyd
+      // rounds cost O(sample·k_c), never O(n·k).
+      // (when the corpus already fits the bound, the hash-rank sort
+      // would select everything — skip it and read the cvf leaf)
+      val fit =
+        if (nDocs <= 16384) cvf.select(col("doc_id"), col("vf"), col("n2f"))
+        else leaf(cvf.orderBy(hRank, col("doc_id"))
+          .limit(16384)
+          .select(col("doc_id"), col("vf"), col("n2f")))
+      var cents = fit.orderBy(hRank, col("doc_id"))
+        .limit(kCoarse)
+        .select(col("doc_id").as("cid"), col("vf").as("cvec"))
+      // centroid mean as ONE groupBy: count + 64 exact double sums,
+      // then the portable floor division (see the geometry note above)
+      (1 to rounds).foreach { _ =>
+        cents = assignOf(fit, cents)
+          .join(fit, Seq("doc_id"))
+          .groupBy(col("cid"))
+          .agg(count(lit(1)).as("n"),
+            (0 until 64).map(i =>
+              sum(element_at(col("vf"), i + 1)).as(s"s$i")): _*)
+          .select(col("cid"), array((0 until 64).map(i =>
+            floor(col(s"s$i") / col("n")).cast("float")): _*).as("cvec"))
+      }
+      // coarse pass: constant-size broadcast, map-only. cents is
+      // localCheckpointed (k_c rows): the Lloyd rounds nest their plan
+      // trees recursively, and the hierarchy below references coarse
+      // several times — without the cut, the executed plan string grows
+      // multiplicatively (OOM'd explainString at sf0.001).
+      val coarse = assignOf(cvf, leaf(cents))
+        .withColumnRenamed("cid", "ccid")
+      val withC = leaf(coarse.join(cvf, Seq("doc_id"))) // seeds + fine assign
+      // fine seeds: the ⌈m/160⌉ hash-ranked member docs of each coarse
+      // cell (row_number + count over the cell partition — distributed,
+      // no driver pass)
+      val wRank = Window.partitionBy(col("ccid"))
+        .orderBy(hRank, col("doc_id"))
+      val fineSeeds = withC
+        .select(col("ccid"), col("doc_id"), col("vf"),
+          row_number().over(wRank).as("rn"),
+          count(lit(1)).over(Window.partitionBy(col("ccid"))).as("m"))
+        .filter(col("rn") <= expr(s"(m + ${targetCell - 1}) div $targetCell"))
+        .select(col("ccid"), col("doc_id").as("fcid"), col("vf").as("fvec"))
+      // fine pass: docs meet ONLY their own coarse cell's seeds — a
+      // coarse-cid equi-join, co-partitioned, nothing broadcast; the
+      // per-doc n2f term is constant under argmin so the distance
+      // drops it (ties still break by fine cell id)
+      val cells = leaf(withC.join(fineSeeds, Seq("ccid"))
+        .groupBy(col("doc_id"))
+        .agg(min(struct(
+          (GraftFunctions.dot_d(col("fvec"), col("fvec")) -
+            lit(2.0) * GraftFunctions.dot_d(col("vf"), col("fvec"))).as("dist"),
+          col("fcid"))).as("m"))
+        // a leaf, not a cache: three consumers below (both shadow-join
+        // sides + the output join) would otherwise each re-render the
+        // full two-level assignment tree in the plan
+        .select(col("doc_id"), col("m.fcid").as("cid")))
+      val sides = leaf(cells.join(cvf, Seq("doc_id")))
+      val aa = sides.select(col("cid"), col("doc_id").as("da"),
+        col("vf").as("vfa"), col("n2f").as("n2a"))
+      val bb = sides.select(col("cid").as("cid_b"), col("doc_id").as("db"),
+        col("vf").as("vfb"), col("n2f").as("n2b"))
+      // float cos ≥ 0.88 prefilter INSIDE the join, then a distinct()
+      // BARRIER before the exact gate — without it the optimizer
+      // collapses the gate's filter into this join's bound condition,
+      // and its three INTERPRETED ArrayAggregates lead the conjunction:
+      // every enumerated same-cell pair paid ~25 µs of interpreted
+      // 64-element folds (18 s of single-task CPU at sf0.1,
+      // jstack-confirmed) instead of one codegen'd float dot. With the
+      // barrier only prefilter survivors (true near-dups) reach the
+      // exact arithmetic — the q_dedup_text_lsh lesson re-learned for
+      // the merged-filter case.
+      val fdot = GraftFunctions.dot_d(col("vfa"), col("vfb"))
+      val cand = aa.join(bb, col("cid") === col("cid_b") &&
+          col("da") < col("db") && fdot > 0 &&
+          fdot * fdot >= lit(0.7744) * col("n2a") * col("n2b"))
+        .select(col("da"), col("db")).distinct()
+      val va = sides.select(col("doc_id").as("da"), col("cv").as("cva"))
+      val vb = sides.select(col("doc_id").as("db"), col("cv").as("cvb"))
+      // lower id shadows higher, exact ≥ 0.9
+      val shadowed = exactCosGate(cand.join(va, Seq("da")).join(vb, Seq("db")))
+        .select(col("db").as("doc_id")).distinct()
+      use(cells.join(shadowed.withColumn("shadowed", lit(true)), Seq("doc_id"), "left")
+        .select(col("doc_id"), col("cid"),
+          coalesce(!col("shadowed"), lit(true)).as("is_kept"))
+        .orderBy(col("doc_id")))
+    } finally held.foreach(_.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
+      case _ =>
+    })
   }
 
   val queries: Map[String, Q] = Map(
@@ -1057,146 +1207,24 @@ object Retrieval extends QueryPack {
     // iteration (contrast q_dedup_apply's transitive closure).
     // Memoized per (session, dir) through engine.Memo, like Tables.t:
     // q_dedup_semantic AND q_audit_semantic consume the SAME Deferred
-    // instance, so within one session the clustering body builds once
-    // and a second consumer re-executes a warm inner plan (internal
-    // caches + localCheckpoints intact) instead of re-fitting the whole
-    // hierarchy from scratch (measured at sf0.1: the audit's private
-    // re-derivation cost ~6 s). The memo holds that executed plan and
-    // so pins all it reaches, past clearCache(): keep the body on the
-    // textBasis leaves, whose plans are scans of landed blocks, and
-    // its own caches one level deep. freshFitProp bypasses the memo
-    // (each call re-fits the whole hierarchy): scale measurements need
-    // pass-1 cost (VERDICT r9 #5). Same staleness caveat as every Memo
-    // entry (testdata dirs are immutable in-process).
+    // instance, so within one session the clustering runs once and a
+    // second consumer reads its landed verdicts instead of re-fitting
+    // the whole hierarchy (measured at sf0.1: the audit's private
+    // re-derivation cost ~6 s). The body lands the sorted verdicts as
+    // one leaf and then drops its intermediate leaves, so the
+    // memo's executed plan is a scan of n_docs landed rows, not the
+    // clustering plan (the rule at engine.Memo). freshFitProp bypasses
+    // the memo (each call re-fits the whole hierarchy): scale
+    // measurements need pass-1 cost (VERDICT r9 #5). Same staleness
+    // caveat as every Memo entry (testdata dirs are immutable
+    // in-process).
     "q_dedup_semantic" -> ((s, d) => sessionMemo(s, "q_dedup_semantic", d) {
       GraftFunctions.register(s)
       val idT = Tables.t(s, d, "documents").schema("doc_id").dataType
       Deferred.df(s, s"dedup_semantic:$d", StructType(Seq(
         StructField("doc_id", idT), StructField("cid", idT),
         StructField("is_kept", BooleanType, nullable = false)))) { () =>
-      // all CLUSTERING geometry and the pairwise PREFILTER run on
-      // codegen'd dot_d over the float mirror (the interpreted
-      // zip_with form measured 8.0 s at sf0.1; this form 2 s)
-      val cvf = textBasis(s, d).vecs
-      val nDocs = cvf.count()
-      val targetCell = 160L
-      val kCoarse = math.max(1, math.round(
-        math.sqrt(nDocs.toDouble / targetCell)).toInt)
-      val rounds = 2
-      // PORTABLE GEOMETRY (round 10 — upgrades this query from
-      // rows-only to DuckDB-oracled, the q_similarity_ivf recipe):
-      //  - ranks are md5-derived (hv60) instead of xxhash64, which has
-      //    no DuckDB twin;
-      //  - the per-doc |vf|² term is dropped from the assignment
-      //    distance (constant under argmin — order and ties preserved)
-      //    so the expression is exactly mirrorable;
-      //  - centroid components are floor(sum/count) of the float
-      //    mirror's exact-integer values (sums < 2^53 stay exact;
-      //    count bounds keep the double division away from the floor
-      //    boundary), then one float rounding — every step engine-
-      //    identical, unlike the decimal avg it replaces (DuckDB's
-      //    avg(DECIMAL) returns DOUBLE, the one true portability
-      //    wall of the old form).
-      // dot_d's left-to-right double accumulation ≡ DuckDB's
-      // list_inner_product, so even the rounding of large float dots
-      // is identical in both engines.
-      val hRank =
-        conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
-          .cast("bigint")
-      def sqDist = GraftFunctions.dot_d(col("cvec"), col("cvec")) -
-        lit(2.0) * GraftFunctions.dot_d(col("vf"), col("cvec"))
-      def assignOf(docsV: DataFrame, cents: DataFrame): DataFrame =
-        docsV.crossJoin(broadcast(cents))
-          .groupBy(col("doc_id"))
-          .agg(min(struct(sqDist.as("dist"), col("cid"))).as("m"))
-          .select(col("doc_id"), col("m.cid").as("cid"))
-      // quantizer FIT on a bounded hash-sample (16 Ki docs): Lloyd
-      // rounds cost O(sample·k_c), never O(n·k).
-      // (when the corpus already fits the bound, the hash-rank sort
-      // would select everything — skip it and reuse the cached cvf)
-      val fit =
-        if (nDocs <= 16384) cvf.select(col("doc_id"), col("vf"), col("n2f"))
-        else cvf.orderBy(hRank, col("doc_id"))
-          .limit(16384)
-          .select(col("doc_id"), col("vf"), col("n2f")).cache()
-      var cents = fit.orderBy(hRank, col("doc_id"))
-        .limit(kCoarse)
-        .select(col("doc_id").as("cid"), col("vf").as("cvec"))
-      // centroid mean as ONE groupBy: count + 64 exact double sums,
-      // then the portable floor division (see the geometry note above)
-      (1 to rounds).foreach { _ =>
-        cents = assignOf(fit, cents)
-          .join(fit, Seq("doc_id"))
-          .groupBy(col("cid"))
-          .agg(count(lit(1)).as("n"),
-            (0 until 64).map(i =>
-              sum(element_at(col("vf"), i + 1)).as(s"s$i")): _*)
-          .select(col("cid"), array((0 until 64).map(i =>
-            floor(col(s"s$i") / col("n")).cast("float")): _*).as("cvec"))
-      }
-      // coarse pass: constant-size broadcast, map-only. cents is
-      // localCheckpointed (k_c rows): the Lloyd rounds nest their plan
-      // trees recursively, and the hierarchy below references coarse
-      // several times — without the cut, the executed plan string grows
-      // multiplicatively (OOM'd explainString at sf0.001).
-      val coarse = assignOf(cvf, cents.localCheckpoint())
-        .withColumnRenamed("cid", "ccid")
-      val withC = coarse.join(cvf, Seq("doc_id")).cache() // seeds + fine assign
-      // fine seeds: the ⌈m/160⌉ hash-ranked member docs of each coarse
-      // cell (row_number + count over the cell partition — distributed,
-      // no driver pass)
-      val wRank = Window.partitionBy(col("ccid"))
-        .orderBy(hRank, col("doc_id"))
-      val fineSeeds = withC
-        .select(col("ccid"), col("doc_id"), col("vf"),
-          row_number().over(wRank).as("rn"),
-          count(lit(1)).over(Window.partitionBy(col("ccid"))).as("m"))
-        .filter(col("rn") <= expr(s"(m + ${targetCell - 1}) div $targetCell"))
-        .select(col("ccid"), col("doc_id").as("fcid"), col("vf").as("fvec"))
-      // fine pass: docs meet ONLY their own coarse cell's seeds — a
-      // coarse-cid equi-join, co-partitioned, nothing broadcast; the
-      // per-doc n2f term is constant under argmin so the distance
-      // drops it (ties still break by fine cell id)
-      val cells = withC.join(fineSeeds, Seq("ccid"))
-        .groupBy(col("doc_id"))
-        .agg(min(struct(
-          (GraftFunctions.dot_d(col("fvec"), col("fvec")) -
-            lit(2.0) * GraftFunctions.dot_d(col("vf"), col("fvec"))).as("dist"),
-          col("fcid"))).as("m"))
-        .select(col("doc_id"), col("m.fcid").as("cid"))
-        // localCheckpoint, not cache: three consumers below (both
-        // shadow-join sides + the output join) would otherwise each
-        // re-render the full two-level assignment tree in the plan
-        .localCheckpoint()
-      val sides = cells.join(cvf, Seq("doc_id")).cache()
-      val aa = sides.select(col("cid"), col("doc_id").as("da"),
-        col("vf").as("vfa"), col("n2f").as("n2a"))
-      val bb = sides.select(col("cid").as("cid_b"), col("doc_id").as("db"),
-        col("vf").as("vfb"), col("n2f").as("n2b"))
-      // float cos ≥ 0.88 prefilter INSIDE the join, then a distinct()
-      // BARRIER before the exact gate — without it the optimizer
-      // collapses the gate's filter into this join's bound condition,
-      // and its three INTERPRETED ArrayAggregates lead the conjunction:
-      // every enumerated same-cell pair paid ~25 µs of interpreted
-      // 64-element folds (18 s of single-task CPU at sf0.1,
-      // jstack-confirmed) instead of one codegen'd float dot. With the
-      // barrier only prefilter survivors (true near-dups) reach the
-      // exact arithmetic — the q_dedup_text_lsh lesson re-learned for
-      // the merged-filter case.
-      val fdot = GraftFunctions.dot_d(col("vfa"), col("vfb"))
-      val cand = aa.join(bb, col("cid") === col("cid_b") &&
-          col("da") < col("db") && fdot > 0 &&
-          fdot * fdot >= lit(0.7744) * col("n2a") * col("n2b"))
-        .select(col("da"), col("db")).distinct()
-      val va = sides.select(col("doc_id").as("da"), col("cv").as("cva"))
-      val vb = sides.select(col("doc_id").as("db"), col("cv").as("cvb"))
-      // lower id shadows higher, exact ≥ 0.9
-      val shadowed = exactCosGate(cand.join(va, Seq("da")).join(vb, Seq("db")))
-        .select(col("db").as("doc_id")).distinct()
-      cells.join(shadowed.withColumn("shadowed", lit(true)), Seq("doc_id"), "left")
-        .select(col("doc_id"), col("cid"),
-          coalesce(!col("shadowed"), lit(true)).as("is_kept"))
-        .orderBy(col("doc_id"))
+        semanticVerdicts(s, d)(textLeaf)
       }
     }),
 

@@ -72,8 +72,15 @@ object RankFilterToAggregate extends Rule[LogicalPlan] with PredicateHelper {
     * filters): exactly the rn=1 conjunct drives the rewrite; the rest
     * stay in a Filter ABOVE the aggregate — `WHERE rn=1 AND q` means
     * "apply q to each key's winner", which is what Filter-over-
-    * Aggregate computes. Residual conjuncts must not reference rn. */
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
+    * Aggregate computes. Residual conjuncts must not reference rn.
+    *
+    * The winner's columns get fresh expression ids and the plan above
+    * is rewritten to them. Reusing the child's ids would let predicate
+    * pushdown read a filter on a winner's column as one on the child's
+    * and move it below the aggregate — filter-then-dedup, not
+    * dedup-then-filter — whenever this rule runs before the pushdown
+    * rules (as an injected operator-optimization rule does). */
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUpWithNewOutput {
     case Filter(cond,
         w @ Window(Seq(alias @ Alias(WindowExpression(RowNumber(), _), _)),
           partitionSpec, orderSpec, child, _))
@@ -103,10 +110,13 @@ object RankFilterToAggregate extends Rule[LogicalPlan] with PredicateHelper {
       val aggExprs: Seq[NamedExpression] = childOut.zipWithIndex.map {
         case (a, i) =>
           if (groupAttrs.exists(_.semanticEquals(a))) a
-          else Alias(GetStructField(minBy, i, Some(a.name)), a.name)(
-            exprId = a.exprId)
-      } :+ Alias(Literal(1), rnAttr.name)(exprId = rnAttr.exprId)
+          else Alias(GetStructField(minBy, i, Some(a.name)), a.name)()
+      } :+ Alias(Literal(1), rnAttr.name)()
+      val renamed = w.output.zip(aggExprs.map(_.toAttribute))
+        .filterNot { case (o, n) => o.exprId == n.exprId }
+      val rename = AttributeMap(renamed)
       val agg = Aggregate(partitionSpec, aggExprs, child)
-      if (rest.isEmpty) agg else Filter(rest.reduce(And), agg)
+      val rewired = rest.map(_.transform { case a: Attribute => rename.getOrElse(a, a) })
+      (if (rewired.isEmpty) agg else Filter(rewired.reduce(And), agg), renamed)
   }
 }

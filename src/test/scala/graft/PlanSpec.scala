@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.{ReusedSubqueryExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 
 /** Physical-plan assertions for the 100 TB design point (SURVEY.md §4):
   * filters/columns reach the parquet scan, small dims broadcast,
@@ -19,6 +19,15 @@ class PlanSpec extends SparkTestBase {
     * assert on the body's own frame. */
   private def textLshPlan: String =
     graft.operators.Retrieval.textLsh(spark, sf).queryExecution.optimizedPlan.toString
+
+  /** `f` of the executed plan of q_dedup_semantic's own frame. The
+    * query lands that frame as a leaf, so the clustering plan is
+    * visible only here, while the body's intermediates are alive. */
+  private def semanticPlan[T](f: SparkPlan => T): T =
+    graft.operators.Retrieval.semanticVerdicts(spark, sf) { v =>
+      v.collect()
+      f(v.queryExecution.executedPlan)
+    }
 
   /** Every node reachable from an executed plan: children, subqueries,
     * AQE stages, reused exchanges, cached plans and built Deferred
@@ -289,6 +298,27 @@ class PlanSpec extends SparkTestBase {
     assert(rnRef.count() == 3)
   }
 
+  test("RankFilterToAggregate: a filter after the dedup stays above the aggregate") {
+    // q_curation_funnel's shape: keep-best per key, THEN a filter on a
+    // non-key column. Group a's winner (score 10) fails the filter, so
+    // a contributes nothing; filtering first would keep its runner-up
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    val got = Seq((1L, 10, "a"), (2L, 3, "a"), (3L, 2, "b"))
+      .toDF("id", "score", "grp")
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("grp")).orderBy(desc("score"), col("id"))))
+      .filter(col("rn") === 1)
+      .select(col("id"), col("score"))
+      .filter(col("score") < 5)
+      .orderBy(col("id"))
+    val p = got.queryExecution.optimizedPlan.toString
+    assert(!p.contains("Window"), p)
+    assert(got.collect().map(_.getLong(0)).toSeq == Seq(3L), p)
+  }
+
   test("RankFilterToAggregate preserves window-dedup semantics (rule off vs on)") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
@@ -499,18 +529,62 @@ class PlanSpec extends SparkTestBase {
 
   test("q_dedup_text_lsh and q_dedup_semantic read no cache nested in a cache") {
     // a cache over a cache re-renders, re-plans and pins the whole
-    // inner tree in every consumer; the basis is leaves instead
-    for (n <- Seq("q_dedup_text_lsh", "q_dedup_semantic")) {
-      val df = q(n)
-      df.collect()
-      val nested = allNodes(df.queryExecution.executedPlan).collect {
-        case i: InMemoryTableScanExec
-            if allNodes(i.relation.cachedPlan).exists(_.isInstanceOf[InMemoryTableScanExec]) =>
-          i.relation.cachedPlan
-      }
+    // inner tree in every consumer; the basis is a leaf instead
+    def nestedIn(p: SparkPlan): Seq[SparkPlan] = allNodes(p).collect {
+      case i: InMemoryTableScanExec
+          if allNodes(i.relation.cachedPlan).exists(_.isInstanceOf[InMemoryTableScanExec]) =>
+        i.relation.cachedPlan
+    }
+    val lsh = q("q_dedup_text_lsh")
+    lsh.collect()
+    for ((n, nested) <- Seq(
+        "q_dedup_text_lsh" -> nestedIn(lsh.queryExecution.executedPlan),
+        "q_dedup_semantic" -> semanticPlan(nestedIn)))
       assert(nested.isEmpty, s"$n: ${nested.size} cached plan(s) read a cache, " +
         s"first:\n${nested.headOption.map(_.treeString.take(4000)).getOrElse("")}")
-    }
+  }
+
+  test("q_dedup_semantic adds no entry to the shared CacheManager and lands two leaves") {
+    // its body drops the fit's intermediate leaves once the verdicts
+    // have landed: a fresh session keeps only the basis leaf and the
+    // verdict leaf
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.keySet
+    SparkEntry.queries("q_dedup_semantic")(spark.newSession(), sf).collect()
+    assert(cm.isEmpty, "q_dedup_semantic cached a frame")
+    val added = sc.getPersistentRDDs -- before
+    assert(added.size == 2,
+      s"q_dedup_semantic kept ${added.size} persisted RDDs: ${added.values.mkString(", ")}")
+  }
+
+  test("q_dedup_semantic's memo holds a landed leaf, not the clustering plan") {
+    // the memoized Deferred frame keeps its executed inner plan for the
+    // session's life: it must be a scan of landed rows, with no exchange
+    // and no cache to pin
+    val s = spark.newSession()
+    val df = SparkEntry.queries("q_dedup_semantic")(s, sf)
+    df.collect()
+    assert(SparkEntry.queries("q_dedup_semantic")(s, sf) eq df, "not memoized")
+    val inner = df.queryExecution.logical.collectFirst {
+      case r: graft.plans.DeferredRelation => r.body.maybeInner
+    }.flatten.getOrElse(fail("q_dedup_semantic: no built Deferred body"))
+    val pinned = allNodes(inner).filter(n =>
+      n.isInstanceOf[Exchange] || n.isInstanceOf[InMemoryTableScanExec])
+    assert(pinned.isEmpty, s"memoized inner plan pins ${pinned.size} " +
+      s"exchange/cache node(s):\n${inner.treeString.take(4000)}")
+  }
+
+  test("textBasis persists exactly one RDD") {
+    // the basis lands only `vecs`; `dense` is a view over it
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    graft.operators.Retrieval.textBasis(spark.newSession(), sf)
+    val added = sc.getPersistentRDDs -- before
+    assert(added.size == 1,
+      s"textBasis persisted ${added.size} RDDs: ${added.values.mkString(", ")}")
   }
 
   test("fresh-fit text leaves outlive clearCache() until releaseFreshLeaves drops them") {
@@ -553,9 +627,9 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("q_dedup_semantic: pairwise pass meets in a cell-id equi-join, centroids broadcast") {
-    // the body is deferred (k is corpus-derived), so the inner plan
-    // renders only post-execution
-    val p = finalPlan("q_dedup_semantic")
+    // the body is deferred (k is corpus-derived) and the query lands
+    // its result as a leaf, so assert on the body's own frame, executed
+    val p = semanticPlan(_.toString)
     // the only nested-loop fan-out is the broadcast of the k-row
     // centroid table; the shadow pass must be cell-keyed, never
     // all-pairs
