@@ -67,7 +67,8 @@ object StreamStress {
     // then probes it per micro-batch with zero index-side Exchange.
     // The honest comparison against scenario 1's wall: that one
     // re-tokenizes the whole corpus inside every micro-batch.
-    val idxBuildWall = secs(graft.operators.Pipeline.gramIndex(spark, sfDir))
+    val idxBuildWall =
+      secs(graft.operators.StandingIndexes.Gram.standing(spark, sfDir))
     val dedupIdxWall = secs(StreamRunner.runIncrementalDedupIndexed(spark,
       sfDir, s"$work/dedupidx_out", s"$work/dedupidx_ckpt"))
     val streamedIdx = spark.read.parquet(s"$work/dedupidx_out")
@@ -99,7 +100,8 @@ object StreamStress {
       em.filter(col("vec_id") % nEmbFiles === i).coalesce(1)
         .write.mode("append").parquet(s"$work/embshard")
     }
-    val embIdxBuildWall = secs(graft.operators.Pipeline.embIndex(spark, sfDir))
+    val embIdxBuildWall =
+      secs(graft.operators.StandingIndexes.EmbLsh.standing(spark, sfDir))
     val (nEmbBatches, embWall) = timed(StreamRunner.runEmbProbeIndexed(spark,
       sfDir, s"$work/embshard", s"$work/embprobe_out", s"$work/embprobe_ckpt"))
     val unionTop = spark.read.parquet(s"$work/embprobe_out")

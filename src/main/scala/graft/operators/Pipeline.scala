@@ -54,31 +54,15 @@ object Pipeline extends QueryPack {
         .as("g"))
 
   /** STANDING dedup index (VERDICT r12 #6): the corpus side of the
-    * incremental dedup persisted once per (context, fixture) as two
-    * bucketed+sorted managed tables — the distinct-3-gram fingerprint
-    * (corpus_id, g) bucketed on g, and per-doc gram counts bucketed on
-    * corpus_id. This is what a daily 100 TB crawl actually re-runs:
-    * the standing corpus is signed ONCE at ingest and every subsequent
-    * batch probe reads the compact signature tables with zero
-    * re-tokenization and zero Exchange on the index side. Write-once
-    * posture of Relational.bucketedBase (A28), extended to the dedup
-    * family. Build runs at first EXECUTION (callers wrap in Deferred). */
-  private[graft] def gramIndex(s: SparkSession, d: String): (String, String) = {
-    // bucket count derived from the source bytes (VERDICT r13 #4 —
-    // the constant 8 capped index-side parallelism at 8 tasks); the
-    // count is part of the table name so a forced-count build (the
-    // across-bucket-counts plan spec) never collides with the default
-    val bk = graft.engine.Layout.bucketsFor(s"$d/documents.parquet")
-    val h = graft.engine.Layout.indexSuffix(s, d, bk)
-    Memo.context(s, "gramIndex", h) {
-      buildGramIndex(s, d, s"_$h", _.filter(col("doc_id") % 10 =!= 0))
-    }
-  }
-
-  /** Land the two gram-index tables over the docs `sel` keeps (round
-    * 17 — the gramIndex body factored so the StandingIndex seam and
-    * throwaway lifecycle fixtures build through ONE implementation).
-    * Counts derive FROM the landed gram table (one build-time
+    * incremental dedup persisted as two bucketed+sorted managed tables
+    * — the distinct-3-gram fingerprint (corpus_id, g) bucketed on g,
+    * and per-doc gram counts bucketed on corpus_id — over the docs
+    * `sel` keeps (StandingIndexes.Gram; its memoized fixtures build
+    * through here). A daily 100 TB crawl signs the standing corpus
+    * ONCE at ingest and every batch probe reads the compact signature
+    * tables with zero re-tokenization and zero Exchange on the index
+    * side. The bucket count derives from the source bytes (VERDICT r13
+    * #4). Counts derive FROM the landed gram table (one build-time
     * shuffle), so the two tables cannot drift from each other. */
   private[graft] def buildGramIndex(s: SparkSession, d: String,
       suffix: String, sel: DataFrame => DataFrame): (String, String) = {
@@ -96,11 +80,11 @@ object Pipeline extends QueryPack {
     (gT, cT)
   }
 
-  /** One absorb day for a gram index (round 17 — the StandingIndex
-    * seam's gram absorb): append the day's grams, then counts derived
-    * FROM the landed gram table filtered to the day's ids (the
-    * gramIndexAbsorbed/ADVICE r13 discipline — the in-memory batch
-    * frame could drift from what actually landed). Day ids must be
+  /** One absorb day for a gram index (StandingIndexes.Gram.absorb):
+    * append the day's grams — one new file per bucket, no rebuild, a
+    * write proportional to the day's crawl — then counts derived FROM
+    * the landed gram table filtered to the day's ids (ADVICE r13: the
+    * in-memory batch frame could drift from what landed). Day ids must be
     * disjoint from the landed corpus — the streaming loop's re-ingest
     * guard enforces exactly that on the production path. */
   private[graft] def absorbGramBatch(s: SparkSession, d: String,
@@ -116,52 +100,6 @@ object Pipeline extends QueryPack {
         .join(dayIds, Seq("corpus_id"), "left_semi")
         .groupBy(col("corpus_id")).agg(count(lit(1)).as("nc")),
       cT, "corpus_id", bk)
-  }
-
-  /** ABSORB maintenance for the standing index (round 13 — the other
-    * half of the daily-crawl loop that gramIndex/q_dedup_index_probe
-    * started): yesterday's verdicted batch (doc_id % 20 = 0, half the
-    * fixture batch) joins the standing corpus by APPENDING its grams
-    * and counts into the bucketed tables — Layout.appendBucketed, one
-    * new file per bucket, NO rebuild, NO read of the standing data
-    * (the new docs' counts come from the new batch alone; ids are
-    * disjoint so the count table stays one-row-per-doc). Today's
-    * probe then sees the updated corpus through the same zero-
-    * index-Exchange plan. At 100 TB this is the difference between a
-    * daily index rebuild (re-signing the corpus) and a write
-    * proportional to the day's crawl. */
-  private[graft] def gramIndexAbsorbed(s: SparkSession, d: String): (String, String) = {
-    val bk = graft.engine.Layout.bucketsFor(s"$d/documents.parquet")
-    val h = graft.engine.Layout.indexSuffix(s, d, bk)
-    Memo.context(s, "gramIndexAbsorbed", h) {
-      val gT = s"graft_gram_idxu_$h"
-      val cT = s"graft_gramcnt_idxu_$h"
-      val grams =
-        wordGrams3(Tables.spread(Tables.t(s, d, "documents"), "doc_id"))
-          .select(col("doc_id").as("corpus_id"), col("g"))
-      // day 0: the standing corpus lands exactly as gramIndex does
-      graft.engine.Layout.writeBucketed(
-        grams.filter(col("corpus_id") % 10 =!= 0), gT, "g", bk)
-      graft.engine.Layout.writeBucketed(
-        graft.engine.Layout.readTable(s, gT)
-          .groupBy(col("corpus_id")).agg(count(lit(1)).as("nc")),
-        cT, "corpus_id", bk)
-      // day 1: absorb the verdicted batch — append-only maintenance
-      val day1 = grams.filter(col("corpus_id") % 20 === 0)
-      graft.engine.Layout.appendBucketed(day1, gT, "g", bk)
-      // the appended counts derive FROM the landed index too (ADVICE
-      // r13 — the in-memory batch frame could drift from what actually
-      // landed): re-read the table and filter to the absorbed ids,
-      // which are disjoint from the standing corpus (%20==0 implies
-      // %10==0, excluded at day 0), so the count table stays
-      // one-row-per-doc and both tables describe the same landed bytes
-      graft.engine.Layout.appendBucketed(
-        graft.engine.Layout.readTable(s, gT)
-          .filter(col("corpus_id") % 20 === 0)
-          .groupBy(col("corpus_id")).agg(count(lit(1)).as("nc")),
-        cT, "corpus_id", bk)
-      (gT, cT)
-    }
   }
 
   private val gramProbeSchema = StructType(Seq(
@@ -215,39 +153,6 @@ object Pipeline extends QueryPack {
         .select(col("doc_id").as("batch_id"), col("g")),
       s"$d/documents.parquet")
       .orderBy(col("batch_id"), col("corpus_id"))
-
-  /** Standing index WITH A RETENTION PURGE APPLIED (VERDICT r14 #1):
-    * day 0 lands the corpus exactly as gramIndex does (own table
-    * suffix — the lifecycle tests mutate these tables, and sharing the
-    * memoized standing index would couple unrelated queries to that
-    * mutation, the ADVICE r14 spec lesson); then every corpus doc with
-    * doc_id % 30 = 3 is tombstoned in BOTH tables. The data files are
-    * untouched — deletion is the sidecar append; readers go through
-    * Layout.readPurged and the next compaction folds the rewrite. */
-  private[graft] def gramIndexPurged(s: SparkSession, d: String): (String, String) = {
-    val bk = graft.engine.Layout.bucketsFor(s"$d/documents.parquet")
-    val h = graft.engine.Layout.indexSuffix(s, d, bk)
-    Memo.context(s, "gramIndexPurged", h) {
-      val gT = s"graft_gram_idxp_$h"
-      val cT = s"graft_gramcnt_idxp_$h"
-      val corpus =
-        wordGrams3(Tables.spread(Tables.t(s, d, "documents"), "doc_id"))
-          .filter(col("doc_id") % 10 =!= 0)
-          .select(col("doc_id").as("corpus_id"), col("g"))
-      graft.engine.Layout.writeBucketed(corpus, gT, "g", bk)
-      graft.engine.Layout.writeBucketed(
-        graft.engine.Layout.readTable(s, gT)
-          .groupBy(col("corpus_id")).agg(count(lit(1)).as("nc")),
-        cT, "corpus_id", bk)
-      // the retention request: ids derive from the LANDED count table
-      // (one row per doc — the cheapest authoritative id list)
-      val purge = graft.engine.Layout.readTable(s, cT)
-        .filter(col("corpus_id") % 30 === 3).select(col("corpus_id"))
-      graft.engine.Layout.tombstone(s, gT, purge, "corpus_id")
-      graft.engine.Layout.tombstone(s, cT, purge, "corpus_id")
-      (gT, cT)
-    }
-  }
 
   /** The q_dedup_substring span algebra over an arbitrary doc slice
     * (factored in round 15 so the cascade can re-run it on the
@@ -459,19 +364,12 @@ object Pipeline extends QueryPack {
     e.select(col("vec_id"), col("embedding"),
       sqrt(GraftFunctions.dot_d(col("embedding"), col("embedding"))).as("nrm"))
 
-  /** Land the three index tables over the vectors matching `corpus`.
+  /** Land the three index tables over the vectors `sel` keeps.
     * The frozen stat (ab) lands first; signatures are then produced by
     * the same embSign every batch probe uses — build and probe cannot
     * drift (the gram-index invariant: everything derives from landed
-    * bytes). */
-  private[graft] def buildEmbIndex(s: SparkSession, d: String, suffix: String,
-      corpus: Column): (String, String, String) =
-    buildEmbIndexOn(s, d, suffix, _.filter(corpus))
-
-  /** Frame-selector form of [[buildEmbIndex]] (round 16): the
-    * re-freeze path's membership is a LANDED id list, not a predicate
-    * the catalog remembers — same split the text family has between
-    * buildLshIndex and refreezeLsh. */
+    * bytes). `sel` is a frame transform, not a predicate: the re-freeze
+    * path's membership is a LANDED id list (refreezeEmb). */
   private[graft] def buildEmbIndexOn(s: SparkSession, d: String,
       suffix: String, sel: DataFrame => DataFrame): (String, String, String) = {
     GraftFunctions.register(s)
@@ -491,36 +389,6 @@ object Pipeline extends QueryPack {
     (sigT, vecT, statT)
   }
 
-  /** Suffix of the embedding-family index tables (emb + IVF). */
-  private def embSuffix(s: SparkSession, d: String): String =
-    graft.engine.Layout.indexSuffix(s, d,
-      graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet"))
-
-  /** Standing index over the corpus (vec_id % 10 ≠ 0), built once per
-    * (context, fixture, bucket count). */
-  private[graft] def embIndex(s: SparkSession,
-      d: String): (String, String, String) = {
-    val h = embSuffix(s, d)
-    Memo.context(s, "embIndex", h) {
-      buildEmbIndex(s, d, s"_$h", col("vec_id") % 10 =!= 0)
-    }
-  }
-
-  /** Standing index plus an ABSORBED day-1 batch (vec_id % 20 = 0):
-    * signed with the frozen width and APPENDED into the sig/vec tables
-    * — one new file per bucket, write proportional to the day's crawl,
-    * the standing rows untouched. */
-  private[graft] def embIndexAbsorbed(s: SparkSession,
-      d: String): (String, String, String) = {
-    val h = embSuffix(s, d)
-    Memo.context(s, "embIndexAbsorbed", h) {
-      val bk = graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet")
-      val t = buildEmbIndex(s, d, s"u_$h", col("vec_id") % 10 =!= 0)
-      absorbEmbBatch(s, d, t, bk, col("vec_id") % 20 === 0)
-      t
-    }
-  }
-
   /** One absorb day for an embedding index: sign the batch with the
     * FROZEN width, append signatures and vectors (one new file per
     * touched bucket). Factored (round 15) so the multi-day soak bench
@@ -536,21 +404,6 @@ object Pipeline extends QueryPack {
     graft.engine.Layout.appendBucketed(
       embVecs(day).select(col("vec_id").as("corpus_id"),
         col("embedding"), col("nrm")), vecT, "corpus_id", bk)
-  }
-
-  /** Retention purge for an embedding index (round 15 — §6d's
-    * tombstone lifecycle, third family): ids tombstone in both the
-    * signature and vector tables; probes anti-join them away via the
-    * purge-aware reads in embIndexProbeOn, and compactBucketed folds
-    * them at the next maintenance pass. The frozen width is
-    * unaffected (it derives from a count, not from rows — a rebuild
-    * re-derives it, the §6c refresh point). */
-  private[graft] def purgeEmbIndex(s: SparkSession,
-      t: (String, String, String), ids: DataFrame): Unit = {
-    val (sigT, vecT, _) = t
-    val byCorpus = ids.select(col("vec_id").as("corpus_id"))
-    graft.engine.Layout.tombstone(s, sigT, byCorpus, "corpus_id")
-    graft.engine.Layout.tombstone(s, vecT, byCorpus, "corpus_id")
   }
 
   /** RE-FREEZE for an embedding index (VERDICT r15 #5 — the emb
@@ -651,11 +504,6 @@ object Pipeline extends QueryPack {
       .orderBy(desc("cos_sim"), col("batch_id"), col("corpus_id"))
       .limit(50)
   }
-
-  private def embIndexProbe(s: SparkSession, d: String,
-      tables: (String, String, String), batch: Column): DataFrame =
-    embIndexProbeOn(s, tables, Tables.t(s, d, "embeddings").filter(batch),
-      s"$d/embeddings.parquet")
 
   private val embProbeSchema = StructType(Seq(
     StructField("batch_id", org.apache.spark.sql.types.LongType),
@@ -771,10 +619,6 @@ object Pipeline extends QueryPack {
     (statT, cellsT)
   }
 
-  private[graft] def buildIvfIndex(s: SparkSession, d: String,
-      suffix: String, corpus: Column): (String, String) =
-    buildIvfIndexOn(s, d, suffix, _.filter(corpus))
-
   /** One absorb day from an ALREADY-MATERIALIZED frame of (vec_id,
     * embedding) rows — the streaming loop's micro-batch shape: assign
     * with the FROZEN centroids, append into the cells table — one new
@@ -797,16 +641,6 @@ object Pipeline extends QueryPack {
   private[graft] def absorbIvfBatch(s: SparkSession, d: String,
       t: (String, String), bk: Int, batch: Column): Unit =
     absorbIvfFrame(s, t, bk, Tables.t(s, d, "embeddings").filter(batch))
-
-  /** Retention purge: tombstone the cells table (readers go through
-    * Layout.readPurged; compactBucketed folds later). The frozen
-    * centroids keep a deleted vector's mass until re-cluster — the
-    * same staleness contract the df/width freezes carry, visible to
-    * the gauge below. */
-  private[graft] def purgeIvfIndex(s: SparkSession,
-      t: (String, String), ids: DataFrame): Unit =
-    graft.engine.Layout.tombstone(s, t._2,
-      ids.select(col("vec_id").as("corpus_id")), "corpus_id")
 
   /** Growth/occupancy drift gauge: current membership vs fit_n (the
     * corpus the quantizer was fit on) and per-cell occupancy — the
@@ -907,29 +741,6 @@ object Pipeline extends QueryPack {
 
   private val ivfProbeSchema = embProbeSchema // same probe output shape
 
-  /** Standing IVF index over the corpus (vec_id % 10 ≠ 0), built once
-    * per (context, fixture, bucket count). */
-  private[graft] def ivfIndex(s: SparkSession,
-      d: String): (String, String) = {
-    val h = embSuffix(s, d)
-    Memo.context(s, "ivfIndex", h) {
-      buildIvfIndex(s, d, s"_$h", col("vec_id") % 10 =!= 0)
-    }
-  }
-
-  /** Standing IVF index plus an ABSORBED day-1 batch (vec_id % 20 =
-    * 0), assigned with the frozen quantizer. */
-  private[graft] def ivfIndexAbsorbed(s: SparkSession,
-      d: String): (String, String) = {
-    val h = embSuffix(s, d)
-    Memo.context(s, "ivfIndexAbsorbed", h) {
-      val bk = graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet")
-      val t = buildIvfIndex(s, d, s"u_$h", col("vec_id") % 10 =!= 0)
-      absorbIvfBatch(s, d, t, bk, col("vec_id") % 20 === 0)
-      t
-    }
-  }
-
   /** The full capacity-repair lifecycle as one landed artifact
     * (round 17, VERDICT r16 #1 "done" clause): build the standing
     * index at a deliberately small cell_target (16 rows/cell — at the
@@ -944,9 +755,9 @@ object Pipeline extends QueryPack {
     * parameter is a hash mismatch, not a slow probe. */
   private[graft] def ivfIndexReclustered(s: SparkSession,
       d: String): (String, String) = {
-    val h = embSuffix(s, d)
+    val bk = graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet")
+    val h = graft.engine.Layout.indexSuffix(s, d, bk)
     Memo.context(s, "ivfIndexReclustered", h) {
-      val bk = graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet")
       val t = buildIvfIndexOn(s, d, s"rc_$h",
         _.filter(col("vec_id") % 10 =!= 0), cellTarget = 16L)
       absorbIvfBatch(s, d, t, bk, col("vec_id") % 20 === 0)
@@ -1650,9 +1461,10 @@ object Pipeline extends QueryPack {
     // re-signs the corpus on every run; at 100 TB that re-tokenization
     // dominates the probe. Here the corpus fingerprint (corpus_id, g)
     // and the per-doc gram counts land ONCE as bucketed+sorted managed
-    // tables (gramIndex); a daily batch probe then (1) signs only the
-    // batch, (2) shuffles the BATCH once onto the index's g-bucket
-    // layout — the standing index itself is never exchanged (its
+    // tables (StandingIndexes.Gram); a daily batch probe then (1)
+    // signs only the batch, (2) shuffles the BATCH once onto the
+    // index's g-bucket layout — the standing index itself is never
+    // exchanged (its
     // bucketed scan already carries the partitioning the merge join
     // needs), (3) aggregates candidate intersections, (4) picks up
     // corpus gram counts from the second bucketed table, again with
@@ -1661,31 +1473,22 @@ object Pipeline extends QueryPack {
     // persisted-index round trip must not change a single pair.
     "q_dedup_index_probe" -> ((s, d) =>
       Deferred.df(s, "dedup_index_probe", gramProbeSchema) { () =>
-        val (gT, cT) = gramIndex(s, d)
-        // readPurged everywhere (round 15): plain reads until a purge
-        // lands a sidecar — the uniform read path makes EVERY standing
-        // index purgeable without a per-query opt-in
-        gramIndexProbeOn(s, d,
-          graft.engine.Layout.readPurged(s, gT, "corpus_id"),
-          graft.engine.Layout.readPurged(s, cT, "corpus_id"),
+        StandingIndexes.Gram.probe(s, d, StandingIndexes.Gram.standing(s, d),
           col("doc_id") % 10 === 0)
       }),
 
     // INDEX MAINTENANCE (round 13): day-1's verdicted batch is
     // ABSORBED into the standing index by bucketed APPEND
-    // (gramIndexAbsorbed — no rebuild, no re-signing of the standing
-    // corpus, write proportional to the day's crawl), then day-2's
-    // probe (doc_id % 20 = 10) runs against the UPDATED index through
+    // (StandingIndexes.Gram.absorbed — no rebuild, no re-signing of
+    // the standing corpus, write proportional to the day's crawl),
+    // then day-2's probe (doc_id % 20 = 10) runs against the UPDATED index through
     // the same zero-index-Exchange plan as q_dedup_index_probe. The
     // oracle recomputes against corpus ∪ absorbed-batch from raw text,
     // so the append round trip — bucket-spec preservation, per-bucket
     // file unions, count-table disjointness — is value-checked.
     "q_dedup_index_absorb" -> ((s, d) =>
       Deferred.df(s, "dedup_index_absorb", gramProbeSchema) { () =>
-        val (gT, cT) = gramIndexAbsorbed(s, d)
-        gramIndexProbeOn(s, d,
-          graft.engine.Layout.readPurged(s, gT, "corpus_id"),
-          graft.engine.Layout.readPurged(s, cT, "corpus_id"),
+        StandingIndexes.Gram.probe(s, d, StandingIndexes.Gram.absorbed(s, d),
           col("doc_id") % 20 === 10)
       }),
 
@@ -1707,10 +1510,7 @@ object Pipeline extends QueryPack {
     // and the post-fold lifecycle.
     "q_dedup_index_purge" -> ((s, d) =>
       Deferred.df(s, "dedup_index_purge", gramProbeSchema) { () =>
-        val (gT, cT) = gramIndexPurged(s, d)
-        gramIndexProbeOn(s, d,
-          graft.engine.Layout.readPurged(s, gT, "corpus_id"),
-          graft.engine.Layout.readPurged(s, cT, "corpus_id"),
+        StandingIndexes.Gram.probe(s, d, StandingIndexes.Gram.purged(s, d),
           col("doc_id") % 10 === 0)
       }),
 
@@ -1866,7 +1666,8 @@ object Pipeline extends QueryPack {
     // a single pair or cosine bit.
     "q_dedup_emb_index_probe" -> ((s, d) =>
       Deferred.df(s, "dedup_emb_index_probe", embProbeSchema) { () =>
-        embIndexProbe(s, d, embIndex(s, d), col("vec_id") % 10 === 0)
+        StandingIndexes.EmbLsh.probe(s, d, StandingIndexes.EmbLsh.standing(s, d),
+          col("vec_id") % 10 === 0)
       }),
 
     // Index MAINTENANCE twin: day-1's batch (vec_id % 20 = 0) signs
@@ -1877,7 +1678,8 @@ object Pipeline extends QueryPack {
     // original corpus — the append round trip is value-checked.
     "q_dedup_emb_index_absorb" -> ((s, d) =>
       Deferred.df(s, "dedup_emb_index_absorb", embProbeSchema) { () =>
-        embIndexProbe(s, d, embIndexAbsorbed(s, d), col("vec_id") % 20 === 10)
+        StandingIndexes.EmbLsh.probe(s, d, StandingIndexes.EmbLsh.absorbed(s, d),
+          col("vec_id") % 20 === 10)
       }),
 
     // GROWTH/OCCUPANCY drift gauge for the standing embedding index
@@ -1903,7 +1705,7 @@ object Pipeline extends QueryPack {
         StructField("growth", org.apache.spark.sql.types.DoubleType),
         StructField("occ_avg", org.apache.spark.sql.types.DoubleType),
         StructField("occ_max", org.apache.spark.sql.types.LongType)))) { () =>
-        embDriftGauge(s, embIndex(s, d))
+        embDriftGauge(s, StandingIndexes.EmbLsh.standing(s, d))
       }),
 
     // MAINTENANCE DECISION over the standing embedding index (round
@@ -1920,7 +1722,7 @@ object Pipeline extends QueryPack {
         StructField("occ_avg", org.apache.spark.sql.types.DoubleType),
         StructField("occ_max", org.apache.spark.sql.types.LongType),
         StructField("refreeze", org.apache.spark.sql.types.IntegerType)))) { () =>
-        val g = embDriftGauge(s, embIndex(s, d))
+        val g = embDriftGauge(s, StandingIndexes.EmbLsh.standing(s, d))
         val r = g.head()
         val trip = graft.engine.Maintenance.embNeedsRefreeze(
           r.getAs[Double]("growth"), r.getAs[Double]("occ_avg"),
@@ -2043,9 +1845,8 @@ object Pipeline extends QueryPack {
     // hash mismatch.
     "q_similarity_ivf_index_probe" -> ((s, d) =>
       Deferred.df(s, "similarity_ivf_index_probe", ivfProbeSchema) { () =>
-        ivfIndexProbeOn(s, ivfIndex(s, d),
-          Tables.t(s, d, "embeddings").filter(col("vec_id") % 10 === 0),
-          s"$d/embeddings.parquet")
+        StandingIndexes.Ivf.probe(s, d, StandingIndexes.Ivf.standing(s, d),
+          col("vec_id") % 10 === 0)
       }),
 
     // Index MAINTENANCE twin: day-1's batch (vec_id % 20 = 0) assigns
@@ -2055,9 +1856,8 @@ object Pipeline extends QueryPack {
     // corpus ∪ absorbed batch, fit still frozen on the corpus.
     "q_similarity_ivf_index_absorb" -> ((s, d) =>
       Deferred.df(s, "similarity_ivf_index_absorb", ivfProbeSchema) { () =>
-        ivfIndexProbeOn(s, ivfIndexAbsorbed(s, d),
-          Tables.t(s, d, "embeddings").filter(col("vec_id") % 20 === 10),
-          s"$d/embeddings.parquet")
+        StandingIndexes.Ivf.probe(s, d, StandingIndexes.Ivf.absorbed(s, d),
+          col("vec_id") % 20 === 10)
       }),
 
     // MAINTENANCE DECISION over the standing IVF index: the
@@ -2072,7 +1872,7 @@ object Pipeline extends QueryPack {
         StructField("occ_avg", org.apache.spark.sql.types.DoubleType),
         StructField("occ_max", org.apache.spark.sql.types.LongType),
         StructField("refreeze", org.apache.spark.sql.types.IntegerType)))) { () =>
-        val g = ivfDriftGauge(s, ivfIndex(s, d))
+        val g = ivfDriftGauge(s, StandingIndexes.Ivf.standing(s, d))
         val r = g.head()
         val trip = graft.engine.Maintenance.ivfNeedsRecluster(
           r.getAs[Double]("growth"), r.getAs[Double]("occ_avg"),

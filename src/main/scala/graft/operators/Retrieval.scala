@@ -201,6 +201,15 @@ object Retrieval extends QueryPack {
     s.sparkContext.getPersistentRDDs.values
       .filter(_.name == freshLeafName).foreach(_.unpersist(blocking = true))
 
+  /** Drop the blocks of the checkpointed leaves `dfs`. Unlike
+    * unpersisting a cache, this takes no lock of the CacheManager, so
+    * a Deferred body may call it (the deadlock at [[semanticVerdicts]]). */
+  private[operators] def dropLeaves(dfs: Iterable[DataFrame]): Unit =
+    dfs.foreach(_.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
+      case _ =>
+    })
+
   /** Memo.session, bypassed under [[freshFitProp]]. */
   private def sessionMemo[V](s: SparkSession, kind: String, d: String)(
       build: => V): V =
@@ -303,7 +312,7 @@ object Retrieval extends QueryPack {
   // centering sums, projections, signatures — on every run; at 100 TB
   // that re-signing dwarfs any daily probe. The standing-index form
   // persists the corpus side ONCE as four managed tables (the
-  // gram-index posture of Pipeline.gramIndex applied to the flagship
+  // gram-index posture of StandingIndexes.Gram applied to the flagship
   // family):
   //   graft_lshsig_idx*  (corpus_id, band, bkt, sig)  bucketed on bkt
   //   graft_lshvec_idx*  (corpus_id, cv, vf, n2f, n2) bucketed on corpus_id
@@ -454,35 +463,6 @@ object Retrieval extends QueryPack {
     (sigT, vecT, dfT, statT)
   }
 
-  /** Standing index over the corpus (doc_id % 10 ≠ 0), built once per
-    * (context, fixture). */
-  private[graft] def lshIndex(s: SparkSession,
-      d: String): (String, String, String, String) = {
-    val h = graft.engine.Layout.indexSuffix(s, d, lshBuckets(d))
-    Memo.context(s, "lshIndex", h) {
-      buildLshIndex(s, d, s"_$h", _.filter(col("doc_id") % 10 =!= 0))
-    }
-  }
-
-  /** Standing index plus an ABSORBED day-1 batch (doc_id % 20 = 0):
-    * the batch is signed with the frozen stats and APPENDED into the
-    * sig/vec tables — Layout.appendBucketed, one new file per bucket,
-    * no rebuild, no touch of the standing rows; df/stats stay frozen
-    * BY DESIGN (they refresh at rebuild, not per day — the absorbed
-    * docs' own signatures used them, so the index stays
-    * self-consistent). */
-  private[graft] def lshIndexAbsorbed(s: SparkSession,
-      d: String): (String, String, String, String) = {
-    val h = graft.engine.Layout.indexSuffix(s, d, lshBuckets(d))
-    Memo.context(s, "lshIndexAbsorbed", h) {
-      val t = buildLshIndex(s, d, s"u_$h",
-        _.filter(col("doc_id") % 10 =!= 0))
-      absorbLshBatch(s, d, t, lshBuckets(d),
-        _.filter(col("doc_id") % 20 === 0))
-      t
-    }
-  }
-
   /** One absorb day for a text-LSH index: sign the batch with the
     * FROZEN stats, append signatures, vectors, and the membership
     * manifest (the re-freeze contract: the manifest alone names the
@@ -503,27 +483,6 @@ object Retrieval extends QueryPack {
     graft.engine.Layout.appendBucketed(
       sel(Tables.spread(Tables.t(s, d, "documents"), "doc_id"))
         .select(col("doc_id")), lshMemTable(sigT), "doc_id", bk)
-  }
-
-  /** Retention purge for a text-LSH index (round 15 — the gram
-    * family's §6d tombstone lifecycle extended to this family): the
-    * ids tombstone in the signature AND vector tables (readers
-    * anti-join them away via Layout.readPurged; compactBucketed folds
-    * them later) — and in the MEMBERSHIP MANIFEST, which is the
-    * subtle one: a re-freeze rebuilds from the manifest, so a purge
-    * that left the ids there would RESURRECT the deleted docs at the
-    * next rebuild, silently undoing a retention erasure. df/stat stay
-    * frozen: a deleted doc's df mass ages out at the next re-freeze,
-    * the same staleness contract absorb already has (and the drift
-    * gauge sees the decay). */
-  private[graft] def purgeLshIndex(s: SparkSession,
-      t: (String, String, String, String), ids: DataFrame): Unit = {
-    val (sigT, vecT, _, _) = t
-    val byCorpus = ids.select(col("doc_id").as("corpus_id"))
-    graft.engine.Layout.tombstone(s, sigT, byCorpus, "corpus_id")
-    graft.engine.Layout.tombstone(s, vecT, byCorpus, "corpus_id")
-    graft.engine.Layout.tombstone(s, lshMemTable(sigT),
-      ids.select(col("doc_id")), "doc_id")
   }
 
   /** Re-freeze an ARBITRARY landed index (the memoized
@@ -560,7 +519,7 @@ object Retrieval extends QueryPack {
       d: String): (String, String, String, String) = {
     val h = graft.engine.Layout.indexSuffix(s, d, lshBuckets(d))
     Memo.context(s, "lshIndexRefrozen", h) {
-      refreezeLsh(s, d, s"r_$h", lshIndexAbsorbed(s, d))
+      refreezeLsh(s, d, s"r_$h", StandingIndexes.TextLsh.absorbed(s, d))
     }
   }
 
@@ -697,8 +656,9 @@ object Retrieval extends QueryPack {
 
   /** The body of q_dedup_text_lsh (design notes at its entry in
     * [[queries]]). It reads the text-vector basis and checkpoints
-    * `proj` and `keyed`, so building it runs jobs: the query wraps it
-    * in Deferred, and PlanSpec asserts on the plan of this frame. */
+    * `proj` and `keyed` (dropping `proj` once `keyed` has landed), so
+    * building it runs jobs: the query wraps it in Deferred, and
+    * PlanSpec asserts on the plan of this frame. */
   private[graft] def textLsh(s: SparkSession, d: String): DataFrame = {
     GraftFunctions.register(s)
     val basis = textBasis(s, d)
@@ -737,6 +697,7 @@ object Retrieval extends QueryPack {
       .agg(sum(when(col("p") >= 0,
         expr("shiftleft(cast(1 as bigint), k)")).otherwise(0L)).as("sig"))
     val keyed = textLeaf(buckets.join(sigs, Seq("doc_id")))
+    dropLeaves(Seq(proj)) // keyed has landed: nothing reads proj again
     val aa = keyed.select(col("doc_id").as("da"), col("band").as("band_a"),
       col("bkt").as("bkt_a"), col("sig").as("sig_a"))
     val bb = keyed.select(col("doc_id").as("db"), col("band").as("band_b"),
@@ -1028,10 +989,7 @@ object Retrieval extends QueryPack {
         .select(col("doc_id"), col("cid"),
           coalesce(!col("shadowed"), lit(true)).as("is_kept"))
         .orderBy(col("doc_id")))
-    } finally held.foreach(_.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
-      case _ =>
-    })
+    } finally dropLeaves(held)
   }
 
   val queries: Map[String, Q] = Map(
@@ -1044,7 +1002,8 @@ object Retrieval extends QueryPack {
     // semantics — must not change a single verdict.
     "q_dedup_text_index_probe" -> ((s, d) =>
       Deferred.df(s, "dedup_text_index_probe", lshProbeSchema) { () =>
-        lshIndexProbe(s, d, lshIndex(s, d), col("doc_id") % 10 === 0)
+        StandingIndexes.TextLsh.probe(s, d,
+          StandingIndexes.TextLsh.standing(s, d), col("doc_id") % 10 === 0)
       }),
 
     // Index MAINTENANCE twin: day-1's verdicted batch (doc_id % 20 =
@@ -1055,7 +1014,8 @@ object Retrieval extends QueryPack {
     // so the append round trip is value-checked.
     "q_dedup_text_index_absorb" -> ((s, d) =>
       Deferred.df(s, "dedup_text_index_absorb", lshProbeSchema) { () =>
-        lshIndexProbe(s, d, lshIndexAbsorbed(s, d), col("doc_id") % 20 === 10)
+        StandingIndexes.TextLsh.probe(s, d,
+          StandingIndexes.TextLsh.absorbed(s, d), col("doc_id") % 20 === 10)
       }),
 
     // FROZEN-STATS DRIFT MONITOR (VERDICT r14 #2): the standing text
@@ -1081,7 +1041,8 @@ object Retrieval extends QueryPack {
         StructField("n_tok", LongType), StructField("n_oov", LongType),
         StructField("oov_rate", DoubleType),
         StructField("df_shift", DoubleType)))) { () =>
-        lshDriftGauge(s, d, lshIndex(s, d), col("doc_id") % 10 === 0)
+        lshDriftGauge(s, d, StandingIndexes.TextLsh.standing(s, d),
+          col("doc_id") % 10 === 0)
       }),
 
     // MAINTENANCE DECISION over the standing text index (round 16,
@@ -1098,7 +1059,8 @@ object Retrieval extends QueryPack {
         StructField("oov_rate", DoubleType),
         StructField("df_shift", DoubleType),
         StructField("refreeze", IntegerType)))) { () =>
-        val g = lshDriftGauge(s, d, lshIndex(s, d), col("doc_id") % 10 === 0)
+        val g = lshDriftGauge(s, d, StandingIndexes.TextLsh.standing(s, d),
+          col("doc_id") % 10 === 0)
         val r = g.head()
         val trip = graft.engine.Maintenance.textNeedsRefreeze(
           r.getAs[Double]("oov_rate"), r.getAs[Double]("df_shift"))

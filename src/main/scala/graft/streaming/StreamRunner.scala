@@ -305,7 +305,7 @@ object StreamRunner {
 
   /** Index-probing variant of [[incrementalDedupVerdicts]] (round 13,
     * the streaming half of VERDICT r12 #6): the standing corpus comes
-    * from the PERSISTED bucketed gram index (Pipeline.gramIndex) —
+    * from the PERSISTED bucketed gram index (StandingIndexes.Gram) —
     * built once at ingest — instead of being re-tokenized on every
     * micro-batch. Per-batch work is: sign the batch, merge-join the
     * bucketed index scan (zero Exchange on the index side, same plan
@@ -317,7 +317,7 @@ object StreamRunner {
       s: SparkSession, d: String): DataFrame = {
     import graft.engine.Layout
     import graft.operators.Pipeline
-    val (gT, cT) = Pipeline.gramIndex(s, d)
+    val (gT, cT) = graft.operators.StandingIndexes.Gram.standing(s, d)
     Pipeline.gramVerdicts(Layout.readTable(s, gT), Layout.readTable(s, cT),
       Pipeline.wordGrams3(newDocs.filter(col("doc_id") % 10 === 0))
         .select(col("doc_id").as("batch_id"), col("g")),
@@ -347,7 +347,8 @@ object StreamRunner {
     * the batch query exactly — asserted row-for-row in StreamingSpec. */
   def runEmbProbeIndexed(spark: SparkSession, corpusDir: String,
       streamDir: String, outDir: String, checkpoint: String): Int = {
-    val tables = graft.operators.Pipeline.embIndex(spark, corpusDir)
+    val tables =
+      graft.operators.StandingIndexes.EmbLsh.standing(spark, corpusDir)
     val schema = graft.engine.Tables.t(spark, corpusDir, "embeddings").schema
     drain(fileStream(spark, schema, streamDir), checkpoint) { (batch, id) =>
       writeVerdictBatch(graft.operators.Pipeline.embIndexProbeOn(
@@ -363,7 +364,7 @@ object StreamRunner {
     * bucketed append, so tomorrow's batch dedups against an index that
     * already holds today's keepers. The keep decision reads the
     * verdicts BACK from the landed partition (never the in-memory
-    * plan), so absorb follows bytes on disk — the gramIndexAbsorbed
+    * plan), so absorb follows bytes on disk — the absorbGramBatch
     * landed-state discipline. Intra-batch near-dups do NOT pair with
     * each other (the q_dedup_incremental batch×corpus contract); both
     * land and meet the next rebuild's self-dedup.
@@ -578,11 +579,9 @@ object StreamRunner {
     * those is [[recomputeAfterErasure]]'s job.) */
   def purgeThrough(spark: SparkSession, gT: String, cT: String,
       outDir: String, ids: DataFrame, idCol: String = "doc_id"): (Long, Long) = {
-    import graft.engine.Layout
-    val byCorpus = ids.select(col(idCol).as("corpus_id"))
-    Layout.tombstone(spark, gT, byCorpus, "corpus_id")
-    Layout.tombstone(spark, cT, byCorpus, "corpus_id")
-    Layout.purgeLanded(spark, outDir, ids.select(col(idCol)),
+    graft.operators.StandingIndexes.Gram.purge(spark, (gT, cT),
+      ids.select(col(idCol).as("doc_id")))
+    graft.engine.Layout.purgeLanded(spark, outDir, ids.select(col(idCol)),
       Seq("batch_id", "corpus_id"), partitionCols = Seq("micro_batch_id"))
   }
 

@@ -39,6 +39,13 @@ class BenchRetrySpec extends AnyFunSuite {
     assert(Bench.retryBackoff(45000L, 0) == 45000L)
   }
 
+  test("subset runs default to no degraded retries; the env overrides both") {
+    assert(Bench.degradedRetries(None, subset = false) == 5)
+    assert(Bench.degradedRetries(None, subset = true) == 0)
+    assert(Bench.degradedRetries(Some("2"), subset = false) == 2)
+    assert(Bench.degradedRetries(Some("3"), subset = true) == 3)
+  }
+
   test("any healthy configured pass means no retries at all") {
     assert(!Bench.needAnotherPass(3, 3, Seq(true, false, true), 0, 3))
   }

@@ -32,8 +32,8 @@ class DedupSimilaritySpec extends SparkTestBase {
     // index differs from the standing one by PRECISELY the day-1
     // batch's rows — in both the signature and the vector table — and
     // the standing rows are untouched (append, never rebuild)
-    val (sigT, vecT, _) = operators.Pipeline.embIndex(spark, sf)
-    val (sigU, vecU, _) = operators.Pipeline.embIndexAbsorbed(spark, sf)
+    val (sigT, vecT, _) = operators.StandingIndexes.EmbLsh.standing(spark, sf)
+    val (sigU, vecU, _) = operators.StandingIndexes.EmbLsh.absorbed(spark, sf)
     val day1Sig = spark.table(sigU).filter(col("corpus_id") % 20 === 0)
     assert(day1Sig.count() > 0, "vacuous: no day-1 vectors signed at this sf")
     assert(day1Sig.count() ==
@@ -62,8 +62,8 @@ class DedupSimilaritySpec extends SparkTestBase {
     // folded. Three appends, not one (VERDICT r14 #7): each absorb
     // adds up to one file per touched bucket, so the fold has real
     // multi-day fan-in to collapse.
-    val t = operators.Pipeline.buildEmbIndex(spark, sf, "_cmplc",
-      col("vec_id") % 10 =!= 0)
+    val t = operators.StandingIndexes.EmbLsh.build(spark, sf, "_cmplc",
+      _.filter(col("vec_id") % 10 =!= 0))
     val (sigT, vecT, _) = t
     val bk = graft.engine.Layout.bucketsFor(s"$sf/embeddings.parquet")
     Seq(0, 10, 20).foreach(dy => operators.Pipeline.absorbEmbBatch(
@@ -98,7 +98,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(occAvg >= 1.0 && occMax >= math.ceil(occAvg).toLong,
       s"occupancy gauges inconsistent: avg $occAvg max $occMax")
     // reconcile against the landed tables directly
-    val (sigT, vecT, _) = operators.Pipeline.embIndex(spark, sf)
+    val (sigT, vecT, _) = operators.StandingIndexes.EmbLsh.standing(spark, sf)
     assert(spark.table(vecT).count() == nVec)
     assert(spark.table(sigT).groupBy(col("tb")).count()
       .agg(max("count")).collect()(0).getLong(0) == occMax)
@@ -110,8 +110,8 @@ class DedupSimilaritySpec extends SparkTestBase {
     // over the survivors (valid comparison here because the frozen
     // width derives from a corpus COUNT that stays in the same 24·2^w
     // band, so both indexes sign identically — the §6c argument)
-    val t = operators.Pipeline.buildEmbIndex(spark, sf, "_prg",
-      col("vec_id") % 10 =!= 0)
+    val t = operators.StandingIndexes.EmbLsh.build(spark, sf, "_prg",
+      _.filter(col("vec_id") % 10 =!= 0))
     def probe(tt: (String, String, String)) =
       operators.Pipeline.embIndexProbeOn(spark, tt,
         Tables.t(spark, sf, "embeddings").filter(col("vec_id") % 10 === 0),
@@ -122,11 +122,11 @@ class DedupSimilaritySpec extends SparkTestBase {
       .filter(col("vec_id") % 10 =!= 0 && col("vec_id") % 30 === 7)
       .select(col("vec_id"))
     assert(purgeIds.count() > 0, "no purgeable vectors at this sf")
-    operators.Pipeline.purgeEmbIndex(spark, t, purgeIds)
+    operators.StandingIndexes.EmbLsh.purge(spark, t, purgeIds)
     assert(graft.engine.Layout.readPurged(spark, t._2, "corpus_id")
       .filter(col("corpus_id") % 30 === 7).count() == 0)
-    val fresh = operators.Pipeline.buildEmbIndex(spark, sf, "_prgf",
-      col("vec_id") % 10 =!= 0 && col("vec_id") % 30 =!= 7)
+    val fresh = operators.StandingIndexes.EmbLsh.build(spark, sf, "_prgf",
+      _.filter(col("vec_id") % 10 =!= 0 && col("vec_id") % 30 =!= 7))
     assert(probe(t) == probe(fresh),
       "purged probe diverged from a fresh survivor build")
   }

@@ -151,7 +151,7 @@ class LayoutSpec extends SparkTestBase {
     // non-vacuity at the table level: the raw files still hold the
     // purged ids (delete was a sidecar append, not a rewrite) while
     // the purged read shows none
-    val (gT, cT) = operators.Pipeline.gramIndexPurged(spark, sf)
+    val (gT, cT) = operators.StandingIndexes.Gram.purged(spark, sf)
     assert(spark.catalog.tableExists(gT + "_tomb"), "no tombstone sidecar")
     assert(spark.table(gT).filter(col("corpus_id") % 30 === 3).count() > 0,
       "fixture has no purgeable corpus docs — the test is vacuous")

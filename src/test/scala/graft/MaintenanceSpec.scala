@@ -60,8 +60,8 @@ class MaintenanceSpec extends SparkTestBase {
 
   test("emb wiring: a tripped gauge fires refreezeEmb; probe ≡ from-scratch build over the same membership; healthy gauge fires nothing") {
     val bk = graft.engine.Layout.bucketsFor(s"$sf/embeddings.parquet")
-    val t = operators.Pipeline.buildEmbIndex(spark, sf, "_mnt",
-      col("vec_id") % 10 =!= 0)
+    val t = operators.StandingIndexes.EmbLsh.build(spark, sf, "_mnt",
+      _.filter(col("vec_id") % 10 =!= 0))
     operators.Pipeline.absorbEmbBatch(spark, sf, t, bk,
       col("vec_id") % 20 === 0)
     // healthy thresholds: no rebuild
@@ -72,8 +72,8 @@ class MaintenanceSpec extends SparkTestBase {
     val refr = operators.Pipeline.maybeRefreezeEmb(spark, sf, t, "_mntR",
       growthMax = 0.0)
     assert(refr.nonEmpty, "tripped policy did not fire the re-freeze")
-    val fresh = operators.Pipeline.buildEmbIndex(spark, sf, "_mntF",
-      col("vec_id") % 10 =!= 0 || col("vec_id") % 20 === 0)
+    val fresh = operators.StandingIndexes.EmbLsh.build(spark, sf, "_mntF",
+      _.filter(col("vec_id") % 10 =!= 0 || col("vec_id") % 20 === 0))
     def probe(tt: (String, String, String)) =
       operators.Pipeline.embIndexProbeOn(spark, tt,
         graft.engine.Tables.t(spark, sf, "embeddings")
@@ -100,8 +100,8 @@ class MaintenanceSpec extends SparkTestBase {
   test("ivf lifecycle: absorb assigns with the frozen quantizer; purge hides cells; re-cluster ≡ fresh fit over survivors") {
     import graft.engine.{Layout, Tables}
     val bk = Layout.bucketsFor(s"$sf/embeddings.parquet")
-    val t = operators.Pipeline.buildIvfIndex(spark, sf, "_mntI",
-      col("vec_id") % 10 =!= 0)
+    val t = operators.StandingIndexes.Ivf.build(spark, sf, "_mntI",
+      _.filter(col("vec_id") % 10 =!= 0))
     val (statT, cellsT) = t
     val fitN = spark.table(statT).agg(max(col("fit_n"))).head().getLong(0)
     assert(fitN == spark.table(cellsT).count(),
@@ -134,7 +134,7 @@ class MaintenanceSpec extends SparkTestBase {
       .filter(col("vec_id") % 10 =!= 0 && col("vec_id") % 30 === 7)
       .select(col("vec_id"))
     assert(purgeIds.count() > 0)
-    operators.Pipeline.purgeIvfIndex(spark, t, purgeIds)
+    operators.StandingIndexes.Ivf.purge(spark, t, purgeIds)
     assert(Layout.readPurged(spark, cellsT, "corpus_id")
       .filter(col("corpus_id") % 30 === 7 && col("corpus_id") % 10 =!= 0)
       .count() == 0)
@@ -150,9 +150,9 @@ class MaintenanceSpec extends SparkTestBase {
     // re-cluster from the purge-aware membership ≡ a fresh fit over
     // the surviving predicate (cells-as-manifest round trip)
     val recl = operators.Pipeline.reclusterIvf(spark, sf, "_mntIR", t)
-    val fresh = operators.Pipeline.buildIvfIndex(spark, sf, "_mntIF",
-      (col("vec_id") % 10 =!= 0 && col("vec_id") % 30 =!= 7) ||
-        (col("vec_id") % 20 === 0 && col("vec_id") % 30 =!= 7))
+    val fresh = operators.StandingIndexes.Ivf.build(spark, sf, "_mntIF",
+      _.filter((col("vec_id") % 10 =!= 0 && col("vec_id") % 30 =!= 7) ||
+        (col("vec_id") % 20 === 0 && col("vec_id") % 30 =!= 7)))
     assert(probe(recl, col("vec_id") % 20 === 10) ==
       probe(fresh, col("vec_id") % 20 === 10),
       "re-cluster diverged from a from-scratch survivor fit")
@@ -162,8 +162,8 @@ class MaintenanceSpec extends SparkTestBase {
   }
 
   test("ivf wiring: a tripped gauge fires reclusterIvf; healthy gauge fires nothing") {
-    val t = operators.Pipeline.buildIvfIndex(spark, sf, "_mntIW",
-      col("vec_id") % 10 =!= 0)
+    val t = operators.StandingIndexes.Ivf.build(spark, sf, "_mntIW",
+      _.filter(col("vec_id") % 10 =!= 0))
     assert(operators.Pipeline.maybeReclusterIvf(spark, sf, t, "_mntIWN",
       growthMax = 1e9, occSkewMax = 1e9).isEmpty)
     val recl = operators.Pipeline.maybeReclusterIvf(spark, sf, t, "_mntIWR",
@@ -320,19 +320,19 @@ class MaintenanceSpec extends SparkTestBase {
 
   test("emb re-freeze after a purge covers survivors only (no resurrection)") {
     val bk = graft.engine.Layout.bucketsFor(s"$sf/embeddings.parquet")
-    val t = operators.Pipeline.buildEmbIndex(spark, sf, "_mntP",
-      col("vec_id") % 10 =!= 0)
+    val t = operators.StandingIndexes.EmbLsh.build(spark, sf, "_mntP",
+      _.filter(col("vec_id") % 10 =!= 0))
     val purgeIds = graft.engine.Tables.t(spark, sf, "embeddings")
       .filter(col("vec_id") % 10 =!= 0 && col("vec_id") % 30 === 7)
       .select(col("vec_id"))
     assert(purgeIds.count() > 0, "no purgeable vectors at this sf")
-    operators.Pipeline.purgeEmbIndex(spark, t, purgeIds)
+    operators.StandingIndexes.EmbLsh.purge(spark, t, purgeIds)
     val refr = operators.Pipeline.refreezeEmb(spark, sf, "_mntPR", t)
     assert(spark.table(refr._2).filter(col("corpus_id") % 30 === 7
       && col("corpus_id") % 10 =!= 0).count() == 0,
       "re-freeze resurrected purged vectors")
-    val fresh = operators.Pipeline.buildEmbIndex(spark, sf, "_mntPF",
-      col("vec_id") % 10 =!= 0 && col("vec_id") % 30 =!= 7)
+    val fresh = operators.StandingIndexes.EmbLsh.build(spark, sf, "_mntPF",
+      _.filter(col("vec_id") % 10 =!= 0 && col("vec_id") % 30 =!= 7))
     def probe(tt: (String, String, String)) =
       operators.Pipeline.embIndexProbeOn(spark, tt,
         graft.engine.Tables.t(spark, sf, "embeddings")

@@ -7,7 +7,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 
 import graft.engine.{Memo, Tables}
-import graft.operators.Pipeline
 
 /** engine.Memo: memo lifetime is the SparkContext, builds are
   * at-most-once per key, a failed build memoizes nothing, and no other
@@ -82,7 +81,7 @@ class MemoSpec extends SparkTestBase {
       val start = new java.util.concurrent.CountDownLatch(1)
       val calls = (1 to 4).map(_ => pool.submit(
         new java.util.concurrent.Callable[(String, String)] {
-          def call(): (String, String) = { start.await(); Pipeline.gramIndex(s, dir) }
+          def call(): (String, String) = { start.await(); graft.operators.StandingIndexes.Gram.standing(s, dir) }
         }))
       start.countDown()
       val got = calls.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))

@@ -587,6 +587,31 @@ class PlanSpec extends SparkTestBase {
       s"textBasis persisted ${added.size} RDDs: ${added.values.mkString(", ")}")
   }
 
+  test("q_dedup_text_lsh persists one leaf beyond its basis") {
+    // `proj` is dropped once `keyed` has landed; `keyed` backs the result
+    val sc = spark.sparkContext
+    val s = spark.newSession()
+    graft.operators.Retrieval.textBasis(s, sf)
+    val before = sc.getPersistentRDDs.keySet
+    val lsh = SparkEntry.queries("q_dedup_text_lsh")(s, sf)
+    lsh.collect()
+    val added = sc.getPersistentRDDs -- before
+    assert(added.size == 1, s"q_dedup_text_lsh kept ${added.size} persisted " +
+      s"RDDs beyond its basis: ${added.values.mkString(", ")}")
+    assert(lsh.columns.nonEmpty) // keeps the result, and so `keyed`, reachable
+  }
+
+  test("q_audit_semantic adds no entry to the shared CacheManager") {
+    // its in-cell sides are a leaf dropped before the body returns
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val counts = SparkEntry.queries("q_audit_semantic")(spark.newSession(), sf)
+      .collect()
+    assert(cm.isEmpty, "q_audit_semantic cached a frame")
+    assert(counts.map(_.toString).toSeq == Seq("[0,0]"), counts.mkString)
+  }
+
   test("fresh-fit text leaves outlive clearCache() until releaseFreshLeaves drops them") {
     // ScaleStress and LshOverCap rebuild the basis and LSH leaves on
     // every run under freshFitProp; releasing them between runs must

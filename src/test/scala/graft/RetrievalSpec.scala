@@ -382,8 +382,8 @@ class RetrievalSpec extends SparkTestBase {
     // from the standing one by PRECISELY the day-1 batch's rows — in
     // both the signature and the vector table — and the standing rows
     // are untouched (append, never rebuild)
-    val (sigT, vecT, _, _) = operators.Retrieval.lshIndex(spark, sf)
-    val (sigU, vecU, _, _) = operators.Retrieval.lshIndexAbsorbed(spark, sf)
+    val (sigT, vecT, _, _) = operators.StandingIndexes.TextLsh.standing(spark, sf)
+    val (sigU, vecU, _, _) = operators.StandingIndexes.TextLsh.absorbed(spark, sf)
     val day1Sig = spark.table(sigU).filter(col("corpus_id") % 20 === 0)
     assert(day1Sig.count() > 0, "vacuous: no day-1 docs signed at this sf")
     assert(day1Sig.count() ==
@@ -416,7 +416,7 @@ class RetrievalSpec extends SparkTestBase {
     // the re-freeze REALLY re-froze: day-1's absorbed docs now count
     // in the df table (they were absorbed under the OLD frozen df,
     // which by design never saw them)
-    val oldDf = spark.table(operators.Retrieval.lshIndexAbsorbed(spark, sf)._3)
+    val oldDf = spark.table(operators.StandingIndexes.TextLsh.absorbed(spark, sf)._3)
     val newDf = spark.table(refr._3)
     val oldMass = oldDf.agg(sum(col("df"))).collect()(0).getLong(0)
     val newMass = newDf.agg(sum(col("df"))).collect()(0).getLong(0)
@@ -425,7 +425,7 @@ class RetrievalSpec extends SparkTestBase {
         "day-1 docs did not enter the new featurization")
     // manifest round trip: refrozen membership = old membership
     val oldMem = spark.table(
-      operators.Retrieval.lshMemTable(operators.Retrieval.lshIndexAbsorbed(spark, sf)._1))
+      operators.Retrieval.lshMemTable(operators.StandingIndexes.TextLsh.absorbed(spark, sf)._1))
     val newMem = spark.table(operators.Retrieval.lshMemTable(refr._1))
     assert(oldMem.exceptAll(newMem).isEmpty && newMem.exceptAll(oldMem).isEmpty)
   }
@@ -460,7 +460,7 @@ class RetrievalSpec extends SparkTestBase {
       purgeIds.select(col("doc_id").as("corpus_id")), Seq("corpus_id"),
       "left_semi").count()
     assert(vecHad > 0, "purge set missed the vector table entirely")
-    operators.Retrieval.purgeLshIndex(spark, t, purgeIds)
+    operators.StandingIndexes.TextLsh.purge(spark, t, purgeIds)
     assert(Layout.readPurged(spark, t._2, "corpus_id")
       .filter(col("corpus_id") % 30 === 3).count() == 0)
     val purgedSet = purgeIds.collect().map(_.getLong(0)).toSet
@@ -495,7 +495,7 @@ class RetrievalSpec extends SparkTestBase {
     // L1 distance between two (sub-)distributions is bounded by 2
     assert(dfShift >= 0.0 && dfShift <= 2.0, s"df_shift $dfShift")
     // reconcile n_oov against a direct recompute over the landed df
-    val (_, _, dfT, _) = operators.Retrieval.lshIndex(spark, sf)
+    val (_, _, dfT, _) = operators.StandingIndexes.TextLsh.standing(spark, sf)
     val frozen = spark.table(dfT).select(col("tok"))
     val oovDirect = graft.engine.Tables
       .t(spark, sf, "documents").filter(col("doc_id") % 10 === 0)
