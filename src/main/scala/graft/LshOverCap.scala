@@ -42,8 +42,8 @@ object LshOverCap {
     require(System.getProperty(operators.Retrieval.forceShardsProp) == null,
       "organic run: no force-prop may be set at launch")
     // both runs rebuild the session-memoized text-vector basis, so
-    // their walls and shuffle bytes compare the same work; run() drops
-    // the previous run's basis and LSH leaves
+    // their walls and shuffle bytes compare the same work; each run's
+    // Deferred scope drops its basis and LSH leaves
     System.setProperty(operators.Retrieval.freshFitProp, "true")
     // 1.75 M-doc caches + wide sorts on one JVM: a full-GC pause can
     // exceed the 120 s default executor-liveness window in local
@@ -65,7 +65,6 @@ object LshOverCap {
 
     def run(label: String): (Double, Long, String, String) = {
       spark.catalog.clearCache()
-      operators.Retrieval.releaseFreshLeaves(spark)
       val b0 = stages.settle()
       val ((df, rows), wall) = Harness.timed {
         val df = SparkEntry.queries(qname)(spark, dir)

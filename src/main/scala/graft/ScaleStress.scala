@@ -159,8 +159,6 @@ object ScaleStress {
           var mb = 0.0
           var mbCold = 0.0
           val wall = (1 to 2).map { p =>
-            // fresh-fit text leaves of the last pass outlive clearCache()
-            graft.operators.Retrieval.releaseFreshLeaves(spark)
             val b0 = stages.settle()
             val w = Harness.secs(
               fn(spark, dir).write.format("noop").mode("overwrite").save())

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Harness.{round2, timed}
-import graft.engine.{StandingIndex, Tables}
+import graft.engine.{Leaves, StandingIndex, Tables}
 import graft.operators.StandingIndexes
 
 /** Multi-day soak of every standing-index family, driven through the
@@ -74,7 +74,7 @@ object SoakBench {
       .collect().map(_.toString).toSeq
     val before = probe()
     // land the ids first: members reads through the tombstones
-    val ids = f.members(spark, d, t).filter(id % 30 === 3).localCheckpoint()
+    val ids = Leaves.land(f.members(spark, d, t).filter(id % 30 === 3))
     val (_, purgeW) = timed(f.purge(spark, t, ids))
     val purged = probe()
     val (files, compW) = timed(f.compact(spark, d, t))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Harness.{round2, secs, timed}
 import graft.engine.Layout.dirBytes
+import graft.engine.Leaves
 import graft.streaming.StreamRunner
 
 /** Streaming-at-scale harness (VERDICT r9 #7): all streaming evidence
@@ -161,13 +162,12 @@ object StreamStress {
     val (gB, cB) = buildLoopIdx("b")
     val loopPreds = Seq(col("doc_id") % 20 === 0, col("doc_id") % 20 === 10)
     val (chainV, chainWall) = timed(loopPreds.flatMap { pred =>
-      val v = graft.operators.Pipeline.gramIndexProbeOn(spark, sfDir,
-        Layout.readTable(spark, gB), Layout.readTable(spark, cB), pred)
-        .localCheckpoint()
-      val keep = graft.operators.Pipeline.wordGrams3(docs.filter(pred))
+      val v = Leaves.land(graft.operators.Pipeline.gramIndexProbeOn(spark, sfDir,
+        Layout.readTable(spark, gB), Layout.readTable(spark, cB), pred))
+      val keep = Leaves.land(graft.operators.Pipeline.wordGrams3(docs.filter(pred))
         .select(col("doc_id").as("corpus_id"), col("g"))
         .join(v.select(col("batch_id").as("corpus_id")).distinct(),
-          Seq("corpus_id"), "left_anti").localCheckpoint()
+          Seq("corpus_id"), "left_anti"))
       Layout.appendBucketed(keep, gB, "g", bkLoop)
       Layout.appendBucketed(keep.groupBy(col("corpus_id"))
         .agg(count(lit(1)).as("nc")), cB, "corpus_id", bkLoop)
@@ -295,11 +295,10 @@ object StreamStress {
     // late data actually dies). Equivalence: stream output ==
     // batch join over (all purchases) × (on-time clicks), exactAll
     // both ways; the planted-late matches are asserted absent.
-    val ev = graft.engine.Tables.t(spark, sfDir, "events")
+    val ev = Leaves.land(graft.engine.Tables.t(spark, sfDir, "events")
       .filter(col("event_type").isin("purchase", "click"))
       .select(col("event_id"), col("user_id"), col("event_type"),
-        col("ts").cast("timestamp").as("ts"))
-      .localCheckpoint()
+        col("ts").cast("timestamp").as("ts")))
     // 6-day tranches over the 30-day corpus, derived from the observed
     // minimum so the split is fixture-independent
     val ts0 = ev.agg(min(unix_timestamp(col("ts")))).head().getLong(0)

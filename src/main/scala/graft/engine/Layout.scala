@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 
 /** Physical data layout for repeated big-big joins (100 TB design
@@ -135,8 +135,7 @@ object Layout {
   /** Record a retention purge: append the ids (column `idCol`) to the
     * tombstone sidecar. Idempotent in effect — re-tombstoning an id is
     * a duplicate row the anti-join doesn't care about. */
-  def tombstone(spark: SparkSession, table: String, ids: DataFrame,
-      idCol: String): Unit =
+  def tombstone(table: String, ids: DataFrame, idCol: String): Unit =
     ids.select(col(idCol)).distinct()
       .write.mode("append").format("parquet").saveAsTable(tombTable(table))
 

@@ -27,15 +27,15 @@ import org.apache.spark.sql.SparkSession
   * on the heap past `clearCache()`: a memoized cache() keeps its whole
   * cached query, and a memoized Deferred frame keeps the executed
   * inner plan its body returned, with every broadcast table and
-  * nested cache that plan reaches. A Deferred body therefore lands its
-  * result and releases its own intermediates before returning
-  * (q_dedup_semantic's verdicts, the text basis, the decoded media
-  * embeddings). Entries must be small, not merely unreachable with
-  * their session: Spark's `shuffle-exchange-*` and
-  * `broadcast-exchange-*` pool threads inherit the active session
-  * through an InheritableThreadLocal and keep a dead session — and
-  * anything keyed on it — reachable until the idle thread retires,
-  * up to 60 s later.
+  * nested cache that plan reaches. So a build, and a memoized Deferred
+  * body, lands its result as a leaf (the text basis, q_dedup_semantic's
+  * verdicts, the decoded media embeddings); both run in a [[Leaves]]
+  * scope, which drops the intermediates their result does not read.
+  * Entries must be small, not merely unreachable with their session:
+  * Spark's `shuffle-exchange-*` and `broadcast-exchange-*` pool
+  * threads inherit the active session through an InheritableThreadLocal
+  * and keep a dead session — and anything keyed on it — reachable
+  * until the idle thread retires, up to 60 s later.
   *
   * Keys: `kind` names the call site; [[context]] entries are shared by
   * every session of the context (landed artifacts), [[session]]
@@ -86,7 +86,7 @@ object Memo {
 
   private def lookup[V](s: SparkSession, key: Seq[Any], build: => V): V =
     table(s.sparkContext).computeIfAbsent(key, _ => new Cell)
-      .get(build).asInstanceOf[V]
+      .get(Leaves.scope(build)).asInstanceOf[V]
 
   /** Build-once value shared by every session of `s`'s context. */
   def context[V](s: SparkSession, kind: String, parts: Any*)(build: => V): V =

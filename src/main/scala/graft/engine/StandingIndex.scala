@@ -84,7 +84,7 @@ trait StandingIndex[T] {
     * once; rows leave the disk at the next [[compact]]. */
   final def purge(s: SparkSession, t: T, ids: DataFrame): Unit =
     idTables(t).foreach { case (table, _, id) =>
-      Layout.tombstone(s, table, ids.select(col(idCol).as(id)), id)
+      Layout.tombstone(table, ids.select(col(idCol).as(id)), id)
     }
 
   /** Fold tombstones + append fan-in on every [[idTables]] entry — the

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.engine.{QueryPack, Tables}
+import graft.engine.{Leaves, QueryPack, Tables}
 import graft.plans.Deferred
 
 /** Oracle-adjacent audits for the sketch/LSH family (VERDICT r4 #7).
@@ -249,9 +249,9 @@ object Audits extends QueryPack {
       // the audit's OWN in-cell pass, written apart from the one in
       // q_dedup_semantic so the two can disagree; only the integer gate
       // is shared, and q_audit_text_recall's oracle recomputes that
-      // a leaf, not a cache: the body drops it before returning, which
-      // a cache cannot do here (the deadlock at semanticVerdicts)
-      val sides = verdicts.join(cvf, Seq("doc_id")).localCheckpoint()
+      // a leaf, not a cache: the body's scope drops it, which a cache
+      // cannot do here (the deadlock at semanticVerdicts)
+      val sides = Leaves.land(verdicts.join(cvf, Seq("doc_id")))
       val aa = sides.select(col("cid"), col("doc_id").as("da"),
         col("vf").as("vfa"), col("n2f").as("n2a"))
       val bb = sides.select(col("cid").as("cid_b"), col("doc_id").as("db"),
@@ -271,7 +271,7 @@ object Audits extends QueryPack {
           cand.join(va, Seq("da")).join(vb, Seq("db")))
         .select(col("db").as("doc_id")).distinct()
         .withColumn("shadowed", lit(true))
-      val counts = verdicts.join(shadowed, Seq("doc_id"), "left")
+      Leaves.land(verdicts.join(shadowed, Seq("doc_id"), "left")
         .select(col("is_kept"),
           coalesce(col("shadowed"), lit(false)).as("sh"))
         .agg(
@@ -279,10 +279,7 @@ object Audits extends QueryPack {
             .as("n_bad_drops"),
           sum(when(col("is_kept") && col("sh"), 1L).otherwise(0L))
             .as("n_bad_keeps"))
-        .orderBy(col("n_bad_drops"))
-        .localCheckpoint() // the one-row result lands before sides goes
-      Retrieval.dropLeaves(Seq(sides))
-      counts
+        .orderBy(col("n_bad_drops")))
       }
     }),
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.{QueryPack, Tables}
+import graft.engine.{Leaves, QueryPack, Tables}
 
 /** Round-4 corpus-curation operators — the remaining steps a large-scale
   * training-data pipeline runs between raw crawl and tokenizer:
@@ -14,12 +14,11 @@ import graft.engine.{QueryPack, Tables}
   *
   * Cache scope (ADVICE r11): the .cache() calls below (dsir feature
   * stream, winnow fingerprints) mark multi-consumer subtrees on plans
-  * the builders return un-materialized, so there is no post-action
-  * unpersist hook here. The harnesses own the lifecycle: graft.Verify
-  * clears the cache after every query, graft.Bench at each phase
-  * boundary, ScaleStress between scale steps — cached blocks never
-  * accumulate across a sweep. A long-lived interactive session should
-  * do the same (or unpersist per stage), per Pipeline.scala's header.
+  * that job-free builders return (LazyBuildSpec), so nothing here can
+  * drop them. The harnesses own their lifecycle: graft.Verify clears
+  * the cache after every query, graft.Bench at each phase boundary,
+  * ScaleStress between scale steps. What a Deferred body materializes
+  * is a leaf, dropped by its scope (Pipeline.scala's header).
   *
   * Scale notes (100 TB posture, per operator):
   *  - decontaminate: benchmark n-gram sets are small by nature (eval
@@ -291,7 +290,7 @@ object Curation extends QueryPack {
     // this is what upgrades the query from rows-only to hash-oracled
     // (5 chained CTEs, VERDICT r8 next-round #1). 85·fp ≤ 8.5e16 stays
     // far under 2^63, so no overflow in either engine. Lineage is
-    // truncated per round (localCheckpoint) like the connected-
+    // truncated per round (a landed leaf) like the connected-
     // components query. The power loop runs inside plans.Deferred at
     // first execution — the build itself is job-free (LazyBuildSpec).
     "q_graph_pagerank" -> ((s, d) => {
@@ -306,14 +305,12 @@ object Curation extends QueryPack {
         // references `pairs` twice and exchange reuse does not fire
         // across the swapped branches — un-checkpointed, the minhash
         // pipeline ran twice per execution (366 tasks/run vs 161 + ~45)
-        val pairs = Pipeline.queries("q_dedup_minhash")(s, d)
-          .select(col("da"), col("db")).localCheckpoint()
-        val edges = pairs
+        val pairs = Leaves.land(Pipeline.queries("q_dedup_minhash")(s, d)
+          .select(col("da"), col("db")))
+        val edges = Leaves.land(pairs
           .unionByName(pairs.select(col("db").as("da"), col("da").as("db")))
-          .select(col("da").as("src"), col("db").as("dst"))
-          .localCheckpoint()
-        val nodes = edges.select(col("src").as("node")).distinct()
-          .localCheckpoint()
+          .select(col("da").as("src"), col("db").as("dst")))
+        val nodes = Leaves.land(edges.select(col("src").as("node")).distinct())
         val n = nodes.count() // scalar fixpoint-style driver value, not data
         if (n == 0) {
           nodes.select(col("node").as("doc_id"),
@@ -342,7 +339,7 @@ object Curation extends QueryPack {
           // bit, and the 5th round rides the output plan with no cut
           // at all: 5 rounds now cost 2 checkpoints instead of 5.
           (1 to 2).foreach { _ =>
-            pr = round(round(pr)).localCheckpoint()
+            pr = Leaves.land(round(round(pr)))
           }
           pr = round(pr)
           pr.select(col("node").as("doc_id"),
@@ -689,7 +686,7 @@ object Curation extends QueryPack {
         .select(col("doc_id"), col("source"),
           (conv(substring(md5(concat(lit("ds:"), col("g"))), 1, 15), 16, 10)
             .cast("bigint") % 4096).as("b"))
-        .cache()
+        .cache() // fit AND scoring read it (scale notes above)
       val tgt = f.agg(min(col("source")).as("t"))
       val ct = f.crossJoin(broadcast(tgt)).filter(col("source") === col("t"))
         .groupBy(col("b")).agg(count(lit(1)).as("c_t"))

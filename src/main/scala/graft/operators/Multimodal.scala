@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.engine.{Layout, Memo, QueryPack, Tables}
+import graft.engine.{Layout, Leaves, Memo, QueryPack, Tables}
 import graft.plans.Deferred
 
 /** Binary media container sniffing — pure-JVM magic-byte + header
@@ -679,7 +679,7 @@ object Multimodal extends QueryPack {
   private[operators] def realEmbeddings(s: SparkSession, d: String): DataFrame =
     Memo.session(s, "realEmbeddings", d) {
       import s.implicits._
-      media(s, d, "png")
+      Leaves.land(media(s, d, "png")
         .mapPartitions(_.map { p =>
           val e = imageEmbedding(ImageCodec.decodePx(p.payload))
           var sig = 0
@@ -687,8 +687,7 @@ object Multimodal extends QueryPack {
           while (i < e.length) { if (e(i) >= 0f) sig |= 1 << i; i += 1 }
           (p.doc_id, e, sig)
         })
-        .toDF("doc_id", "emb", "sig")
-        .localCheckpoint()
+        .toDF("doc_id", "emb", "sig"))
     }
 
   /** One codec family's payloads, column-pruned and spread for decode
@@ -859,7 +858,7 @@ object Multimodal extends QueryPack {
         StructField("hamming", IntegerType)))) { () =>
       val feats = pngFeatures(s, d)
         .filter(col("px_w") > 0)
-        .select(col("doc_id"), col("phash")).cache()
+        .select(col("doc_id"), col("phash")).cache() // the result reads it
       val banded = feats.select(col("doc_id"), col("phash"),
         explode(expr(
           "transform(sequence(0, 6), b -> struct(b AS band, shiftright(phash, b*8) & 255 AS v))"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 
-import graft.engine.{Memo, QueryPack, Tables}
+import graft.engine.{Leaves, Memo, QueryPack, Tables}
 import graft.functions.GraftFunctions
 import graft.plans.Deferred
 
@@ -26,13 +26,13 @@ import graft.plans.Deferred
   *    brute-force top-k broadcasts the single query vector (no
   *    shuffle); the ANN variant prunes by random-hyperplane bucket.
   *
-  * Cache scope: the .cache() calls on small derived tables (minhash /
-  * simhash signatures, IVF embeddings) are session-scoped by the
-  * query-builder contract — builders return un-materialized DataFrames,
-  * so there is no post-action hook to unpersist from. At 100 TB the
-  * pipeline runner owns materialization and should unpersist (or
-  * checkpoint) after each stage; the CacheManager dedups re-built
-  * plans, so repeated builds don't stack copies.
+  * Cache scope: what a Deferred body or an index build materializes is
+  * a leaf (engine.Leaves.land), dropped when its scope closes unless
+  * the result reads it. The .cache() calls left mark multi-consumer
+  * subtrees of plans that job-free builders return (LazyBuildSpec), so
+  * nothing here can drop them: graft.Verify and graft.Bench clear them
+  * between queries, and the CacheManager dedups re-built plans, so
+  * repeated builds don't stack copies.
   *
   * MinHash is a custom expression composition rather than MLlib's
   * MinHashLSH (SURVEY.md §4.3 considered both): the SQL-native form
@@ -162,19 +162,17 @@ object Pipeline extends QueryPack {
     * q_dedup_substring entry — measured 2.2× shuffle cut); the island
     * merge windows PER DOC, so runs merge in parallel across docs.
     *
-    * `transient`: release the positional-gram cache as soon as the
-    * spans materialize (eager localCheckpoint of the dup-sized span
-    * frame, then unpersist). The full-corpus callers (q_dedup_substring
-    * / q_dedup_span_apply) keep the default — their cached fragment is
-    * plan-identical across queries, so CacheManager shares ONE entry —
-    * but the cascade's survivor-slice call descends from a
-    * localCheckpoint whose lineage is unique per run: without the
-    * eager release, every cascade invocation pinned a fresh
-    * corpus-sized gram frame for the session's lifetime (ADVICE r15,
-    * the multi-day-soak accumulation). */
+    * `transient`: the positional grams are a leaf, dropped as soon as
+    * the dup-sized span frame lands. The full-corpus callers
+    * (q_dedup_substring / q_dedup_span_apply) keep the default cache —
+    * their fragment is plan-identical across queries, so CacheManager
+    * shares ONE entry — but the cascade's survivor-slice call descends
+    * from a leaf whose lineage is unique per run: cached, every cascade
+    * invocation pinned a fresh corpus-sized gram frame for the
+    * session's lifetime (ADVICE r15, the multi-day-soak accumulation). */
   private def dupSpans(docs: DataFrame,
       transient: Boolean = false): DataFrame = {
-    val g = docs
+    val grams = docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 5)
       .select(col("doc_id"), explode(expr(
@@ -182,27 +180,25 @@ object Pipeline extends QueryPack {
           "struct(i as pos, xxhash64(concat_ws(' ', slice(w, i, 5))) as gh))"))
         .as("pg"))
       .select(col("doc_id"), col("pg.pos").as("pos"), col("pg.gh").as("gh"))
-      .cache() // feeds the dup-gram agg AND the hit join-back
-    val dup = g.groupBy(col("gh"))
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= 2).select(col("gh"))
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("pos"))
-    val spans = g.join(dup, Seq("gh")).select(col("doc_id"), col("pos"))
-      .withColumn("grp", col("pos") - row_number().over(win))
-      .groupBy(col("doc_id"), col("grp"))
-      .agg(min(col("pos")).as("span_start"),
-        (max(col("pos")) + 4).as("span_end"),
-        count(lit(1)).as("n_grams"))
-      .select(col("doc_id"), col("span_start"), col("span_end"),
-        (col("span_end") - col("span_start") + 1).as("span_len"),
-        col("n_grams"))
-    if (!transient) spans
-    else {
-      val out = spans.localCheckpoint()
-      g.unpersist()
-      out
+    // g feeds the dup-gram agg AND the hit join-back
+    def spansOf(g: DataFrame): DataFrame = {
+      val dup = g.groupBy(col("gh"))
+        .agg(countDistinct(col("doc_id")).as("nd"))
+        .filter(col("nd") >= 2).select(col("gh"))
+      val win = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("doc_id")).orderBy(col("pos"))
+      g.join(dup, Seq("gh")).select(col("doc_id"), col("pos"))
+        .withColumn("grp", col("pos") - row_number().over(win))
+        .groupBy(col("doc_id"), col("grp"))
+        .agg(min(col("pos")).as("span_start"),
+          (max(col("pos")) + 4).as("span_end"),
+          count(lit(1)).as("n_grams"))
+        .select(col("doc_id"), col("span_start"), col("span_end"),
+          (col("span_end") - col("span_start") + 1).as("span_len"),
+          col("n_grams"))
     }
+    if (!transient) spansOf(grams.cache())
+    else Leaves.scope(Leaves.land(spansOf(Leaves.land(grams))))
   }
 
   /** Distinct lowercase whitespace tokens per doc. */
@@ -597,15 +593,15 @@ object Pipeline extends QueryPack {
     * the bucketed cells table over the vectors `sel` keeps. */
   private[graft] def buildIvfIndexOn(s: SparkSession, d: String,
       suffix: String, sel: DataFrame => DataFrame,
-      cellTarget: Long = ivfCellTarget): (String, String) = {
+      cellTarget: Long = ivfCellTarget): (String, String) = Leaves.scope {
     GraftFunctions.register(s)
     val bk = graft.engine.Layout.bucketsFor(s"$d/embeddings.parquet")
     val statT = s"graft_ivfcent_idx$suffix"
     val cellsT = s"graft_ivfcell_idx$suffix"
-    val corp = ivfQuant(sel(Tables.t(s, d, "embeddings"))).cache()
+    val corp = Leaves.land(ivfQuant(sel(Tables.t(s, d, "embeddings"))))
     val fitN = corp.count()
     val k = ivfKFor(fitN, cellTarget)
-    val cents = ivfFit(corp, k).cache()
+    val cents = Leaves.land(ivfFit(corp, k))
     cents.withColumn("fit_n", lit(fitN))
       .withColumn("k", lit(k))
       .withColumn("cell_target", lit(cellTarget))
@@ -615,7 +611,6 @@ object Pipeline extends QueryPack {
         .select(col("vec_id").as("corpus_id"), col("cid"),
           col("embedding"), col("nrm")),
       cellsT, "cid", bk)
-    cents.unpersist(); corp.unpersist()
     (statT, cellsT)
   }
 
@@ -624,9 +619,9 @@ object Pipeline extends QueryPack {
     * with the FROZEN centroids, append into the cells table — one new
     * file per touched bucket, the standing rows untouched. */
   private[graft] def absorbIvfFrame(s: SparkSession, t: (String, String),
-      bk: Int, day0: DataFrame): Unit = {
+      bk: Int, day0: DataFrame): Unit = Leaves.scope {
     val (statT, cellsT) = t
-    val day = ivfQuant(day0).cache()
+    val day = Leaves.land(ivfQuant(day0))
     val cents = graft.engine.Layout.readTable(s, statT)
       .select(col("cid"), col("cvec"))
     graft.engine.Layout.appendBucketed(
@@ -634,7 +629,6 @@ object Pipeline extends QueryPack {
         .select(col("vec_id").as("corpus_id"), col("cid"),
           col("embedding"), col("nrm")),
       cellsT, "cid", bk)
-    day.unpersist()
   }
 
   /** One absorb day by corpus predicate (the batch queries' shape). */
@@ -810,14 +804,12 @@ object Pipeline extends QueryPack {
     * fixpoint THROWS — truncated labels are silently-wrong cluster ids
     * downstream, invisible at production scale where no oracle runs. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // localCheckpoint (eager) truncates lineage each round — without it
-    // the plan grows linearly and per-iteration planning time dominates.
-    val edges = pairs.select(col("da").as("a"), col("db").as("b"))
-      .unionByName(pairs.select(col("db").as("a"), col("da").as("b")))
-      .localCheckpoint()
-    var labels = edges.select(col("a").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint()
+    // a leaf per round truncates lineage (else planning time grows with
+    // the rounds); the caller's leaf scope drops all rounds but the last
+    val edges = Leaves.land(pairs.select(col("da").as("a"), col("db").as("b"))
+      .unionByName(pairs.select(col("db").as("a"), col("da").as("b"))))
+    var labels = Leaves.land(edges.select(col("a").as("node")).distinct()
+      .withColumn("label", col("node")))
     def labelSum(df: DataFrame): Long = {
       val r = df.agg(sum(col("label"))).collect()(0)
       if (r.isNullAt(0)) 0L else r.getLong(0)
@@ -850,14 +842,14 @@ object Pipeline extends QueryPack {
         // own (never larger) label — two hops per round, compounding.
         // The checkpoint stops the self-join from computing the
         // neighbor-min subtree twice.
-        val stepped = next.localCheckpoint()
+        val stepped = Leaves.land(next)
         next = stepped.join(
           stepped.select(col("node").as("ln"), col("label").as("llabel")),
           col("label") === col("ln"), "left")
           .select(col("node"), least(col("label"),
             coalesce(col("llabel"), col("label"))).as("label"))
       }
-      labels = next.localCheckpoint()
+      labels = Leaves.land(next)
       val s = labelSum(labels)
       converged = s == prevSum
       prevSum = s
@@ -898,11 +890,10 @@ object Pipeline extends QueryPack {
     * silently-wrong cluster ids are invisible at production scale,
     * same doctrine as the label propagation twin. */
   def starComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
-    var edges = pairs
+    var edges = Leaves.land(pairs
       .select(greatest(col("da"), col("db")).as("hi"),
         least(col("da"), col("db")).as("lo"))
-      .filter(col("hi") =!= col("lo")).distinct()
-      .localCheckpoint()
+      .filter(col("hi") =!= col("lo")).distinct())
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -910,18 +901,16 @@ object Pipeline extends QueryPack {
       val sym = edges.select(col("hi").as("u"), col("lo").as("v"))
         .unionByName(edges.select(col("lo").as("u"), col("hi").as("v")))
       val lmins = sym.groupBy(col("u")).agg(least(min(col("v")), col("u")).as("m"))
-      val ls = sym.join(lmins, "u").filter(col("v") > col("u"))
-        .select(col("v").as("hi"), col("m").as("lo")).distinct()
-        .localCheckpoint()
+      val ls = Leaves.land(sym.join(lmins, "u").filter(col("v") > col("u"))
+        .select(col("v").as("hi"), col("m").as("lo")).distinct())
       // small-star on the (big → small)-oriented output: m(u) = min of
       // u's smaller neighbors; connect u AND each smaller neighbor to m
       val smins = ls.groupBy(col("hi")).agg(min(col("lo")).as("m"))
-      val ss = ls.join(smins, "hi")
+      val ss = Leaves.land(ls.join(smins, "hi")
         .select(col("lo").as("v"), col("m"))
         .unionByName(smins.select(col("hi").as("v"), col("m")))
         .filter(col("v") =!= col("m"))
-        .select(col("v").as("hi"), col("m").as("lo")).distinct()
-        .localCheckpoint()
+        .select(col("v").as("hi"), col("m").as("lo")).distinct())
       edges = ss
       // star-forest test: sources with >1 target or any source that is
       // also a target ⇒ not converged. Exact (see scaladoc), and the
@@ -962,8 +951,8 @@ object Pipeline extends QueryPack {
         // and not exchange-reused (task-count witness: q_dedup_cluster
         // 348 tasks/run vs 161 for one pair derivation + 29 for the
         // loop). Same idiom as q_dedup_apply/q_dedup_cascade.
-        val pairs = queries("q_dedup_minhash")(s, d)
-          .select(col("da"), col("db")).localCheckpoint()
+        val pairs = Leaves.land(queries("q_dedup_minhash")(s, d)
+          .select(col("da"), col("db")))
         connectedComponents(pairs)
           .select(col("node").as("doc_id"), col("cluster_id"))
           .orderBy(col("doc_id"))
@@ -984,8 +973,8 @@ object Pipeline extends QueryPack {
         // final node labeling — un-checkpointed, the minhash pipeline
         // ran 3× per execution (task-count witness: 478 tasks/run vs
         // 161 + 30 for derivation + loop).
-        val pairs = queries("q_dedup_minhash")(s, d)
-          .select(col("da"), col("db")).localCheckpoint()
+        val pairs = Leaves.land(queries("q_dedup_minhash")(s, d)
+          .select(col("da"), col("db")))
         starComponents(pairs)
           .select(col("node").as("doc_id"), col("cluster_id"))
           .orderBy(col("doc_id"))
@@ -1117,7 +1106,7 @@ object Pipeline extends QueryPack {
 
     // Word-set Jaccard over an audit slice (ground truth for LSH).
     "q_dedup_ngram" -> ((s, d) => {
-      val tok = tokens(Tables.t(s, d, "documents"), Some(100)).cache()
+      val tok = tokens(Tables.t(s, d, "documents"), Some(100)).cache() // 3 readers
       val cnt = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
       val inter = tok.as("a").join(tok.as("b"),
           col("a.token") === col("b.token") && col("a.doc_id") < col("b.doc_id"))
@@ -1222,8 +1211,8 @@ object Pipeline extends QueryPack {
         // whole shingle join. The checkpoint pins the (tiny — dups are
         // rare) pair list itself, so every loop round reads rows, not
         // the subtree that produced them.
-        val pairs = queries("q_dedup_prefix_join")(s, d)
-          .select(col("da"), col("db")).localCheckpoint()
+        val pairs = Leaves.land(queries("q_dedup_prefix_join")(s, d)
+          .select(col("da"), col("db")))
         val cc = connectedComponents(pairs)
         Tables.t(s, d, "documents").select(col("doc_id"))
           .join(cc, col("doc_id") === col("node"), "left")
@@ -1265,23 +1254,21 @@ object Pipeline extends QueryPack {
         // 4.48 s with the barriers vs 6.45 s without, 6 of 6 pairs).
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("h")).orderBy(desc("n_chars"), col("doc_id"))
-        val ex = docs
+        val ex = Leaves.land(docs
           .withColumn("h", md5(lower(trim(col("text")))))
           .select(col("doc_id"), col("h"), col("n_chars"))
           .withColumn("rn", row_number().over(w))
           .withColumn("ex_winner", first(col("doc_id")).over(w))
-          .select(col("doc_id"), col("rn"), col("ex_winner"))
-          .localCheckpoint()
+          .select(col("doc_id"), col("rn"), col("ex_winner")))
         val surv = ex.filter(col("rn") === 1).select(col("doc_id"))
         // both-endpoint survivor restriction of the shared pair set
         // (CacheManager reuses the verified prefix-join fragment);
         // localCheckpoint before the component loop — q_dedup_apply's
         // eviction argument applies verbatim
-        val pairs = queries("q_dedup_prefix_join")(s, d)
+        val pairs = Leaves.land(queries("q_dedup_prefix_join")(s, d)
           .select(col("da"), col("db"))
           .join(surv.select(col("doc_id").as("da")), Seq("da"))
-          .join(surv.select(col("doc_id").as("db")), Seq("db"))
-          .localCheckpoint()
+          .join(surv.select(col("doc_id").as("db")), Seq("db")))
         val cc = connectedComponents(pairs)
         val nearDropped =
           col("cluster_id").isNotNull && col("cluster_id") =!= col("doc_id")
@@ -1297,7 +1284,7 @@ object Pipeline extends QueryPack {
         // dup-cluster-sized (broadcast at any realistic dup rate).
         // lin is read twice (survDocs' semi-join and the final attach)
         // — same barrier argument as ex above, one slim row per doc
-        val lin = ex
+        val lin = Leaves.land(ex
           .join(cc, col("doc_id") === col("node"), "left")
           .join(cc.select(col("node").as("ex_winner"),
             col("cluster_id").as("wcc")), Seq("ex_winner"), "left")
@@ -1307,8 +1294,7 @@ object Pipeline extends QueryPack {
               .otherwise(lit("kept")).as("stage0"),
             when(col("rn") > 1, coalesce(col("wcc"), col("ex_winner")))
               .when(nearDropped, col("cluster_id"))
-              .otherwise(col("doc_id")).as("winner_id"))
-          .localCheckpoint()
+              .otherwise(col("doc_id")).as("winner_id")))
         // stage 3 (VERDICT r14 #6): the SUBSTRING pass over the
         // post-dedup survivors — a doc that cleared both whole-doc
         // stages can still carry cross-doc verbatim spans the span
@@ -1520,7 +1506,7 @@ object Pipeline extends QueryPack {
     // buckets, est filter — bit-reproducible in DuckDB, so this is
     // hash-oracled end-to-end (was rows-only through round 8).
     "q_dedup_minhash" -> ((s, d) => {
-      val sig = minhashSig(Tables.t(s, d, "documents")).cache()
+      val sig = minhashSig(Tables.t(s, d, "documents")).cache() // bands + verify
       val bands = sig.select(col("doc_id"), explode(array(
         (0 until nBands).map { j =>
           struct(lit(j).as("band"),
@@ -1803,7 +1789,7 @@ object Pipeline extends QueryPack {
           StructField("vec_id", org.apache.spark.sql.types.LongType),
           StructField("cos_sim", org.apache.spark.sql.types.DoubleType)))) { () =>
       GraftFunctions.register(s)
-      val e = ivfQuant(Tables.t(s, d, "embeddings")).cache()
+      val e = ivfQuant(Tables.t(s, d, "embeddings")).cache() // read by the result: a leaf lives as long
       // k and nprobe derive from the fit membership (round 17 — the
       // standing family's ivfKFor discipline, mirrored in ivf_kk); the
       // count() is the same one-pass scan the fit's first Lloyd round
@@ -1818,7 +1804,7 @@ object Pipeline extends QueryPack {
       // the k-row centroid table feeds BOTH the corpus assignment and
       // the query-probe ranking — cache it so the 2-round Lloyd
       // subtree (the bulk of this plan) executes once, not twice
-      val cents = ivfFit(e, k).cache()
+      val cents = ivfFit(e, k).cache() // likewise read by the result
       val cells = assign(cents)
       val qCells = e.filter(col("vec_id") === 0).crossJoin(broadcast(cents))
         .orderBy(dQ, col("cid")).limit(nprobe)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.engine.{Memo, QueryPack, Tables}
+import graft.engine.{Leaves, Memo, QueryPack, Tables}
 import graft.functions.GraftFunctions
 import graft.plans.Deferred
 
@@ -50,8 +50,8 @@ object Retrieval extends QueryPack {
   /** System property that bypasses the text-basis and semantic memos
     * so every call rebuilds the basis and re-fits the cluster hierarchy
     * from scratch — the fresh-fit mode ScaleStress uses to measure
-    * honest pass-1 cost (VERDICT r9 #5). Production consumers never
-    * set it. */
+    * honest pass-1 cost (VERDICT r9 #5); the consumer's Deferred scope
+    * drops a fresh basis. Production consumers never set it. */
   private[graft] val freshFitProp = "graft.semantic.freshFit"
 
   // NOT spread — same small-vocab partial-agg reasoning as
@@ -73,7 +73,7 @@ object Retrieval extends QueryPack {
   // keep query BUILDS job-free.
   private[operators] def lshPairsShared(s: SparkSession, d: String): DataFrame =
     Memo.session(s, "lshPairsShared", d) {
-      textLsh(s, d).select(col("da"), col("db")).localCheckpoint()
+      Leaves.land(textLsh(s, d).select(col("da"), col("db")))
     }
 
   private def tokens(s: SparkSession, d: String): DataFrame =
@@ -153,7 +153,7 @@ object Retrieval extends QueryPack {
         .select(col("doc_id"), col("cv"),
           expr("transform(cv, x -> cast(x as float))").as("vf"))
         .withColumn("n2f", GraftFunctions.dot_d(col("vf"), col("vf")))
-      TextBasis(textLeaf(vecs))
+      TextBasis(Leaves.land(vecs))
     }
 
   /** The integer-exact cosine ≥ 0.9 gate over candidate pairs
@@ -177,38 +177,6 @@ object Retrieval extends QueryPack {
           .as("cos"))
 
   private def freshFit: Boolean = sys.props.get(freshFitProp).contains("true")
-
-  /** RDD name of the [[textBasis]], [[textLsh]] and q_dedup_semantic
-    * verdict leaves built under [[freshFitProp]]; no memo holds those. */
-  private[graft] val freshLeafName = "graft.freshTextLeaf"
-
-  /** `df.localCheckpoint()`, named [[freshLeafName]] under [[freshFitProp]]. */
-  private def textLeaf(df: DataFrame): DataFrame = {
-    val leaf = df.localCheckpoint()
-    if (freshFit) leaf.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.setName(freshLeafName)
-      case _ =>
-    }
-    leaf
-  }
-
-  /** Drop the blocks of every fresh-fit text leaf in `s`'s context.
-    * `clearCache()` does not free leaves (only the ContextCleaner does,
-    * after a driver GC), so harnesses that run under [[freshFitProp]]
-    * call this between runs. */
-  private[graft] def releaseFreshLeaves(s: SparkSession): Unit =
-    s.sparkContext.getPersistentRDDs.values
-      .filter(_.name == freshLeafName).foreach(_.unpersist(blocking = true))
-
-  /** Drop the blocks of the checkpointed leaves `dfs`. Unlike
-    * unpersisting a cache, this takes no lock of the CacheManager, so
-    * a Deferred body may call it (the deadlock at [[semanticVerdicts]]). */
-  private[operators] def dropLeaves(dfs: Iterable[DataFrame]): Unit =
-    dfs.foreach(_.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
-      case _ =>
-    })
 
   /** Memo.session, bypassed under [[freshFitProp]]. */
   private def sessionMemo[V](s: SparkSession, kind: String, d: String)(
@@ -379,7 +347,7 @@ object Retrieval extends QueryPack {
       .select(col("doc_id"), col("j"), col("w"),
         shiftright(coalesce(col("v"), lit(0L)) * col("nd") - col("sj"), 12)
           .as("c"))
-      .cache() // feeds projections AND packed vectors
+      .cache() // feeds projections AND packed vectors; job-free for lazy probes
     val proj = dense.join(broadcast(rmat128(s)), Seq("j"))
       .filter(col("k") < col("w") * 8)
       .groupBy(col("doc_id"), col("k"), col("w"))
@@ -422,7 +390,7 @@ object Retrieval extends QueryPack {
     * produced by the same lshSign every batch probe uses — the
     * gram-index invariant that everything derives from landed bytes. */
   private[graft] def buildLshIndex(s: SparkSession, d: String, suffix: String,
-      corpus: DataFrame => DataFrame): (String, String, String, String) = {
+      corpus: DataFrame => DataFrame): (String, String, String, String) = Leaves.scope {
     val bk = lshBuckets(d)
     val dfT = s"graft_lshdf_idx$suffix"
     val statT = s"graft_lshstat_idx$suffix"
@@ -437,8 +405,8 @@ object Retrieval extends QueryPack {
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
     graft.engine.Layout.writeBucketed(
       ctf.groupBy(col("tok")).agg(count(lit(1)).as("df")), dfT, "tok", bk)
-    val emb = hashEmbed(ctf, graft.engine.Layout.readTable(s, dfT).hint("merge"))
-      .cache() // nd, sj, and nothing else — unpersisted below
+    val emb = Leaves.land( // nd and sj read it; dropped once the tables land
+      hashEmbed(ctf, graft.engine.Layout.readTable(s, dfT).hint("merge")))
     val nD = emb.groupBy(col("doc_id")).agg(count(lit(1)).as("nz"))
       .filter(col("nz") >= 4).agg(count(lit(1)).as("nd"))
     val wSel = s.range(8, 17).select(col("id").cast("int").as("wc"))
@@ -459,7 +427,6 @@ object Retrieval extends QueryPack {
     graft.engine.Layout.writeBucketed(
       vecs.select(col("doc_id").as("corpus_id"), col("cv"), col("vf"),
         col("n2f"), col("n2")), vecT, "corpus_id", bk)
-    emb.unpersist()
     (sigT, vecT, dfT, statT)
   }
 
@@ -533,11 +500,11 @@ object Retrieval extends QueryPack {
     * engines; the share-based normalization needs no corpus doc count,
     * which the index does not persist). Everything derives from the
     * LANDED df table + the raw batch — no corpus re-tokenization.
-    * The one-row result materializes eagerly and the batch-df join's
-    * cache is released (ADVICE r15: repeated gauge reads in a
-    * multi-day session accumulated unreleased cached frames). */
+    * The one-row result lands eagerly and the batch-df join's leaf is
+    * dropped when the gauge returns (ADVICE r15: repeated gauge reads
+    * in a multi-day session accumulated unreleased cached frames). */
   private[graft] def lshDriftGauge(s: SparkSession, d: String,
-      t: (String, String, String, String), batchPred: Column): DataFrame = {
+      t: (String, String, String, String), batchPred: Column): DataFrame = Leaves.scope {
     val (_, _, dfT, _) = t
     val fdf = graft.engine.Layout.readTable(s, dfT)
     val btf = Tables.spread(Tables.t(s, d, "documents"), "doc_id")
@@ -547,7 +514,7 @@ object Retrieval extends QueryPack {
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
     val bdf = btf.groupBy(col("tok"))
       .agg(sum(col("tf")).as("occ"), count(lit(1)).as("dfb"))
-    val j = bdf.join(fdf.hint("merge"), Seq("tok"), "left").cache()
+    val j = Leaves.land(bdf.join(fdf.hint("merge"), Seq("tok"), "left"))
     val sb = bdf.agg(sum(col("dfb")).as("s_b"))
     val sc = fdf.agg(sum(col("df")).as("s_c"))
     val tot = j.agg(sum(col("occ")).as("n_tok"),
@@ -557,17 +524,14 @@ object Retrieval extends QueryPack {
       .crossJoin(broadcast(sb)).crossJoin(broadcast(sc))
       .agg(sum(abs(col("dfb").cast("decimal(38,0)") * col("s_c") -
         col("df").cast("decimal(38,0)") * col("s_b"))).as("l1num"))
-    val out = tot.crossJoin(broadcast(l1))
+    Leaves.land(tot.crossJoin(broadcast(l1))
       .crossJoin(broadcast(sb)).crossJoin(broadcast(sc))
       .select(col("n_tok"), col("n_oov"),
         round(col("n_oov").cast("double") / col("n_tok"), 6)
           .as("oov_rate"),
         round(col("l1num").cast("double") /
           (col("s_b").cast("double") * col("s_c").cast("double")), 6)
-          .as("df_shift"))
-      .localCheckpoint()
-    j.unpersist()
-    out
+          .as("df_shift")))
   }
 
   /** The gauge WIRED to the re-freeze (VERDICT r15 #5): read the drift
@@ -655,10 +619,10 @@ object Retrieval extends QueryPack {
     StructField("cos", DoubleType)))
 
   /** The body of q_dedup_text_lsh (design notes at its entry in
-    * [[queries]]). It reads the text-vector basis and checkpoints
-    * `proj` and `keyed` (dropping `proj` once `keyed` has landed), so
-    * building it runs jobs: the query wraps it in Deferred, and
-    * PlanSpec asserts on the plan of this frame. */
+    * [[queries]]). It reads the text-vector basis and lands `proj` and
+    * `keyed` in the caller's leaf scope, so building it runs jobs: the
+    * query lands this frame in its Deferred body, whose scope then
+    * drops both, and PlanSpec asserts on the plan of this frame. */
   private[graft] def textLsh(s: SparkSession, d: String): DataFrame = {
     GraftFunctions.register(s)
     val basis = textBasis(s, d)
@@ -682,7 +646,7 @@ object Retrieval extends QueryPack {
     // buckets AND sig read proj — unshared, the dense→proj subtree
     // ran twice (measured 2.1 GB shuffle at 10× from the rebuild); a
     // leaf, not a cache, so neither consumer re-plans it
-    val proj = textLeaf(dense.join(broadcast(rmat128(s)), Seq("j"))
+    val proj = Leaves.land(dense.join(broadcast(rmat128(s)), Seq("j"))
       .crossJoin(broadcast(wSel))
       .filter(col("k") < col("w") * 8)
       .groupBy(col("doc_id"), col("k"), col("w"))
@@ -696,8 +660,7 @@ object Retrieval extends QueryPack {
     val sigs = proj.filter(col("k") < 63).groupBy(col("doc_id"))
       .agg(sum(when(col("p") >= 0,
         expr("shiftleft(cast(1 as bigint), k)")).otherwise(0L)).as("sig"))
-    val keyed = textLeaf(buckets.join(sigs, Seq("doc_id")))
-    dropLeaves(Seq(proj)) // keyed has landed: nothing reads proj again
+    val keyed = Leaves.land(buckets.join(sigs, Seq("doc_id")))
     val aa = keyed.select(col("doc_id").as("da"), col("band").as("band_a"),
       col("bkt").as("bkt_a"), col("sig").as("sig_a"))
     val bb = keyed.select(col("doc_id").as("db"), col("band").as("band_b"),
@@ -850,11 +813,11 @@ object Retrieval extends QueryPack {
   }
 
   /** The body of q_dedup_semantic (design notes at its entry in
-    * [[queries]]): its sorted verdicts (doc_id, cid, is_kept), lent to
-    * `use` while the fit's intermediate leaves are alive; their blocks
-    * are dropped when `use` returns or anything throws. The query lands
-    * the verdicts as a leaf; PlanSpec asserts on the plan of this
-    * frame. Fitting runs jobs, so call this only from a Deferred body.
+    * [[queries]]): its sorted verdicts (doc_id, cid, is_kept), over
+    * intermediate leaves landed in the caller's leaf scope. The query
+    * lands the verdicts, and its Deferred scope then drops the
+    * intermediates; PlanSpec asserts on the plan of this frame. Fitting
+    * runs jobs, so call this only from a Deferred body.
     *
     * The intermediates are leaves, not caches: dropping a cache inside
     * a Deferred body goes through the CacheManager, which waits on
@@ -862,134 +825,129 @@ object Retrieval extends QueryPack {
     * Deferred (q_audit_semantic's) is built while holding its builder
     * and waiting on the body: a deadlock. Dropping a leaf's blocks
     * takes no lock of the CacheManager. */
-  private[graft] def semanticVerdicts[T](s: SparkSession, d: String)(
-      use: DataFrame => T): T = {
-    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def leaf(df: DataFrame): DataFrame = { val l = df.localCheckpoint(); held += l; l }
-    try {
-      // all CLUSTERING geometry and the pairwise PREFILTER run on
-      // codegen'd dot_d over the float mirror (the interpreted
-      // zip_with form measured 8.0 s at sf0.1; this form 2 s)
-      val cvf = textBasis(s, d).vecs
-      val nDocs = cvf.count()
-      val targetCell = 160L
-      val kCoarse = math.max(1, math.round(
-        math.sqrt(nDocs.toDouble / targetCell)).toInt)
-      val rounds = 2
-      // PORTABLE GEOMETRY (round 10 — upgrades this query from
-      // rows-only to DuckDB-oracled, the q_similarity_ivf recipe):
-      //  - ranks are md5-derived (hv60) instead of xxhash64, which has
-      //    no DuckDB twin;
-      //  - the per-doc |vf|² term is dropped from the assignment
-      //    distance (constant under argmin — order and ties preserved)
-      //    so the expression is exactly mirrorable;
-      //  - centroid components are floor(sum/count) of the float
-      //    mirror's exact-integer values (sums < 2^53 stay exact;
-      //    count bounds keep the double division away from the floor
-      //    boundary), then one float rounding — every step engine-
-      //    identical, unlike the decimal avg it replaces (DuckDB's
-      //    avg(DECIMAL) returns DOUBLE, the one true portability
-      //    wall of the old form).
-      // dot_d's left-to-right double accumulation ≡ DuckDB's
-      // list_inner_product, so even the rounding of large float dots
-      // is identical in both engines.
-      val hRank =
-        conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
-          .cast("bigint")
-      def sqDist = GraftFunctions.dot_d(col("cvec"), col("cvec")) -
-        lit(2.0) * GraftFunctions.dot_d(col("vf"), col("cvec"))
-      def assignOf(docsV: DataFrame, cents: DataFrame): DataFrame =
-        docsV.crossJoin(broadcast(cents))
-          .groupBy(col("doc_id"))
-          .agg(min(struct(sqDist.as("dist"), col("cid"))).as("m"))
-          .select(col("doc_id"), col("m.cid").as("cid"))
-      // quantizer FIT on a bounded hash-sample (16 Ki docs): Lloyd
-      // rounds cost O(sample·k_c), never O(n·k).
-      // (when the corpus already fits the bound, the hash-rank sort
-      // would select everything — skip it and read the cvf leaf)
-      val fit =
-        if (nDocs <= 16384) cvf.select(col("doc_id"), col("vf"), col("n2f"))
-        else leaf(cvf.orderBy(hRank, col("doc_id"))
-          .limit(16384)
-          .select(col("doc_id"), col("vf"), col("n2f")))
-      var cents = fit.orderBy(hRank, col("doc_id"))
-        .limit(kCoarse)
-        .select(col("doc_id").as("cid"), col("vf").as("cvec"))
-      // centroid mean as ONE groupBy: count + 64 exact double sums,
-      // then the portable floor division (see the geometry note above)
-      (1 to rounds).foreach { _ =>
-        cents = assignOf(fit, cents)
-          .join(fit, Seq("doc_id"))
-          .groupBy(col("cid"))
-          .agg(count(lit(1)).as("n"),
-            (0 until 64).map(i =>
-              sum(element_at(col("vf"), i + 1)).as(s"s$i")): _*)
-          .select(col("cid"), array((0 until 64).map(i =>
-            floor(col(s"s$i") / col("n")).cast("float")): _*).as("cvec"))
-      }
-      // coarse pass: constant-size broadcast, map-only. cents is
-      // localCheckpointed (k_c rows): the Lloyd rounds nest their plan
-      // trees recursively, and the hierarchy below references coarse
-      // several times — without the cut, the executed plan string grows
-      // multiplicatively (OOM'd explainString at sf0.001).
-      val coarse = assignOf(cvf, leaf(cents))
-        .withColumnRenamed("cid", "ccid")
-      val withC = leaf(coarse.join(cvf, Seq("doc_id"))) // seeds + fine assign
-      // fine seeds: the ⌈m/160⌉ hash-ranked member docs of each coarse
-      // cell (row_number + count over the cell partition — distributed,
-      // no driver pass)
-      val wRank = Window.partitionBy(col("ccid"))
-        .orderBy(hRank, col("doc_id"))
-      val fineSeeds = withC
-        .select(col("ccid"), col("doc_id"), col("vf"),
-          row_number().over(wRank).as("rn"),
-          count(lit(1)).over(Window.partitionBy(col("ccid"))).as("m"))
-        .filter(col("rn") <= expr(s"(m + ${targetCell - 1}) div $targetCell"))
-        .select(col("ccid"), col("doc_id").as("fcid"), col("vf").as("fvec"))
-      // fine pass: docs meet ONLY their own coarse cell's seeds — a
-      // coarse-cid equi-join, co-partitioned, nothing broadcast; the
-      // per-doc n2f term is constant under argmin so the distance
-      // drops it (ties still break by fine cell id)
-      val cells = leaf(withC.join(fineSeeds, Seq("ccid"))
+  private[graft] def semanticVerdicts(s: SparkSession, d: String): DataFrame = {
+    // all CLUSTERING geometry and the pairwise PREFILTER run on
+    // codegen'd dot_d over the float mirror (the interpreted
+    // zip_with form measured 8.0 s at sf0.1; this form 2 s)
+    val cvf = textBasis(s, d).vecs
+    val nDocs = cvf.count()
+    val targetCell = 160L
+    val kCoarse = math.max(1, math.round(
+      math.sqrt(nDocs.toDouble / targetCell)).toInt)
+    val rounds = 2
+    // PORTABLE GEOMETRY (round 10 — upgrades this query from
+    // rows-only to DuckDB-oracled, the q_similarity_ivf recipe):
+    //  - ranks are md5-derived (hv60) instead of xxhash64, which has
+    //    no DuckDB twin;
+    //  - the per-doc |vf|² term is dropped from the assignment
+    //    distance (constant under argmin — order and ties preserved)
+    //    so the expression is exactly mirrorable;
+    //  - centroid components are floor(sum/count) of the float
+    //    mirror's exact-integer values (sums < 2^53 stay exact;
+    //    count bounds keep the double division away from the floor
+    //    boundary), then one float rounding — every step engine-
+    //    identical, unlike the decimal avg it replaces (DuckDB's
+    //    avg(DECIMAL) returns DOUBLE, the one true portability
+    //    wall of the old form).
+    // dot_d's left-to-right double accumulation ≡ DuckDB's
+    // list_inner_product, so even the rounding of large float dots
+    // is identical in both engines.
+    val hRank =
+      conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
+        .cast("bigint")
+    def sqDist = GraftFunctions.dot_d(col("cvec"), col("cvec")) -
+      lit(2.0) * GraftFunctions.dot_d(col("vf"), col("cvec"))
+    def assignOf(docsV: DataFrame, cents: DataFrame): DataFrame =
+      docsV.crossJoin(broadcast(cents))
         .groupBy(col("doc_id"))
-        .agg(min(struct(
-          (GraftFunctions.dot_d(col("fvec"), col("fvec")) -
-            lit(2.0) * GraftFunctions.dot_d(col("vf"), col("fvec"))).as("dist"),
-          col("fcid"))).as("m"))
-        // a leaf, not a cache: three consumers below (both shadow-join
-        // sides + the output join) would otherwise each re-render the
-        // full two-level assignment tree in the plan
-        .select(col("doc_id"), col("m.fcid").as("cid")))
-      val sides = leaf(cells.join(cvf, Seq("doc_id")))
-      val aa = sides.select(col("cid"), col("doc_id").as("da"),
-        col("vf").as("vfa"), col("n2f").as("n2a"))
-      val bb = sides.select(col("cid").as("cid_b"), col("doc_id").as("db"),
-        col("vf").as("vfb"), col("n2f").as("n2b"))
-      // float cos ≥ 0.88 prefilter INSIDE the join, then a distinct()
-      // BARRIER before the exact gate — without it the optimizer
-      // collapses the gate's filter into this join's bound condition,
-      // and its three INTERPRETED ArrayAggregates lead the conjunction:
-      // every enumerated same-cell pair paid ~25 µs of interpreted
-      // 64-element folds (18 s of single-task CPU at sf0.1,
-      // jstack-confirmed) instead of one codegen'd float dot. With the
-      // barrier only prefilter survivors (true near-dups) reach the
-      // exact arithmetic — the q_dedup_text_lsh lesson re-learned for
-      // the merged-filter case.
-      val fdot = GraftFunctions.dot_d(col("vfa"), col("vfb"))
-      val cand = aa.join(bb, col("cid") === col("cid_b") &&
-          col("da") < col("db") && fdot > 0 &&
-          fdot * fdot >= lit(0.7744) * col("n2a") * col("n2b"))
-        .select(col("da"), col("db")).distinct()
-      val va = sides.select(col("doc_id").as("da"), col("cv").as("cva"))
-      val vb = sides.select(col("doc_id").as("db"), col("cv").as("cvb"))
-      // lower id shadows higher, exact ≥ 0.9
-      val shadowed = exactCosGate(cand.join(va, Seq("da")).join(vb, Seq("db")))
-        .select(col("db").as("doc_id")).distinct()
-      use(cells.join(shadowed.withColumn("shadowed", lit(true)), Seq("doc_id"), "left")
-        .select(col("doc_id"), col("cid"),
-          coalesce(!col("shadowed"), lit(true)).as("is_kept"))
-        .orderBy(col("doc_id")))
-    } finally dropLeaves(held)
+        .agg(min(struct(sqDist.as("dist"), col("cid"))).as("m"))
+        .select(col("doc_id"), col("m.cid").as("cid"))
+    // quantizer FIT on a bounded hash-sample (16 Ki docs): Lloyd
+    // rounds cost O(sample·k_c), never O(n·k).
+    // (when the corpus already fits the bound, the hash-rank sort
+    // would select everything — skip it and read the cvf leaf)
+    val fit =
+      if (nDocs <= 16384) cvf.select(col("doc_id"), col("vf"), col("n2f"))
+      else Leaves.land(cvf.orderBy(hRank, col("doc_id"))
+        .limit(16384)
+        .select(col("doc_id"), col("vf"), col("n2f")))
+    var cents = fit.orderBy(hRank, col("doc_id"))
+      .limit(kCoarse)
+      .select(col("doc_id").as("cid"), col("vf").as("cvec"))
+    // centroid mean as ONE groupBy: count + 64 exact double sums,
+    // then the portable floor division (see the geometry note above)
+    (1 to rounds).foreach { _ =>
+      cents = assignOf(fit, cents)
+        .join(fit, Seq("doc_id"))
+        .groupBy(col("cid"))
+        .agg(count(lit(1)).as("n"),
+          (0 until 64).map(i =>
+            sum(element_at(col("vf"), i + 1)).as(s"s$i")): _*)
+        .select(col("cid"), array((0 until 64).map(i =>
+          floor(col(s"s$i") / col("n")).cast("float")): _*).as("cvec"))
+    }
+    // coarse pass: constant-size broadcast, map-only. cents is
+    // localCheckpointed (k_c rows): the Lloyd rounds nest their plan
+    // trees recursively, and the hierarchy below references coarse
+    // several times — without the cut, the executed plan string grows
+    // multiplicatively (OOM'd explainString at sf0.001).
+    val coarse = assignOf(cvf, Leaves.land(cents))
+      .withColumnRenamed("cid", "ccid")
+    val withC = Leaves.land(coarse.join(cvf, Seq("doc_id"))) // seeds + fine assign
+    // fine seeds: the ⌈m/160⌉ hash-ranked member docs of each coarse
+    // cell (row_number + count over the cell partition — distributed,
+    // no driver pass)
+    val wRank = Window.partitionBy(col("ccid"))
+      .orderBy(hRank, col("doc_id"))
+    val fineSeeds = withC
+      .select(col("ccid"), col("doc_id"), col("vf"),
+        row_number().over(wRank).as("rn"),
+        count(lit(1)).over(Window.partitionBy(col("ccid"))).as("m"))
+      .filter(col("rn") <= expr(s"(m + ${targetCell - 1}) div $targetCell"))
+      .select(col("ccid"), col("doc_id").as("fcid"), col("vf").as("fvec"))
+    // fine pass: docs meet ONLY their own coarse cell's seeds — a
+    // coarse-cid equi-join, co-partitioned, nothing broadcast; the
+    // per-doc n2f term is constant under argmin so the distance
+    // drops it (ties still break by fine cell id)
+    val cells = Leaves.land(withC.join(fineSeeds, Seq("ccid"))
+      .groupBy(col("doc_id"))
+      .agg(min(struct(
+        (GraftFunctions.dot_d(col("fvec"), col("fvec")) -
+          lit(2.0) * GraftFunctions.dot_d(col("vf"), col("fvec"))).as("dist"),
+        col("fcid"))).as("m"))
+      // a leaf, not a cache: three consumers below (both shadow-join
+      // sides + the output join) would otherwise each re-render the
+      // full two-level assignment tree in the plan
+      .select(col("doc_id"), col("m.fcid").as("cid")))
+    val sides = Leaves.land(cells.join(cvf, Seq("doc_id")))
+    val aa = sides.select(col("cid"), col("doc_id").as("da"),
+      col("vf").as("vfa"), col("n2f").as("n2a"))
+    val bb = sides.select(col("cid").as("cid_b"), col("doc_id").as("db"),
+      col("vf").as("vfb"), col("n2f").as("n2b"))
+    // float cos ≥ 0.88 prefilter INSIDE the join, then a distinct()
+    // BARRIER before the exact gate — without it the optimizer
+    // collapses the gate's filter into this join's bound condition,
+    // and its three INTERPRETED ArrayAggregates lead the conjunction:
+    // every enumerated same-cell pair paid ~25 µs of interpreted
+    // 64-element folds (18 s of single-task CPU at sf0.1,
+    // jstack-confirmed) instead of one codegen'd float dot. With the
+    // barrier only prefilter survivors (true near-dups) reach the
+    // exact arithmetic — the q_dedup_text_lsh lesson re-learned for
+    // the merged-filter case.
+    val fdot = GraftFunctions.dot_d(col("vfa"), col("vfb"))
+    val cand = aa.join(bb, col("cid") === col("cid_b") &&
+        col("da") < col("db") && fdot > 0 &&
+        fdot * fdot >= lit(0.7744) * col("n2a") * col("n2b"))
+      .select(col("da"), col("db")).distinct()
+    val va = sides.select(col("doc_id").as("da"), col("cv").as("cva"))
+    val vb = sides.select(col("doc_id").as("db"), col("cv").as("cvb"))
+    // lower id shadows higher, exact ≥ 0.9
+    val shadowed = exactCosGate(cand.join(va, Seq("da")).join(vb, Seq("db")))
+      .select(col("db").as("doc_id")).distinct()
+    cells.join(shadowed.withColumn("shadowed", lit(true)), Seq("doc_id"), "left")
+      .select(col("doc_id"), col("cid"),
+        coalesce(!col("shadowed"), lit(true)).as("is_kept"))
+      .orderBy(col("doc_id"))
   }
 
   val queries: Map[String, Q] = Map(
@@ -1121,7 +1079,7 @@ object Retrieval extends QueryPack {
       val idT = Tables.t(s, d, "documents").schema("doc_id").dataType
       Deferred.df(s, s"dedup_text_lsh:$d", StructType(Seq(
         StructField("da", idT), StructField("db", idT),
-        StructField("cos", DoubleType))))(() => textLsh(s, d))
+        StructField("cos", DoubleType))))(() => Leaves.land(textLsh(s, d)))
     }),
 
     // SemDeDup-style SEMANTIC dedup (Abbas et al. 2023): quantize the
@@ -1173,7 +1131,7 @@ object Retrieval extends QueryPack {
     // second consumer reads its landed verdicts instead of re-fitting
     // the whole hierarchy (measured at sf0.1: the audit's private
     // re-derivation cost ~6 s). The body lands the sorted verdicts as
-    // one leaf and then drops its intermediate leaves, so the
+    // one leaf and its leaf scope drops the intermediate leaves, so the
     // memo's executed plan is a scan of n_docs landed rows, not the
     // clustering plan (the rule at engine.Memo). freshFitProp bypasses
     // the memo (each call re-fits the whole hierarchy): scale
@@ -1186,7 +1144,7 @@ object Retrieval extends QueryPack {
       Deferred.df(s, s"dedup_semantic:$d", StructType(Seq(
         StructField("doc_id", idT), StructField("cid", idT),
         StructField("is_kept", BooleanType, nullable = false)))) { () =>
-        semanticVerdicts(s, d)(textLeaf)
+        Leaves.land(semanticVerdicts(s, d))
       }
     }),
 
@@ -1473,7 +1431,7 @@ object Retrieval extends QueryPack {
         .agg(count(lit(1)).as("n_bigrams"),
           round(sum(col("nll")).cast("double") /
             count(lit(1)).cast("double"), 6).as("avg_nll"))
-      val thr = perdoc.cache().agg(
+      val thr = perdoc.cache().agg( // perdoc: thr + the crossJoin below
         (sum(col("avg_nll").cast("decimal(28,10)")).cast("double") /
           count(lit(1)).cast("double")).as("mean_nll"))
       perdoc.crossJoin(broadcast(thr))
@@ -1546,19 +1504,18 @@ object Retrieval extends QueryPack {
         StructField("merged", StringType),
         StructField("cnt", LongType)))
       Deferred.df(s, s"bpe_apply:$d", bpeSchema) { () =>
-        var vocab = docs(s, d)
+        var vocab = Leaves.land(docs(s, d)
           .select(explode(split(col("text"), " ")).as("w"))
           .filter(col("w") =!= "")
           .groupBy(col("w")).agg(count(lit(1)).as("wc"))
           .select(expr(
             "transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-            .as("syms"), col("wc"))
-          .localCheckpoint()
+            .as("syms"), col("wc")))
         var learned = s.createDataFrame(
           s.sparkContext.emptyRDD[org.apache.spark.sql.Row], bpeSchema)
         var r = 1
         while (r <= nMerges) {
-          // one-row argmax frame, localCheckpoint()ed: the checkpoint
+          // one-row argmax frame, landed as a leaf: the checkpoint
           // materializes the argmax EAGERLY as its own small job, so
           // the vocab rewrite's broadcast reads a finished one-row RDD
           // instead of computing the vocab-sized pair-count subtree
@@ -1571,7 +1528,7 @@ object Retrieval extends QueryPack {
           // no pair remains it is EMPTY: the crossJoin then empties
           // the vocab and every later round is a no-op — exhaustion
           // handled in-plan, no driver inspection needed.
-          val top = vocab.filter(size(col("syms")) >= 2)
+          val top = Leaves.land(vocab.filter(size(col("syms")) >= 2)
             .select(col("wc"), explode(expr(
               // element access is 0-based: pair i = (syms[i-1], syms[i])
               "transform(sequence(1, size(syms)-1), " +
@@ -1580,8 +1537,7 @@ object Retrieval extends QueryPack {
             .agg(sum(col("wc")).as("cnt"))
             .orderBy(desc("cnt"), col("s1"), col("s2")).limit(1)
             .select(lit(r).as("round"), col("s1"), col("s2"),
-              concat(col("s1"), col("s2")).as("merged"), col("cnt"))
-            .localCheckpoint()
+              concat(col("s1"), col("s2")).as("merged"), col("cnt")))
           learned = learned.union(top)
           // greedy left-to-right merge: fold the symbol array, fusing
           // [.., m1] + m2 → [.., m1m2]; a just-created merged symbol
@@ -1607,7 +1563,7 @@ object Retrieval extends QueryPack {
                     array(concat(col("m1"), col("m2")))))
                   .otherwise(concat(acc, array(x))))
                 .as("syms"), col("wc"))
-            if (r % 2 == 0) vocab = vocab.localCheckpoint()
+            if (r % 2 == 0) vocab = Leaves.land(vocab)
           }
           r += 1
         }

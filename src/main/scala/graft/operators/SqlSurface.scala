@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
-import graft.engine.{GraftSession, QueryPack, Tables}
+import graft.engine.{GraftSession, Leaves, QueryPack, Tables}
 import graft.plans.Deferred
 
 /** Pure-SQL surface (spark.sql over the registered catalog): correlated
@@ -84,8 +84,8 @@ object SqlSurface extends QueryPack {
         StructField("doc_id", idT), StructField("n_reachable", LongType),
         StructField("far_node", idT),
         StructField("max_depth", IntegerType)))) { () =>
-        Pipeline.queries("q_dedup_minhash")(s, d)
-          .select(col("da"), col("db")).localCheckpoint()
+        Leaves.land(Pipeline.queries("q_dedup_minhash")(s, d)
+          .select(col("da"), col("db")))
           .createOrReplaceTempView("mh_edges")
         s.sql(recursiveReach)
       }

@@ -28,7 +28,9 @@ import org.apache.spark.sql.types.StructType
   * (the lazy-bloom fix): that defers a scalar, this defers a relation.
   *
   * The body holder is shared by every copy EnsureRequirements/AQE makes
-  * of the exec node, so the body runs at most once per built query.
+  * of the exec node, so the body runs at most once per built query, in
+  * a leaf scope (graft.engine.Leaves) that drops on return what the
+  * body landed and its frame does not read.
   * Rows pass through positionally; the declared schema's dataTypes are
   * asserted against the built DataFrame at materialization, failing
   * fast on drift.
@@ -45,7 +47,7 @@ final class DeferredBody(val label: String,
   def inner: SparkPlan = {
     if (planned == null) synchronized {
       if (planned == null) {
-        val df = body()
+        val df = graft.engine.Leaves.scope(body())
         val got = df.schema
         // names too, not just positional dataTypes: a body whose
         // same-typed columns come back reordered (a_name/b_name swaps)

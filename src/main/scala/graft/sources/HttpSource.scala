@@ -3,7 +3,7 @@ package graft.sources
 import java.io.{BufferedInputStream, FileOutputStream}
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Acquisition connector: fetch a catalog of URLs to local files,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
+import graft.engine.Leaves
 import graft.engine.Tables.dec2
 
 /** Structured Streaming surface (SURVEY.md §2B streaming; reference
@@ -199,7 +200,8 @@ object StreamRunner {
     * processed — an at-least-once retry of an id does not double-count,
     * and a re-run on a drained checkpoint returns 0. `step` receives
     * each micro-batch frame (whose session is a clone of the caller's)
-    * and its id. */
+    * and its id, and runs in its own leaf scope (graft.engine.Leaves):
+    * every leaf a step lands is dropped when it returns. */
   def drain(stream: DataFrame, checkpoint: String)(
       step: (DataFrame, Long) => Unit): Int = {
     val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
@@ -207,7 +209,7 @@ object StreamRunner {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, id: Long) =>
         seen.add(id)
-        step(batch, id)
+        Leaves.scope(step(batch, id))
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
@@ -380,7 +382,7 @@ object StreamRunner {
     * scan runs ONLY on the replay path; the happy path pays one
     * row-per-doc anti-join against the count table (the re-ingest
     * guard below — ADVICE r15). The grams-and-counts pair itself reads
-    * one localCheckpoint'd frame, so the two appends can never
+    * one landed leaf, so the two appends can never
     * disagree. StreamingSpec pins stream ≡ sequential-batch-chain,
     * replay no-op, the half-commit heal, and the later-batch
     * re-ingest no-op. */
@@ -398,8 +400,8 @@ object StreamRunner {
     // runner refreshes the caller's session once the stream drains.
     val ss = newDocs.sparkSession
     val replay = new java.io.File(s"$outDir/micro_batch_id=$batchId").exists()
-    val g = graft.operators.Pipeline.wordGrams3(newDocs)
-      .select(col("doc_id").as("corpus_id"), col("g")).localCheckpoint()
+    val g = Leaves.land(graft.operators.Pipeline.wordGrams3(newDocs)
+      .select(col("doc_id").as("corpus_id"), col("g")))
     // the probe sees the index MINUS this batch's own ids: a replay
     // after a crashed absorb would otherwise find the batch's keepers
     // already in the index (self-pairs, intra-batch pairs the original
@@ -440,8 +442,8 @@ object StreamRunner {
         .select(col("corpus_id")).distinct()
       val landedG = Layout.readTable(ss, gT)
         .select(col("corpus_id")).distinct()
-      val orphan = landedG.join(counted, Seq("corpus_id"), "left_anti")
-        .join(keep, Seq("corpus_id"), "left_semi").localCheckpoint()
+      val orphan = Leaves.land(landedG.join(counted, Seq("corpus_id"), "left_anti")
+        .join(keep, Seq("corpus_id"), "left_semi"))
       if (orphan.limit(1).count() > 0)
         Layout.appendBucketed(
           Layout.readTable(ss, gT)
@@ -450,7 +452,7 @@ object StreamRunner {
           cT, "corpus_id", buckets)
       keep = keep.join(landedG, Seq("corpus_id"), "left_anti")
     }
-    val kept = keep.localCheckpoint()
+    val kept = Leaves.land(keep)
     Layout.appendBucketed(kept, gT, "g", buckets)
     Layout.appendBucketed(
       kept.groupBy(col("corpus_id")).agg(count(lit(1)).as("nc")),
@@ -628,7 +630,7 @@ object StreamRunner {
       buckets: Int, streamDir: String, outDir: String, ids: DataFrame,
       srcPath: String, idCol: String = "doc_id"): Unit = {
     import graft.engine.Layout
-    val e = ids.select(col(idCol).as("doc_id")).distinct().localCheckpoint()
+    val e = Leaves.land(ids.select(col(idCol).as("doc_id")).distinct())
     val eC = e.select(col("doc_id").as("corpus_id"))
     // stream files in trigger order — the file source's (mtime, path)
     // ordering, under which the loop assigned batch id N to file N
@@ -640,9 +642,9 @@ object StreamRunner {
       spark.read.parquet(f.getAbsolutePath)
     // 1a. earliest batch that absorbed an erased id (erasure requests
     // are request-sized; the per-file membership checks are limit-1)
-    val absorbedErased = Layout.readTable(spark, cT)
+    val absorbedErased = Leaves.land(Layout.readTable(spark, cT)
       .join(eC, Seq("corpus_id"), "left_semi")
-      .select(col("corpus_id")).localCheckpoint()
+      .select(col("corpus_id")))
     val aAfter = files.zipWithIndex.find { case (f, _) =>
       fileDocs(f).select(col("doc_id").as("corpus_id"))
         .join(absorbedErased, Seq("corpus_id"), "left_semi")
@@ -673,11 +675,11 @@ object StreamRunner {
         .reduce(_ unionByName _)
       val rolled0 = Layout.readPurged(spark, cT, "corpus_id")
         .join(arrivedReplay, Seq("corpus_id"), "left_semi")
-      val rolled = arrivedBefore.fold(rolled0)(b =>
+      val rolled = Leaves.land(arrivedBefore.fold(rolled0)(b =>
           rolled0.join(b, Seq("corpus_id"), "left_anti"))
-        .select(col("corpus_id")).distinct().localCheckpoint()
-      Layout.tombstone(spark, gT, rolled, "corpus_id")
-      Layout.tombstone(spark, cT, rolled, "corpus_id")
+        .select(col("corpus_id")).distinct())
+      Layout.tombstone(gT, rolled, "corpus_id")
+      Layout.tombstone(cT, rolled, "corpus_id")
       Layout.compactBucketed(spark, gT, "g", buckets,
         foldTombstonesOn = Some("corpus_id"))
       Layout.compactBucketed(spark, cT, "corpus_id", buckets,

@@ -335,10 +335,10 @@ class LayoutSpec extends SparkTestBase {
     val pre = base.filter(col("o_orderkey") % 10 === 1).select(col("o_orderkey"))
     val lateIds = base.filter(col("o_orderkey") % 10 === 2).select(col("o_orderkey"))
     assert(pre.count() > 0 && lateIds.count() > 0)
-    Layout.tombstone(spark, "orders_ltomb", pre, "o_orderkey")
+    Layout.tombstone("orders_ltomb", pre, "o_orderkey")
     Layout.compactBucketed(spark, "orders_ltomb", "o_custkey", 4,
       foldTombstonesOn = Some("o_orderkey"),
-      onSwapped = () => Layout.tombstone(spark, "orders_ltomb", lateIds,
+      onSwapped = () => Layout.tombstone("orders_ltomb", lateIds,
         "o_orderkey"))
     // snapshot ids physically folded away
     assert(Layout.readTable(spark, "orders_ltomb")
@@ -367,13 +367,13 @@ class LayoutSpec extends SparkTestBase {
     Layout.writeBucketed(base, "orders_latetomb", "o_orderkey", 4)
     val early = base.filter(col("o_orderkey") % 5 === 0).select("o_orderkey")
     val lateIds = base.filter(col("o_orderkey") % 5 === 1).select("o_orderkey")
-    Layout.tombstone(spark, "orders_latetomb", early, "o_orderkey")
+    Layout.tombstone("orders_latetomb", early, "o_orderkey")
     var fired = false
     Layout.compactBucketed(spark, "orders_latetomb", "o_orderkey", 4,
       foldTombstonesOn = Some("o_orderkey"), onStaged = () => {
         if (!fired) {
           fired = true
-          Layout.tombstone(spark, "orders_latetomb", lateIds, "o_orderkey")
+          Layout.tombstone("orders_latetomb", lateIds, "o_orderkey")
         }
       })
     assert(fired)
@@ -411,7 +411,7 @@ class LayoutSpec extends SparkTestBase {
     val base = Tables.t(spark, sf, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
     Layout.writeBucketed(base, "orders_tombgate", "o_orderkey", 4)
-    Layout.tombstone(spark, "orders_tombgate",
+    Layout.tombstone("orders_tombgate",
       base.filter(col("o_orderkey") % 3 === 0).select("o_orderkey"),
       "o_orderkey")
     val bc = Layout.readPurged(spark, "orders_tombgate", "o_orderkey")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.{ReusedSubqueryExec, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
   * codegen. These guard against plan regressions that small-SF row
   * counts would never catch. */
 class PlanSpec extends SparkTestBase {
+  import SparkTestBase.allNodes
 
   private def plan(name: String): String =
     q(name).queryExecution.executedPlan.toString
@@ -22,27 +23,12 @@ class PlanSpec extends SparkTestBase {
 
   /** `f` of the executed plan of q_dedup_semantic's own frame. The
     * query lands that frame as a leaf, so the clustering plan is
-    * visible only here, while the body's intermediates are alive. */
-  private def semanticPlan[T](f: SparkPlan => T): T =
-    graft.operators.Retrieval.semanticVerdicts(spark, sf) { v =>
-      v.collect()
-      f(v.queryExecution.executedPlan)
-    }
-
-  /** Every node reachable from an executed plan: children, subqueries,
-    * AQE stages, reused exchanges, cached plans and built Deferred
-    * inner plans. */
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val next: Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case st: QueryStageExec => Seq(st.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case r: ReusedSubqueryExec => Seq(r.child)
-      case i: InMemoryTableScanExec => Seq(i.relation.cachedPlan)
-      case d: graft.plans.DeferredExec => d.body.maybeInner.toSeq
-      case _ => p.children ++ p.subqueries
-    }
-    p +: next.flatMap(allNodes)
+    * visible only here; the intermediates land in this helper's leaf
+    * scope, which drops them when `f` has run. */
+  private def semanticPlan[T](f: SparkPlan => T): T = graft.engine.Leaves.scope {
+    val v = graft.operators.Retrieval.semanticVerdicts(spark, sf)
+    v.collect()
+    f(v.queryExecution.executedPlan)
   }
 
   /** Plan after execution — AQE finalizes stages (codegen visible). */
@@ -588,7 +574,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("q_dedup_text_lsh persists one leaf beyond its basis") {
-    // `proj` is dropped once `keyed` has landed; `keyed` backs the result
+    // the body lands its result; its scope drops `proj` and `keyed`
     val sc = spark.sparkContext
     val s = spark.newSession()
     graft.operators.Retrieval.textBasis(s, sf)
@@ -598,7 +584,7 @@ class PlanSpec extends SparkTestBase {
     val added = sc.getPersistentRDDs -- before
     assert(added.size == 1, s"q_dedup_text_lsh kept ${added.size} persisted " +
       s"RDDs beyond its basis: ${added.values.mkString(", ")}")
-    assert(lsh.columns.nonEmpty) // keeps the result, and so `keyed`, reachable
+    assert(lsh.columns.nonEmpty) // keeps the result leaf reachable
   }
 
   test("q_audit_semantic adds no entry to the shared CacheManager") {
@@ -612,33 +598,27 @@ class PlanSpec extends SparkTestBase {
     assert(counts.map(_.toString).toSeq == Seq("[0,0]"), counts.mkString)
   }
 
-  test("fresh-fit text leaves outlive clearCache() until releaseFreshLeaves drops them") {
-    // ScaleStress and LshOverCap rebuild the basis and LSH leaves on
-    // every run under freshFitProp; releasing them between runs must
-    // free their storage and leave the next run's result unchanged
+  test("a fresh-fit q_dedup_text_lsh run persists its result and no basis") {
+    // ScaleStress and LshOverCap rebuild the basis on every run under
+    // freshFitProp: the fresh basis lands in the query's Deferred scope,
+    // which drops it with `proj` and `keyed` and keeps only the landed
+    // result; the result matches the memoized basis's
     import graft.operators.Retrieval
     val sc = spark.sparkContext
-    def leafBytes: Long = sc.getRDDStorageInfo
-      .filter(_.name == Retrieval.freshLeafName)
-      .map(i => i.memSize + i.diskSize).sum
-    def pairs = q("q_dedup_text_lsh").collect().map(_.toString).sorted
-    val memoized = pairs // builds the session-memoized basis first
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted
+    val memoized = pairs(q("q_dedup_text_lsh")) // builds the session-memoized basis first
     System.setProperty(Retrieval.freshFitProp, "true")
     try {
-      val first = pairs
-      assert(first.sameElements(memoized), "fresh basis diverged")
-      spark.catalog.clearCache()
-      assert(leafBytes > 0, "no fresh leaf in block storage")
-      Retrieval.releaseFreshLeaves(spark)
-      assert(leafBytes == 0 && !sc.getPersistentRDDs.values
-        .exists(_.name == Retrieval.freshLeafName), "a fresh leaf survived")
-      assert(pairs.sameElements(first), "rebuild after release diverged")
-    } finally {
-      Retrieval.releaseFreshLeaves(spark)
-      System.clearProperty(Retrieval.freshFitProp)
-    }
+      val before = sc.getPersistentRDDs.keySet
+      val lsh = q("q_dedup_text_lsh")
+      assert(pairs(lsh).sameElements(memoized), "fresh basis diverged")
+      val added = sc.getPersistentRDDs -- before
+      assert(added.size == 1, s"a fresh-fit run kept ${added.size} persisted " +
+        s"RDDs: ${added.values.mkString(", ")}")
+      assert(lsh.columns.nonEmpty) // keeps the result leaf reachable
+    } finally System.clearProperty(Retrieval.freshFitProp)
     // the memoized basis is no fresh leaf: its blocks are still there
-    assert(pairs.sameElements(memoized), "memoized basis lost")
+    assert(pairs(q("q_dedup_text_lsh")).sameElements(memoized), "memoized basis lost")
   }
 
   test("q_recursive_reach: executes via the recursive-CTE loop over real edges") {

@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{ReusedSubqueryExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one per suite via lazy val).
@@ -32,6 +36,22 @@ object SparkTestBase {
     .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Every node reachable from an executed plan: children, subqueries,
+    * AQE stages, reused exchanges, cached plans and built Deferred
+    * inner plans. */
+  def allNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val next: Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case st: QueryStageExec => Seq(st.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case r: ReusedSubqueryExec => Seq(r.child)
+      case i: InMemoryTableScanExec => Seq(i.relation.cachedPlan)
+      case d: graft.plans.DeferredExec => d.body.maybeInner.toSeq
+      case _ => p.children ++ p.subqueries
+    }
+    p +: next.flatMap(allNodes)
+  }
 }
 
 trait SparkTestBase extends AnyFunSuite {

@@ -133,7 +133,7 @@ class StandingIndexSpec extends SparkTestBase {
       "Layout.compactBucketed(spark, t.toString, \"g\", 8); val after = probe()"))
     plant(Path.of("streaming", "StreamRunner.scala"), _.replace(
       "graft.engine.Layout.purgeLanded(",
-      "Layout.tombstone(spark, gT, ids, idCol); graft.engine.Layout.purgeLanded("))
+      "Layout.tombstone(gT, ids, idCol); graft.engine.Layout.purgeLanded("))
     val planted = seamBypasses(copy)
     assert(planted.size == 3 && Seq("ivfIndexAged", "in lifecycle",
       "in purgeThrough").forall(h => planted.exists(_.contains(h))),

@@ -716,8 +716,8 @@ class StreamingSpec extends SparkTestBase {
       .filter(col("corpus_id") === pId).count()
     assert(rawCnt == 1, "the planted doc was not absorbed")
     val ids = spark.range(1).select(lit(pId).as("corpus_id"))
-    Layout.tombstone(spark, gT, ids, "corpus_id")
-    Layout.tombstone(spark, cT, ids, "corpus_id")
+    Layout.tombstone(gT, ids, "corpus_id")
+    Layout.tombstone(cT, ids, "corpus_id")
     assert(purgedCnt == 0)
     // re-arrival BEFORE the fold: barred — nothing new lands
     StreamRunner.probeAbsorbStep(spark, gT, cT, bk, p, s"$work/out", 1L, src)
