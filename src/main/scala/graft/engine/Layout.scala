@@ -289,8 +289,9 @@ object Layout {
       val missed = spark.table(old).inputFiles
         .filterNot(f => names.contains(base(f)))
       if (missed.nonEmpty)
-        appendBucketed(spark.read.parquet(missed.toIndexedSeq: _*)
-          .localCheckpoint(), table, key, buckets)
+        appendBucketed(spark.read.schema(spark.table(table).schema)
+          .parquet(missed.toIndexedSeq: _*).localCheckpoint(),
+          table, key, buckets)
     }
     // crash recovery, cases in swap order: died between the two
     // RENAMEs -> live name missing, data intact under _old: roll back
@@ -341,7 +342,8 @@ object Layout {
         val liveFiles = spark.table(table).inputFiles.toSet
         val folded = foldTombstonesOn match {
           case Some(idc) if tombSnap.nonEmpty =>
-            val ids = spark.read.parquet(tombSnap.toIndexedSeq: _*)
+            val ids = spark.read.schema(spark.table(tombT).schema)
+              .parquet(tombSnap.toIndexedSeq: _*)
               .select(col(idc)).distinct()
             val bytes = tombSnap.map(f =>
               new java.io.File(new java.net.URI(f)).length()).sum

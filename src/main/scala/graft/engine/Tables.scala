@@ -1,7 +1,12 @@
 package graft.engine
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.functions._
 
 /** Table loaders + shared numeric-determinism helpers.
@@ -30,18 +35,49 @@ object Tables {
   def dirDigest(dir: String): String =
     md5hex(new java.io.File(dir).getAbsolutePath)
 
-  // Memoized per (session, dir, name) through engine.Memo:
-  // spark.read.parquet runs a 1-task file-listing/footer job per call,
-  // which both violates the lazy-build contract (LazyBuildSpec —
-  // building a query must run ZERO jobs) and re-pays schema inference
-  // on every plan build. The entries hold analyzed base relations only
-  // (no data) and die with the SparkContext; Memo's scaladoc carries
-  // the rewritten-dir staleness caveat.
+  // Memoized per (session, dir, name) through engine.Memo. A single
+  // parquet file opens with the schema read from its footer in the
+  // calling JVM (footerSchema), so opening a table launches no Spark
+  // job in any session, its first touch included: schema inference
+  // would run a 1-task footer job per fresh session, which both
+  // violates the lazy-build contract (LazyBuildSpec — building a query
+  // must run ZERO jobs) and re-pays a job on every daily re-open of
+  // the same sources. A directory (a Spark-written multi-file table) keeps
+  // spark.read.parquet, whose part-file and summary-file rules apply.
+  // The entries hold analyzed base relations only (no data) and die
+  // with the SparkContext; Memo's scaladoc carries the rewritten-dir
+  // staleness caveat.
   private def raw(spark: SparkSession, dir: String, name: String): DataFrame =
     Memo.session(spark, "Tables.raw", dir, name) {
+      // set before footerSchema builds its converter: the NANOS
+      // generation of events.ts surfaces as LongType (see t())
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.read.parquet(s"$dir/$name.parquet")
+      val path = s"$dir/$name.parquet"
+      footerSchema(spark, path) match {
+        case Some(schema) => spark.read.schema(schema).parquet(path)
+        case None => spark.read.parquet(path)
+      }
     }
+
+  /** Spark schema of the single parquet file at `path`, read from its
+    * footer in the calling JVM with the converter Spark's inference task
+    * runs (same session conf, so the same answer as
+    * `spark.read.parquet(path).schema` without the job). None for a
+    * directory or a missing path: the caller falls back to
+    * spark.read.parquet, its listing rules and its errors. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val hconf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val status =
+      try Some(p.getFileSystem(hconf).getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    status.filter(_.isFile).map { st =>
+      val meta = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(st, hconf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, meta),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
+  }
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     Memo.session(spark, "Tables.t", dir, name) {
@@ -63,7 +99,7 @@ object Tables {
     * callers (the streaming reader, the drift guard spec) adapt their
     * conversion to the file generation actually on disk instead of
     * hard-coding one. */
-  def rawSchema(spark: SparkSession, dir: String, name: String): org.apache.spark.sql.types.StructType =
+  def rawSchema(spark: SparkSession, dir: String, name: String): StructType =
     raw(spark, dir, name).schema
 
   /** Spread a small-file scan across the cluster before CPU-heavy

@@ -414,11 +414,15 @@ object StreamRunner {
     def selfExcluded(t: String): DataFrame =
       Layout.readPurged(ss, t, "corpus_id")
         .join(Layout.probeSide(bIds, srcPath), Seq("corpus_id"), "left_anti")
-    writeVerdictBatch(graft.operators.Pipeline.gramVerdicts(
+    val verdicts = graft.operators.Pipeline.gramVerdicts(
       selfExcluded(gT), selfExcluded(cT),
-      g.select(col("corpus_id").as("batch_id"), col("g")), srcPath),
-      outDir, batchId)
-    val dupIds = ss.read.parquet(s"$outDir/micro_batch_id=$batchId")
+      g.select(col("corpus_id").as("batch_id"), col("g")), srcPath)
+    writeVerdictBatch(verdicts, outDir, batchId)
+    // the keep decision reads the LANDED verdicts, with the schema the
+    // write just used: a schema-less read would run an inference job
+    // per micro-batch
+    val dupIds = ss.read.schema(verdicts.schema)
+      .parquet(s"$outDir/micro_batch_id=$batchId")
       .select(col("batch_id").as("corpus_id")).distinct()
     var keep = g.join(dupIds, Seq("corpus_id"), "left_anti")
     // Re-ingest guard (ADVICE r15): a doc_id arriving AGAIN in a LATER

@@ -19,17 +19,17 @@ class LazyBuildSpec extends SparkTestBase {
       override def onJobStart(jobStart: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    // session-level warmup OUTSIDE the counted window: the FIRST touch
-    // of each parquet table runs a 1-task schema-inference job, then
-    // memoizes (Tables.t). The contract under test is per-QUERY-build
-    // cost, not per-process init.
-    graft.engine.Tables.names.foreach(n => graft.engine.Tables.t(spark, sf, n))
+    // no warm-up: each query builds in a new session that no Tables.t
+    // call has touched, so the count includes opening every table the
+    // query reads (a schema-less parquet read would run a 1-task
+    // inference job there — Tables.raw reads the footer without a job)
     spark.sparkContext.addSparkListener(listener)
     try {
       val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { n =>
+        val fresh = spark.newSession()
         org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
         val before = jobs.get()
-        SparkEntry.queries(n)(spark, sf) // build only — never an action
+        SparkEntry.queries(n)(fresh, sf) // build only — never an action
         org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
         val ran = jobs.get() - before
         if (ran > 0) Some(s"$n ran $ran Spark job(s) at build time") else None

@@ -59,6 +59,34 @@ class SchemaContractSpec extends SparkTestBase {
     }
   }
 
+  // Tables.raw reads a single file's schema from its footer without a
+  // job; it must be the schema Spark's inference job would resolve,
+  // under the same session conf (rawSchema sets nanosAsLong first)
+  for (name <- Tables.names) {
+    test(s"table `$name` footer schema equals the inferred schema") {
+      for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
+        val path = s"$dir/$name.parquet"
+        val footer = Tables.rawSchema(spark, dir, name)
+        assert(Tables.footerSchema(spark, path).contains(footer))
+        assert(footer == spark.read.parquet(path).schema, s"$path")
+      }
+    }
+  }
+
+  test("a Spark-written directory table falls back to inference, same schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-dirtable").toString
+    try {
+      Tables.t(spark, sf, "nation").repartition(2)
+        .write.parquet(s"$dir/nation.parquet")
+      val path = s"$dir/nation.parquet"
+      assert(Tables.footerSchema(spark, path).isEmpty)
+      assert(Tables.rawSchema(spark, dir, "nation") ==
+        spark.read.parquet(path).schema)
+      assert(Tables.t(spark, dir, "nation").count() ==
+        Tables.t(spark, sf, "nation").count())
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("events.props `k` is always a JSON integer, corpus-wide (ADVICE r9)") {
     // q_json_funcs/q_json_corrupt parse props with `k int` via from_json;
     // their DuckDB oracles extract k as text and CAST. The two engines
