@@ -10,7 +10,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * checkpoints a frame and records it in the innermost [[scope]] open
   * on this thread; outside any scope the caller owns it. Every
   * `plans.Deferred` body, [[Memo]] build and `StreamRunner.drain`
-  * micro-batch step runs in a scope, so query code only calls [[land]].
+  * micro-batch step runs in a scope, so query code only calls [[land]]
+  * and, in a loop, [[advance]].
   *
   * When a scope's body returns, the scope drops every leaf landed
   * directly in it that the returned value does not read: whose
@@ -42,6 +43,18 @@ object Leaves {
     open.get.headOption.foreach(_ ++= leaf.queryExecution.logical.collect {
       case r: LogicalRDD => r.rdd
     })
+    leaf
+  }
+
+  /** [[land]]s `df`, then drops `prev` if it is a leaf: a loop's round
+    * i-1 once round i has landed and nothing live reads it, so a loop
+    * holds at most two round leaves. */
+  def advance(prev: DataFrame, df: DataFrame): DataFrame = {
+    val leaf = land(df)
+    prev.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist()
+      case _ =>
+    }
     leaf
   }
 

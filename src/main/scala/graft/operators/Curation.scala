@@ -339,7 +339,7 @@ object Curation extends QueryPack {
           // bit, and the 5th round rides the output plan with no cut
           // at all: 5 rounds now cost 2 checkpoints instead of 5.
           (1 to 2).foreach { _ =>
-            pr = Leaves.land(round(round(pr)))
+            pr = Leaves.advance(pr, round(round(pr)))
           }
           pr = round(pr)
           pr.select(col("node").as("doc_id"),

@@ -805,7 +805,7 @@ object Pipeline extends QueryPack {
     * downstream, invisible at production scale where no oracle runs. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // a leaf per round truncates lineage (else planning time grows with
-    // the rounds); the caller's leaf scope drops all rounds but the last
+    // the rounds); each round's leaf drops the one before it
     val edges = Leaves.land(pairs.select(col("da").as("a"), col("db").as("b"))
       .unionByName(pairs.select(col("db").as("a"), col("da").as("b"))))
     var labels = Leaves.land(edges.select(col("a").as("node")).distinct()
@@ -842,14 +842,14 @@ object Pipeline extends QueryPack {
         // own (never larger) label — two hops per round, compounding.
         // The checkpoint stops the self-join from computing the
         // neighbor-min subtree twice.
-        val stepped = Leaves.land(next)
-        next = stepped.join(
-          stepped.select(col("node").as("ln"), col("label").as("llabel")),
+        labels = Leaves.advance(labels, next)
+        next = labels.join(
+          labels.select(col("node").as("ln"), col("label").as("llabel")),
           col("label") === col("ln"), "left")
           .select(col("node"), least(col("label"),
             coalesce(col("llabel"), col("label"))).as("label"))
       }
-      labels = Leaves.land(next)
+      labels = Leaves.advance(labels, next)
       val s = labelSum(labels)
       converged = s == prevSum
       prevSum = s
@@ -901,12 +901,12 @@ object Pipeline extends QueryPack {
       val sym = edges.select(col("hi").as("u"), col("lo").as("v"))
         .unionByName(edges.select(col("lo").as("u"), col("hi").as("v")))
       val lmins = sym.groupBy(col("u")).agg(least(min(col("v")), col("u")).as("m"))
-      val ls = Leaves.land(sym.join(lmins, "u").filter(col("v") > col("u"))
+      val ls = Leaves.advance(edges, sym.join(lmins, "u").filter(col("v") > col("u"))
         .select(col("v").as("hi"), col("m").as("lo")).distinct())
       // small-star on the (big → small)-oriented output: m(u) = min of
       // u's smaller neighbors; connect u AND each smaller neighbor to m
       val smins = ls.groupBy(col("hi")).agg(min(col("lo")).as("m"))
-      val ss = Leaves.land(ls.join(smins, "hi")
+      val ss = Leaves.advance(ls, ls.join(smins, "hi")
         .select(col("lo").as("v"), col("m"))
         .unionByName(smins.select(col("hi").as("v"), col("m")))
         .filter(col("v") =!= col("m"))

@@ -1,12 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.engine.{Leaves, Memo, QueryPack, Tables}
-import graft.functions.GraftFunctions
+import graft.functions.{BpeLearner, GraftFunctions}
 import graft.plans.Deferred
 
 /** Round-4 retrieval & corpus-statistics operators: TF-IDF, BM25
@@ -1444,18 +1444,16 @@ object Retrieval extends QueryPack {
     // pairs within words across the corpus — the argmax pair is the
     // first merge a byte-pair tokenizer would learn; the top-30 list
     // is the merge frontier. Pure explode → groupBy on a bounded key
-    // space (alphabet²) with map-side combine; at 100 TB each
-    // subsequent merge round is the same shape over the rewritten
-    // symbol stream.
+    // space (alphabet²) with map-side combine; q_bpe_apply learns the
+    // later rounds from the same word-frequency dictionary.
     "q_bpe_pair_counts" -> ((s, d) => {
       // The corpus is touched ONCE for the word-frequency dict
       // (map-side combinable count); the pair explode then runs over
       // DISTINCT words weighted by wc — vocab-sized, not corpus-sized
-      // (round 9: ~25M token occurrences vs ~600k distinct words at
-      // sf1 — the q_bpe_apply round-0 shape applied here too; 10.9 s
-      // in two full-run sf1 benches → 0.86 s even in subset mode,
-      // which reads 1.5–2× HIGH). Σ wc over a word's pairs equals
-      // the per-occurrence count exactly, so the oracle is unchanged.
+      // (~25M token occurrences vs ~600k distinct words at sf1; the
+      // dictionary q_bpe_apply's learner reads). Σ wc over a word's
+      // pairs equals the per-occurrence count exactly, so the oracle
+      // is unchanged.
       docs(s, d)
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) >= 2)
@@ -1472,103 +1470,23 @@ object Retrieval extends QueryPack {
     }),
 
     // BPE vocabulary induction, rounds 1..10 (Sennrich et al. 2016):
-    // the full iterative learner — count weighted adjacent symbol
-    // pairs over the WORD-FREQUENCY dictionary, take the argmax
-    // (ties: count desc, then symbols — deterministic), rewrite every
-    // word's symbol sequence by the greedy left-to-right merge, and
-    // repeat. Output is the learned merge table. This is the shape
-    // production BPE trainers actually run: the corpus is touched
-    // ONCE (word-count aggregation, map-side combinable); every round
-    // after that is vocab-sized — pair counts, argmax, and the
-    // rewrite all scale with distinct words, not corpus bytes.
-    // Hash-oracled since round 9 (bpeApplySql mirrors all 10 rounds
-    // in DuckDB via the |-sentinel string encoding); the driver-side
-    // replay spec and the q_bpe_pair_counts round-1 pin stand as
-    // independent ground truths.
-    // The per-round argmax stays IN the plan (VERDICT r6 #7 / r7 #8):
-    // it is a one-row localCheckpointed frame, broadcast-joined into
-    // the rewrite (the fold lambda references the joined m1/m2
-    // columns, not driver literals) and unioned into the merge table —
-    // the driver orchestrates rounds (inherent to BPE) but never
-    // receives the merge values. Per-round state is localCheckpointed
-    // (10 rounds of nested higher-order rewrites would otherwise stack
-    // lineage). Iterative argmax cannot be one lazy plan →
-    // plans.Deferred; rows-only (the spec replays an independent
-    // driver-side BPE reference implementation and the round-1 argmax
-    // must equal q_bpe_pair_counts' top row).
+    // the learned merge table. The corpus is read once, into the
+    // word-frequency dictionary (a map-side combined groupBy); every
+    // round after that is vocab-sized, so one task learns all ten over
+    // the dictionary (functions.BpeLearner): a lazy plan of two jobs.
+    // Hash-oracled (bpeApplySql); RetrievalSpec replays an independent
+    // reference, and round 1 equals q_bpe_pair_counts' top row.
     "q_bpe_apply" -> ((s, d) => {
-      val nMerges = 10
-      val bpeSchema = StructType(Seq(
-        StructField("round", IntegerType, nullable = false),
-        StructField("s1", StringType), StructField("s2", StringType),
-        StructField("merged", StringType),
-        StructField("cnt", LongType)))
-      Deferred.df(s, s"bpe_apply:$d", bpeSchema) { () =>
-        var vocab = Leaves.land(docs(s, d)
-          .select(explode(split(col("text"), " ")).as("w"))
-          .filter(col("w") =!= "")
-          .groupBy(col("w")).agg(count(lit(1)).as("wc"))
-          .select(expr(
-            "transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-            .as("syms"), col("wc")))
-        var learned = s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row], bpeSchema)
-        var r = 1
-        while (r <= nMerges) {
-          // one-row argmax frame, landed as a leaf: the checkpoint
-          // materializes the argmax EAGERLY as its own small job, so
-          // the vocab rewrite's broadcast reads a finished one-row RDD
-          // instead of computing the vocab-sized pair-count subtree
-          // inside its own job. Measured round-9 on the current
-          // testdata (3-pass min/med at sf0.1, AbBpe same-mode A/B):
-          // ckpt 1.61/1.62 s vs cache() 2.64/3.09 s for the full
-          // 10-round run — the r8 cache() choice was the regression
-          // VERDICT r8 #5 flagged. Both consumers (broadcast join,
-          // final merge-table union) read the checkpointed rows. When
-          // no pair remains it is EMPTY: the crossJoin then empties
-          // the vocab and every later round is a no-op — exhaustion
-          // handled in-plan, no driver inspection needed.
-          val top = Leaves.land(vocab.filter(size(col("syms")) >= 2)
-            .select(col("wc"), explode(expr(
-              // element access is 0-based: pair i = (syms[i-1], syms[i])
-              "transform(sequence(1, size(syms)-1), " +
-                "i -> struct(syms[i-1] as s1, syms[i] as s2))")).as("p"))
-            .groupBy(col("p.s1").as("s1"), col("p.s2").as("s2"))
-            .agg(sum(col("wc")).as("cnt"))
-            .orderBy(desc("cnt"), col("s1"), col("s2")).limit(1)
-            .select(lit(r).as("round"), col("s1"), col("s2"),
-              concat(col("s1"), col("s2")).as("merged"), col("cnt")))
-          learned = learned.union(top)
-          // greedy left-to-right merge: fold the symbol array, fusing
-          // [.., m1] + m2 → [.., m1m2]; a just-created merged symbol
-          // never re-fuses with a following m2 unless it literally
-          // equals m1 — exactly the non-overlapping BPE apply rule.
-          // Round-12 dispatch cuts (VERDICT r11 #7, the +21% multi-JVM
-          // seq delta was round-trip latency, not compute): the FINAL
-          // round's rewrite feeds nothing (learned is the output) and
-          // is skipped outright; odd rounds stay LAZY — the rewrite is
-          // a pure broadcast-join projection with no shuffle, so the
-          // next round's argmax fuses it into its own scan and only
-          // every second round pays a blocking checkpoint (lineage
-          // depth stays ≤ 2 nested folds between cuts).
-          if (r < nMerges) {
-            vocab = vocab
-              .crossJoin(broadcast(
-                top.select(col("s1").as("m1"), col("s2").as("m2"))))
-              .select(aggregate(col("syms"),
-                array().cast("array<string>"),
-                (acc, x) => when(size(acc) > 0 &&
-                    element_at(acc, -1) === col("m1") && x === col("m2"),
-                  concat(slice(acc, lit(1), size(acc) - 1),
-                    array(concat(col("m1"), col("m2")))))
-                  .otherwise(concat(acc, array(x))))
-                .as("syms"), col("wc"))
-            if (r % 2 == 0) vocab = Leaves.land(vocab)
-          }
-          r += 1
-        }
-        learned.orderBy(col("round"))
-      }
+      val bpeSchema = StructType.fromDDL(
+        "round INT NOT NULL, s1 STRING, s2 STRING, merged STRING, cnt BIGINT")
+      docs(s, d)
+        .select(explode(split(col("text"), " ")).as("w"))
+        .filter(col("w") =!= "")
+        .groupBy(col("w")).agg(count(lit(1)).as("wc"))
+        .coalesce(1)
+        .mapPartitions(it => BpeLearner.learn(
+          it.map(r => r.getString(0) -> r.getLong(1)), 10).iterator
+          .map(m => Row(m.round, m.s1, m.s2, m.s1 + m.s2, m.cnt)))(Encoders.row(bpeSchema))
     }),
   )
 
@@ -1577,7 +1495,7 @@ object Retrieval extends QueryPack {
     * string `|s1||s2||...|`: the greedy left-to-right non-overlapping
     * merge is then exactly one `replace('|m1||m2|' → '|m1m2|')` —
     * replace() consumes matches left-to-right without overlap, the
-    * same order the Spark fold applies merges, and the per-side `|`
+    * same order BpeLearner applies merges, and the per-side `|`
     * sentinels stop cross-symbol-boundary matches. The encoding is
     * unambiguous while no token contains '|' and text is single-
     * code-point chars — both verified corpus-wide at every shipped SF

@@ -47,16 +47,25 @@ class LeavesSpec extends SparkTestBase {
   /** `body` while every RDD persisted before a job starts is held, so
     * the ContextCleaner cannot free a leaf the engine leaves behind: a
     * count taken inside measures what the engine drops, not what a
-    * driver GC happened to collect. */
-  private def pinned[T](body: => T): T = {
+    * driver GC happened to collect. Also returns the most RDDs outside
+    * `before` that were persisted at any job start. */
+  private def pinned[T](before: Set[Int])(body: => T): (T, Int) = {
     val sc = spark.sparkContext
     val held = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+    val peak = new java.util.concurrent.atomic.AtomicInteger
     val pin = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        sc.getPersistentRDDs.values.foreach(held.add)
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val live = sc.getPersistentRDDs
+        live.values.foreach(held.add)
+        peak.accumulateAndGet((live.keySet -- before).size, math.max)
+      }
     }
     sc.addSparkListener(pin)
-    try body finally sc.removeSparkListener(pin)
+    try {
+      val value = body
+      org.apache.spark.GraftTestBridge.drainListeners(sc)
+      (value, peak.get)
+    } finally sc.removeSparkListener(pin)
   }
 
   /** Ids of the RDDs `p` scans, built Deferred inner plans included. */
@@ -126,15 +135,14 @@ class LeavesSpec extends SparkTestBase {
 
   test("the curation chain keeps only the leaves its memo values and results read") {
     // q_dedup_text_lsh lands its result and drops `proj` and `keyed`;
-    // q_bpe_apply drops its 5 vocabulary leaves. What stays: the text
-    // basis (memo), the text-LSH result, the semantic verdicts (memo)
-    // and the 10 BPE merge rows.
+    // q_bpe_apply lands nothing. What stays: the text basis (memo), the
+    // text-LSH result and the semantic verdicts (memo).
     val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager
     spark.catalog.clearCache()
     val s = spark.newSession()
     val before = persisted
-    pinned {
+    pinned(before) {
       val frames = chain.map { n =>
         val df = SparkEntry.queries(n)(s, chainSf)
         df.collect()
@@ -144,26 +152,33 @@ class LeavesSpec extends SparkTestBase {
       val added = persisted -- before
       val read = frames.flatMap(df => scanned(df.queryExecution.executedPlan)).toSet +
         leafId(graft.operators.Retrieval.textBasis(s, chainSf).vecs)
-      assert(added.subsetOf(read) && added.size == 13,
+      assert(added.subsetOf(read) && added.size == 3,
         s"${added.size} persisted RDDs added, ${(added -- read).size} read by no " +
           s"result or memo value: ${(added -- read).mkString(", ")}")
     }
   }
 
   test("q_dedup_cluster and q_graph_pagerank keep only the leaves their results read") {
-    // cluster: the final label round; pagerank: edges, nodes and the
-    // last landed rank round
-    for ((n, kept) <- Seq("q_dedup_cluster" -> 1, "q_graph_pagerank" -> 3)) pinned {
+    // kept: cluster, the final label round; star, the pair leaf and the
+    // final edge round; pagerank, edges, nodes and the last landed rank
+    // round. Besides its round leaves, a loop also holds `others`: the
+    // minhash signature cache and the pair leaf, plus cluster's edges
+    // and pagerank's edges and nodes. Each landed round drops the one
+    // before it, so at most 2 round leaves are live at any job start.
+    for ((n, kept, others) <- Seq(("q_dedup_cluster", 1, 3),
+        ("q_dedup_cluster_star", 2, 2), ("q_graph_pagerank", 3, 4))) {
       spark.catalog.clearCache()
       val before = persisted
-      val df = SparkEntry.queries(n)(spark.newSession(), sf)
-      df.collect()
-      spark.catalog.clearCache() // q_dedup_minhash's signature cache
-      val added = persisted -- before
-      val read = scanned(df.queryExecution.executedPlan).toSet
+      val ((added, read), peak) = pinned(before) {
+        val df = SparkEntry.queries(n)(spark.newSession(), sf)
+        df.collect()
+        spark.catalog.clearCache() // q_dedup_minhash's signature cache
+        (persisted -- before, scanned(df.queryExecution.executedPlan).toSet)
+      }
       assert(added.subsetOf(read) && added.size == kept,
         s"$n: ${added.size} persisted RDDs added, ${(added -- read).size} " +
           s"read by no result: ${(added -- read).mkString(", ")}")
+      assert(peak - others <= 2, s"$n: ${peak - others} round leaves live at once")
     }
   }
 

@@ -248,38 +248,66 @@ class RetrievalSpec extends SparkTestBase {
       .map(r => (r.getInt(0), r.getString(1), r.getString(2),
         r.getString(3), r.getLong(4)))
     assert(got.length == 10)
-    // independent reference: word-frequency dictionary + greedy merges
     val wc = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
     graft.engine.Tables.t(spark, sf, "documents")
       .select(org.apache.spark.sql.functions.col("text")).collect()
       .foreach(_.getString(0).split(" ").filter(_.nonEmpty)
         .foreach(w => wc(w) += 1))
-    var vocab: Seq[(List[String], Long)] =
-      wc.toSeq.map { case (w, c) => w.toList.map(_.toString) -> c }
-    val ref = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, String, String, Long)]
-    (1 to 10).foreach { r =>
-      val pc = scala.collection.mutable.Map.empty[(String, String), Long]
-        .withDefaultValue(0L)
-      vocab.foreach { case (syms, c) =>
-        syms.zip(syms.tail).foreach(p => pc(p) += c)
-      }
-      val ((s1, s2), cnt) =
-        pc.toSeq.minBy { case ((a, b), c) => (-c, a, b) }
-      ref += ((r, s1, s2, s1 + s2, cnt))
-      vocab = vocab.map { case (syms, c) =>
-        syms.foldLeft(List.empty[String]) { (acc, x) =>
-          if (acc.nonEmpty && acc.last == s1 && x == s2) acc.init :+ (s1 + s2)
-          else acc :+ x
-        } -> c
-      }
-    }
-    assert(got.toSeq == ref.toSeq,
+    val ref = RetrievalSpec.bpeReference(wc.toSeq, 10)
+    assert(got.toSeq == ref,
       s"engine:\n${got.mkString("\n")}\nreference:\n${ref.mkString("\n")}")
     // consistency: round 1 must equal q_bpe_pair_counts' argmax row
     val top = q("q_bpe_pair_counts").collect()(0)
     assert((got(0)._2, got(0)._3, got(0)._5) ==
       (top.getString(0), top.getString(1), top.getLong(3)))
+  }
+
+  test("BpeLearner equals the reference on generated dictionaries") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // few symbols and small counts, so argmax ties are common; 1-, 2-,
+    // 3- and 4-byte code points, including a BMP symbol above the
+    // surrogates (U+FF21), which UTF-16 order puts after U+1F600 and
+    // UTF-8 order before it
+    val sym = Gen.oneOf("a", "b", "é", "中", "\uFF21", "\uD83D\uDE00")
+    def dict(maxLen: Int): Gen[Seq[(String, Long)]] = Gen.mapOf(for {
+      n <- Gen.chooseNum(1, maxLen)
+      w <- Gen.listOfN(n, sym)
+      c <- Gen.chooseNum(1L, 3L)
+    } yield w.mkString -> c).map(_.toSeq)
+    // 1 in 5 dictionaries holds only single-symbol words: no pair, no row
+    val gen = Gen.frequency(4 -> dict(6), 1 -> dict(1))
+    var short = 0
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300),
+      Prop.forAll(gen) { d =>
+        val got = graft.functions.BpeLearner.learn(d.iterator, 10)
+          .map(m => (m.round, m.s1, m.s2, m.s1 + m.s2, m.cnt))
+        if (got.length < 10) short += 1
+        got == RetrievalSpec.bpeReference(d, 10)
+      })
+    assert(res.passed, res.status.toString)
+    assert(short > 0, "no generated dictionary ran out of pairs")
+    // a count tie that UTF-16 order breaks the other way
+    val tie = Seq("\uFF21x" -> 2L, "\uD83D\uDE00x" -> 2L)
+    assert(graft.functions.BpeLearner.learn(tie.iterator, 1).map(_.s1) == Seq("\uFF21"))
+    assert(RetrievalSpec.bpeReference(tie, 1).map(_._2) == Seq("\uFF21"))
+  }
+
+  test("q_bpe_apply learns its merges in at most 3 Spark jobs") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val df = SparkEntry.queries("q_bpe_apply")(spark.newSession(),
+      sf.replace("sf0.001", "sf0.01"))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
+      val before = jobs.get()
+      assert(df.collect().length == 10)
+      org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
+      assert(jobs.get() - before <= 3, s"${jobs.get() - before} jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("BPE fold-rewrite equals string-replace on the |-sentinel encoding " +
@@ -503,5 +531,49 @@ class RetrievalSpec extends SparkTestBase {
       .filter(col("tok") =!= "")
       .join(frozen, Seq("tok"), "left_anti").count()
     assert(oovDirect == nOov, s"direct OOV $oovDirect vs gauge $nOov")
+  }
+}
+
+object RetrievalSpec {
+
+  /** Spark's string order: unsigned UTF-8 bytes. */
+  private val sparkOrder: Ordering[String] = (x, y) =>
+    java.util.Arrays.compareUnsigned(x.getBytes("UTF-8"), y.getBytes("UTF-8"))
+
+  /** An independent BPE learner over a word-frequency dictionary:
+    * string symbols (one per code point), a string-keyed pair count and
+    * the greedy left-to-right fold; argmax by count desc, then s1, then
+    * s2 in Spark's order. Rows (round, s1, s2, merged, cnt), stopping
+    * early when no pair is left. */
+  def bpeReference(dict: Seq[(String, Long)], nMerges: Int)
+      : Seq[(Int, String, String, String, Long)] = {
+    var vocab = dict.map { case (w, c) =>
+      w.codePoints().toArray.toList.map(cp => new String(Character.toChars(cp))) -> c
+    }
+    val byRank: Ordering[((String, String), Long)] = (x, y) =>
+      if (x._2 != y._2) java.lang.Long.compare(y._2, x._2)
+      else Ordering.Tuple2(sparkOrder, sparkOrder).compare(x._1, y._1)
+    val out = scala.collection.mutable.ArrayBuffer
+      .empty[(Int, String, String, String, Long)]
+    var done = false
+    while (out.length < nMerges && !done) {
+      val pc = scala.collection.mutable.Map.empty[(String, String), Long]
+        .withDefaultValue(0L)
+      vocab.foreach { case (syms, c) =>
+        syms.zip(syms.tail).foreach(p => pc(p) += c)
+      }
+      done = pc.isEmpty
+      if (!done) {
+        val ((s1, s2), cnt) = pc.toSeq.min(byRank)
+        out += ((out.length + 1, s1, s2, s1 + s2, cnt))
+        vocab = vocab.map { case (syms, c) =>
+          syms.foldLeft(List.empty[String]) { (acc, x) =>
+            if (acc.nonEmpty && acc.last == s1 && x == s2) acc.init :+ (s1 + s2)
+            else acc :+ x
+          } -> c
+        }
+      }
+    }
+    out.toSeq
   }
 }
